@@ -2,14 +2,15 @@
 """Round-6 measurement sidecar (bench.py is FROZEN for the driver;
 extra benchmarks live here per the optimization-round contract).
 
-Times individual catalog queries with the noop sink (guide §1.4) so the
-computation is isolated from the .count() short-circuit and from sink
-cost, with per-query job descriptions (guide §1.5).  Prints one JSON
-line per query plus a total.
+Times individual catalog queries, with per-query job descriptions
+(guide §1.5).  By default each query is materialized with .count(), as
+bench.py does; BENCH_EXTRA_MODE=noop writes to the noop sink instead
+(guide §1.4), isolating the computation from the .count() short-circuit
+and from sink cost.  Prints one JSON line per query plus a total.
 
 Usage:
-  python bench_extra.py q1,q2,...        # noop-sink, single session
-  BENCH_EXTRA_MODE=count python bench_extra.py q1,...   # bench.py-style
+  python bench_extra.py q1,q2,...        # .count(), single session
+  BENCH_EXTRA_MODE=noop python bench_extra.py q1,...    # noop sink
   BENCH_EXTRA_REPEAT=N   repeat each query N times (all samples shown)
   SPARK_GRAFT_SF_DIR     data dir (default /root/testdata/sf0.1)
 

@@ -70,9 +70,9 @@ def run_level(cpus: int, sf_dir: str) -> dict:
             {"spark.executor.memory": "3g"})
     # Pin the WHOLE process tree (JVM + Python workers) to exactly `cpus`
     # hardware threads.  local[N] bounds only task slots: /proc counters
-    # (scripts/diag_cpu.py) showed a "local[2]" leg burning ~2.6-3 cores
-    # in GC/shuffle-IO/Arrow threads, which silently inflates the small-N
-    # baseline and understates N→4N efficiency.  taskset is the faithful
+    # showed a "local[2]" leg burning ~2.6-3 cores in GC/shuffle-IO/Arrow
+    # threads, which silently inflates the small-N baseline and
+    # understates N→4N efficiency.  taskset is the faithful
     # proxy for an N-core cluster slice.
     #
     # SPREAD, not contiguous: round-4 measurement (BENCH/BASELINE.md

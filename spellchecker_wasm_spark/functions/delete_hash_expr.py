@@ -8,9 +8,9 @@ key string is scaffolding.  The string path
 per prefix and hashes each: ~29 string allocations + copies + a full
 xxhash64 pass per prefix, and in the linkage shape it additionally ran
 inside a ``transform`` lambda (higher-order functions are CodegenFallback
-— evaluated interpreted, row at a time).  diag_block measured the two
-key-generation substages at ~200 CPU core-seconds of the 600k-page block
-stage's ~290 at 8 cores.
+— evaluated interpreted, row at a time).  The two key-generation
+substages measured ~200 CPU core-seconds of the 600k-page block stage's
+~290 at 8 cores.
 
 This variant computes, once per prefix row, the codepoint of each of the
 ``prefix_length`` positions (``ascii(substring(p, i, 1))``, NULL beyond

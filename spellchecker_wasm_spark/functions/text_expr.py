@@ -6,8 +6,7 @@ Parity targets:
 * ``extract_text_expr`` == pipeline.webpages.extract_text_from_html (the
   fixed byte-identical extraction rule): title group + '\\n' + tag-stripped
   body group, empty string when a section is absent;
-* ``title_tokens_array`` == the fused Python pass in round-1
-  pages_to_blocks: reference-quirk tokenizer (parse_words,
+* ``title_tokens_array`` == the reference-quirk tokenizer (parse_words,
   sym_spell.rs:191-214) followed by the leading-non-letter strip and the
   min-length filter.  The *composition* is regex-expressible even though
   parse_words alone is not: parse_words emits every maximal run of

@@ -26,16 +26,17 @@ never helps because every gap column strictly lowers the score.
 
 The batch variant vectorizes across the pair axis (loops run over
 character positions only, O(L1·L2) full-batch numpy ops) — the same
-no-per-row-Python discipline as kernels/jaro.jaro_winkler_batch, whose
-codepoint-matrix packer it reuses.  The horizontal X recurrence is the
-one sequential-in-j dependency; it runs as L2 full-batch column ops.
+no-per-row-Python discipline as kernels/jaro.jaro_winkler_batch, and
+the same codepoint-matrix packer (kernels/distance_np).  The horizontal
+X recurrence is the one sequential-in-j dependency; it runs as L2
+full-batch column ops.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .jaro import _PAD1, _PAD2, _codepoint_matrix
+from .distance_np import _PAD1, _PAD2, _codepoint_matrix
 
 AG_MATCH = 2
 AG_MISMATCH = -1

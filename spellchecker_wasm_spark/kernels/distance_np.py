@@ -169,8 +169,9 @@ def osa_batch(s1_list, s2_list, max_distance: int) -> np.ndarray:
 
 def _osa_from_matrices(A: np.ndarray, Bm: np.ndarray, la: np.ndarray,
                        lb: np.ndarray, max_distance: int) -> np.ndarray:
-    """Shared core: sentinel-padded codepoint matrices (shorter string in
-    A rowwise, len diff ≤ max) → bounded distances (-1 encodes None)."""
+    """Core of osa_batch: sentinel-padded codepoint matrices (shorter
+    string in A rowwise, len diff ≤ max) → bounded distances (-1 encodes
+    None)."""
     L = A.shape[1]
     n1, n2, start = _strip_prefix_suffix(A, Bm, la, lb)
 
@@ -218,96 +219,6 @@ def _osa_from_matrices(A: np.ndarray, Bm: np.ndarray, la: np.ndarray,
             r = np.where(d <= max_distance, d.astype(np.int64), -1)
             res[todo[sel]] = r
     return res
-
-
-def _arrow_codepoint_matrix(arr) -> tuple[np.ndarray, np.ndarray]:
-    """pyarrow string array → (codepoint lens, (B, L) int32 matrix padded
-    with -1) — built straight from the Arrow offsets/data buffers with an
-    ASCII fast path (bytes ARE codepoints); only rows containing a byte
-    ≥ 0x80 take the per-row decode path.  Nulls count as ""."""
-    import pyarrow as pa
-
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    B = len(arr)
-    if B == 0:
-        return (np.zeros(0, dtype=np.int64), np.zeros((0, 1), dtype=np.int32))
-    if arr.null_count:
-        arr = arr.fill_null("")
-    if pa.types.is_large_string(arr.type):
-        off_dt = np.int64
-    else:
-        off_dt = np.int32
-    bufs = arr.buffers()
-    offsets = np.frombuffer(
-        bufs[1], dtype=off_dt, count=B + 1,
-        offset=arr.offset * np.dtype(off_dt).itemsize).astype(np.int64)
-    data = np.frombuffer(bufs[2], dtype=np.uint8)
-    lens = np.diff(offsets)
-    L = max(int(lens.max()), 1)
-    idxm = offsets[:-1, None] + np.arange(L, dtype=np.int64)[None, :]
-    valid = np.arange(L)[None, :] < lens[:, None]
-    M = np.full((B, L), -1, dtype=np.int32)
-    if len(data):
-        np.copyto(M, data[np.minimum(idxm, len(data) - 1)].astype(np.int32),
-                  where=valid)
-    # rows with multi-byte UTF-8: fix lengths and codepoints individually
-    hot = np.nonzero(data[offsets[0]:offsets[-1]] >= 0x80)[0]
-    if hot.size:
-        rows = np.unique(np.searchsorted(offsets, hot + offsets[0],
-                                         side="right") - 1)
-        for r in rows:
-            s = bytes(data[offsets[r]:offsets[r + 1]]).decode("utf-8")
-            cps = np.frombuffer(s.encode("utf-32-le"),
-                                dtype=np.uint32).view(np.int32)
-            lens[r] = len(s)
-            M[r, :len(s)] = cps
-            M[r, len(s):] = -1
-    return lens, M
-
-
-def osa_batch_arrow(arr_a, arr_b, max_distance: int) -> np.ndarray:
-    """Arrow-native bounded OSA: same contract as ``osa_batch`` but reads
-    codepoints directly from pyarrow string buffers — no Python string
-    objects in the hot path (the mapInArrow scorer's kernel)."""
-    la_raw, A0 = _arrow_codepoint_matrix(arr_a)
-    lb_raw, B0 = _arrow_codepoint_matrix(arr_b)
-    B = len(la_raw)
-    out = np.full(B, -1, dtype=np.int64)
-    if B == 0:
-        return out
-    W = max(A0.shape[1], B0.shape[1])
-    if A0.shape[1] < W:
-        A0 = np.pad(A0, ((0, 0), (0, W - A0.shape[1])), constant_values=-1)
-    if B0.shape[1] < W:
-        B0 = np.pad(B0, ((0, 0), (0, W - B0.shape[1])), constant_values=-1)
-
-    mn = np.minimum(la_raw, lb_raw)
-    mx = np.maximum(la_raw, lb_raw)
-    empty = mn == 0
-    out[empty & (mx <= max_distance)] = mx[empty & (mx <= max_distance)]
-    if max_distance <= 0:
-        eq = (la_raw == lb_raw) & (A0 == B0).all(axis=1)
-        out[:] = -1
-        out[eq] = 0
-        return out
-
-    live = (~empty) & (mx - mn <= max_distance)
-    if not live.any():
-        return out
-    idx = np.nonzero(live)[0]
-    Asub = A0[idx]
-    Bsub = B0[idx]
-    swap = (la_raw[idx] > lb_raw[idx])[:, None]
-    Ac = np.where(swap, Bsub, Asub)
-    Bc = np.where(swap, Asub, Bsub)
-    la = mn[idx]
-    lb = mx[idx]
-    cols = np.arange(W, dtype=np.int64)[None, :]
-    A = np.where(cols < la[:, None], Ac, _PAD1)
-    Bm = np.where(cols < lb[:, None], Bc, _PAD2)
-    out[idx] = _osa_from_matrices(A, Bm, la, lb, max_distance)
-    return out
 
 
 def osa_full_single(s1: str, s2: str) -> int:

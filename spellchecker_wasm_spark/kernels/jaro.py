@@ -29,8 +29,7 @@ from __future__ import annotations
 
 import numpy as np
 
-_PAD1 = np.int32(0x7FFF0001)  # sentinels: never equal to any codepoint
-_PAD2 = np.int32(0x7FFF0002)  # nor to each other
+from .distance_np import _PAD1, _PAD2, _codepoint_matrix
 
 WINKLER_SCALING = 0.1
 WINKLER_BOOST = 0.7
@@ -82,25 +81,6 @@ def jaro_winkler_similarity(s1: str, s2: str) -> float:
     if j > WINKLER_BOOST:
         return j + (p * WINKLER_SCALING) * (1.0 - j)
     return j
-
-
-def _codepoint_matrix(strings: list[str], lens: np.ndarray, maxlen: int,
-                      pad: np.int32) -> np.ndarray:
-    """(B, maxlen) int32 codepoint matrix, sentinel-padded (one C-level
-    utf-32 encode of the concatenated batch — same trick as
-    distance_np._codepoint_matrix)."""
-    joined = "".join(strings)
-    flat = np.frombuffer(joined.encode("utf-32-le"),
-                         dtype=np.uint32).view(np.int32)
-    offsets = np.zeros(len(strings) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offsets[1:])
-    idx = offsets[:-1, None] + np.arange(maxlen, dtype=np.int64)[None, :]
-    valid = np.arange(maxlen)[None, :] < lens[:, None]
-    out = np.full((len(strings), maxlen), pad, dtype=np.int32)
-    if maxlen and len(strings):
-        np.copyto(out, flat[np.minimum(idx, max(len(flat) - 1, 0))],
-                  where=valid)
-    return out
 
 
 def jaro_winkler_batch(s1_list, s2_list) -> np.ndarray:

@@ -1,9 +1,7 @@
 from .blocking import build_blocks, cap_hot_blocks
-from .pairs import (candidate_pairs, candidate_pairs_prefix,
-                    weighted_candidate_pairs)
+from .pairs import candidate_pairs, weighted_candidate_pairs
 from .scoring import (distance_from_similarity, osa_similarity,
-                      osa_similarity2, score_pairs, score_pairs_arrow,
-                      similarity_from_distance)
+                      osa_similarity2, score_pairs, similarity_from_distance)
 from .clustering import connected_components
 from .incremental import assign_new_records, standing_index
 from .snm import snm_candidate_pairs, sorted_ranks
@@ -17,10 +15,8 @@ __all__ = [
     "build_blocks",
     "cap_hot_blocks",
     "candidate_pairs",
-    "candidate_pairs_prefix",
     "weighted_candidate_pairs",
     "score_pairs",
-    "score_pairs_arrow",
     "osa_similarity",
     "osa_similarity2",
     "similarity_from_distance",

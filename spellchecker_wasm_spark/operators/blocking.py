@@ -15,7 +15,6 @@ skew-join splitting at pair time.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.delete_expr import delete_keys_array
 
@@ -37,8 +36,7 @@ def build_blocks(terms: DataFrame, term_col: str = "term",
 
 
 def cap_hot_blocks(blocks: DataFrame, max_block_size: int,
-                   key_col: str = "block_key",
-                   persist: bool = False) -> tuple[DataFrame, DataFrame]:
+                   key_col: str = "block_key") -> tuple[DataFrame, DataFrame]:
     """Drop super-node blocking keys whose posting list exceeds
     ``max_block_size``; returns (capped_blocks, dropped_stats).
 
@@ -50,17 +48,7 @@ def cap_hot_blocks(blocks: DataFrame, max_block_size: int,
     keys (heavy hitters are few by definition), so the big side never
     reshuffles.  Dropped keys/rows are returned for lineage accounting —
     never silently.
-
-    ``persist``: since the key generator became a pure Catalyst projection
-    (functions/delete_expr.py), recomputing the explode per consumer is
-    cheaper than materializing the ~80×-fan-out table — persisting 12M
-    wide rows cost more wall than four codegen re-scans of the 150k-page
-    input (measured).  Set True only when `blocks` ends in an expensive
-    non-Catalyst stage (the round-1 Python pass), or checkpoint to a table
-    instead (the Iceberg `blocks` stage does exactly that).
     """
-    if persist:
-        blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
     counts = blocks.groupBy(key_col).agg(F.count(F.lit(1)).alias("block_size"))
     hot = counts.where(F.col("block_size") > max_block_size)
     capped = blocks.join(F.broadcast(hot.select(key_col)), key_col, "left_anti")

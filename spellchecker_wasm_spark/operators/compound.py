@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernels.symspell import SymSpellKernel
+from .skew import fan_out
 
 # keyed by a driver-generated uuid captured in the task closure — NOT by
 # id(broadcast): every task deserializes a fresh Broadcast object, so an
@@ -168,7 +169,7 @@ def compound_correct(docs: DataFrame, text_col: str, words_df: DataFrame,
                             for p in parts]
             yield out
 
-    return _parallel_select(docs, cols).mapInPandas(fn, schema)
+    return fan_out(docs.select(cols)).mapInPandas(fn, schema)
 
 
 def _osa_batch_unbounded(a: list, b: list):
@@ -203,20 +204,6 @@ def _osa_batch_unbounded(a: list, b: list):
         if bound >= maxneed:
             break
         bound = min(bound * 4, maxneed)
-    return out
-
-
-def _parallel_select(docs: DataFrame, cols: list) -> DataFrame:
-    """Select the needed columns and, when the input arrives in fewer
-    partitions than the session's parallelism (the sf0.1 documents table
-    is ONE parquet file — the whole mapInPandas ran on one core),
-    round-robin repartition so the per-document Python fans out.  Inputs
-    that are already well-partitioned (any at-scale table) keep their
-    partitioning — no shuffle is added."""
-    out = docs.select(cols)
-    dp = docs.sparkSession.sparkContext.defaultParallelism
-    if out.rdd.getNumPartitions() < dp:
-        out = out.repartition(dp)
     return out
 
 
@@ -265,4 +252,4 @@ def segment_texts(docs: DataFrame, text_col: str, words_df: DataFrame,
             out["distance"] = dists
             yield out
 
-    return _parallel_select(docs, cols).mapInPandas(fn, schema)
+    return fan_out(docs.select(cols)).mapInPandas(fn, schema)

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.delete_hash_expr import delete_key_hash_explode
 from ..functions.udfs import osa_distance_udf
 from .scoring import score_pairs
+from .skew import fan_out
 
 #: packed arg-min key scale: best match minimizes
 #: distance * BEST_SCALE + component, so min() is the arg-min
@@ -74,21 +75,14 @@ def standing_index(pages: DataFrame, asg: DataFrame,
     the explode is a pure projection, so carrying term_b through it is
     free and removes the pages re-join entirely (2 joins → 1; the one
     remaining join attaches the component map, broadcast-sized).  The
-    explode source fans out to session parallelism when the input
-    arrives in fewer partitions (the sf fixture is ONE parquet file, so
-    the whole delete-mask codegen otherwise ran on one core — the
-    compound._parallel_select rationale); at-scale tables keep their
-    partitioning, no shuffle added."""
+    explode source fans out to session parallelism (skew.fan_out)."""
     src = pages.select(F.col(id_col).alias("ex_id"),
                        F.col(term_col).alias("term_b"),
                        F.length(term_col).alias("el"),
                        F.substring(term_col, 1, prefix_length)
                        .alias("prefix"))
-    dp = pages.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < dp:
-        src = src.repartition(dp)
     eb = delete_key_hash_explode(
-        src, "prefix", max_edit_distance=max_edit_distance,
+        fan_out(src), "prefix", max_edit_distance=max_edit_distance,
         prefix_length=prefix_length,
         keep_cols=["ex_id", "term_b", "el"])
     return eb.join(asg.select(F.col(id_col).alias("ex_id"), "component"),

@@ -18,13 +18,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# build-side hint of the slim id self-join (candidate_pairs docstring)
+_SELF_JOIN_HINT = "shuffle_hash"
+
 
 def candidate_pairs(blocks: DataFrame, id_col: str = "term",
                     term_col: str = "term",
                     max_len_diff: int = 2,
                     dim: DataFrame | None = None,
                     len_col: str | None = None,
-                    self_join_hint: str | None = "shuffle_hash",
                     attach_terms: bool = True,
                     prefilter_band: int | None = None) -> DataFrame:
     """blocks(block_key, id, term) self-join → (id_a, id_b, term_a, term_b)
@@ -76,19 +78,19 @@ def candidate_pairs(blocks: DataFrame, id_col: str = "term",
     executor heap); past that, carry the term through the key explode
     instead (the documented cluster-scale fallback) or leave this off.
 
-    ``self_join_hint`` (slim id-path only): join-strategy hint on the
-    build side.  The default ``shuffle_hash`` replaces the sort-merge
-    self-join — both sides are the same table, so the SMJ's two 20M-row
-    sorts are pure overhead over a per-partition hash build whose build
-    side is bounded by the hot-key cap (≤ max_block_size rows per key ×
-    keys per partition; partition counts scale with data, so the build
-    stays executor-memory-sized at any cluster size).  Measured on the
+    Self-join strategy (slim id-path only): the build side carries a
+    ``shuffle_hash`` hint, replacing the sort-merge self-join — both
+    sides are the same table, so the SMJ's two 20M-row sorts are pure
+    overhead over a per-partition hash build whose build side is bounded
+    by the hot-key cap (≤ max_block_size rows per key × keys per
+    partition; partition counts scale with data, so the build stays
+    executor-memory-sized at any cluster size).  Measured on the
     600k-page protocol input at 8 pinned cores: 59.6s → 36.9s for the
     block+pair stage when the caller also pre-partitions ``blocks`` by
     block_key (run_linkage does) — the persisted partitioning then feeds
-    BOTH join sides with zero additional exchanges.  Pass None to let
-    Catalyst/AQE choose (the term path always does: its inputs are
-    vocabulary-sized, where auto-broadcast beats a forced SHJ).
+    BOTH join sides with zero additional exchanges.  The term path takes
+    no hint: its inputs are vocabulary-sized, where auto-broadcast beats
+    a forced SHJ.
     """
     if id_col == term_col:
         a = blocks.select(F.col(term_col).alias("term"), "block_key").alias("a")
@@ -111,7 +113,7 @@ def candidate_pairs(blocks: DataFrame, id_col: str = "term",
     slim = blocks.select(F.col(id_col).alias("id"), "block_key",
                          tl.alias("tl"))
     a = slim.alias("a")
-    b = (slim.hint(self_join_hint) if self_join_hint else slim).alias("b")
+    b = slim.hint(_SELF_JOIN_HINT).alias("b")
     cond = ((F.col("a.block_key") == F.col("b.block_key"))
             & (F.col("a.id") < F.col("b.id"))
             & (F.abs(F.col("a.tl") - F.col("b.tl")) <= max_len_diff))
@@ -145,7 +147,6 @@ def candidate_pairs(blocks: DataFrame, id_col: str = "term",
 def weighted_candidate_pairs(blocks: DataFrame, id_col: str = "id",
                              max_len_diff: int = 2,
                              len_col: str | None = None,
-                             self_join_hint: str | None = "shuffle_hash",
                              min_weight: int = 1) -> DataFrame:
     """Meta-blocking edge weighting (the common-blocks scheme of
     Papadakis et al., "Meta-Blocking: Taking Entity Resolution to the
@@ -178,7 +179,7 @@ def weighted_candidate_pairs(blocks: DataFrame, id_col: str = "id",
     cols = ["block_key"] + ([len_col] if len_col else [])
     slim = blocks.select(F.col(id_col).alias("id"), *cols)
     a = slim.alias("a")
-    b = (slim.hint(self_join_hint) if self_join_hint else slim).alias("b")
+    b = slim.hint(_SELF_JOIN_HINT).alias("b")
     cond = ((F.col("a.block_key") == F.col("b.block_key"))
             & (F.col("a.id") < F.col("b.id")))
     if len_col:
@@ -206,102 +207,3 @@ def attach_pair_terms(ids: DataFrame, dim: DataFrame) -> DataFrame:
                              F.col("term").alias("term_a")), "id_a")
             .join(dim.select(F.col("id").alias("id_b"),
                              F.col("term").alias("term_b")), "id_b"))
-
-
-def candidate_pairs_prefix(toks: DataFrame, id_col: str = "page_id",
-                           prefix_col: str = "prefix", len_col: str = "tl",
-                           max_len_diff: int = 2,
-                           max_edit_distance: int = 2,
-                           prefix_length: int = 7,
-                           max_block_size: int = 500
-                           ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Two-level blocking: delete-key pairing at the VOCABULARY level, then
-    expansion of matched prefix pairs to entity pairs.
-
-    toks(id, prefix, len) — distinct (id, token-prefix) rows — →
-    (pairs(id_a, id_b), dropped_prefixes, dropped_keys).
-
-    Why two levels: the flat design explodes ~25 delete keys per (page,
-    token) — O(corpus × fan-out) rows through persist/count/self-join —
-    and the self-join emits every pair once per SHARED KEY (measured 4-13×
-    duplication into the dedup shuffle).  The delete-neighborhood
-    structure, like SymSpell's own dictionary, only depends on the token
-    vocabulary, which grows sublinearly in the corpus (Heaps' law): keying
-    the distinct prefixes costs O(vocab × fan-out), the prefix-pair join
-    dedups at vocabulary cardinality, and the corpus-scale work is reduced
-    to (a) one distinct (id, prefix) scan and (b) an expansion join whose
-    output is ~the final candidate set (duplication = shared distinct
-    token pairs, ~1-2×, instead of shared keys).  Identity with the flat
-    candidate set (uncapped) is property-tested.
-
-    Skew cap, with logged drop accounting (returned, never silent):
-    delete keys whose PAGE-WEIGHTED posting (Σ over posting prefixes of
-    that prefix's page count) exceeds ``max_block_size`` are dropped.
-    The weight is an UPPER BOUND on the flat design's cap_hot_blocks
-    posting count (a page holding two distinct prefixes that share a key
-    counts twice here, once there — see
-    pipeline/linkage.hot_keys_vocab), so the cap is conservative: a key
-    is never kept past the threshold, at worst dropped slightly early.
-    A prefix pair (including a prefix with itself) survives iff it
-    shares at least one surviving key — candidate sets match the capped
-    flat path whenever no shared-key collision straddles the cap
-    boundary (asserted on such fixtures in
-    tests/test_pipeline_linkage.py).
-    """
-    from ..functions.delete_expr import delete_keys_array
-
-    t = toks.select(F.col(id_col).alias("id"),
-                    F.col(prefix_col).alias("prefix"),
-                    F.col(len_col).alias("tl"))
-    pc = t.groupBy("prefix").agg(F.count(F.lit(1)).alias("n_pages"))
-
-    vkeys = pc.select(
-        "prefix", "n_pages",
-        F.explode(delete_keys_array(F.col("prefix"), max_edit_distance,
-                                    prefix_length)).alias("block_key"))
-    kw = vkeys.groupBy("block_key").agg(F.sum("n_pages").alias("weight"))
-    hot_key = kw.where(F.col("weight") > max_block_size)
-    # vk is consumed 4× (both self-join sides, the diag gate, accounting)
-    # and its lineage includes the page-count shuffle — persist it; it is
-    # vocabulary-sized (|prefixes| × ~25 keys), orders of magnitude below
-    # the corpus, so this is a cheap, bounded materialization at any scale
-    vk = (vkeys.join(F.broadcast(hot_key.select("block_key")), "block_key",
-                     "left_anti")
-          .select("prefix", "block_key")
-          .persist())
-    hot_prefix = (pc.join(vk.select("prefix").distinct(), "prefix",
-                          "left_anti")
-                  .where(F.col("n_pages") > 0))
-
-    a = vk.alias("a")
-    b = vk.alias("b")
-    cross = (a.join(b, (F.col("a.block_key") == F.col("b.block_key"))
-                    & (F.col("a.prefix") < F.col("b.prefix")))
-             .select(F.col("a.prefix").alias("pa"),
-                     F.col("b.prefix").alias("pb"))
-             .distinct())
-
-    A = t.select(F.col("id").alias("id_a"), F.col("prefix").alias("pa"),
-                 F.col("tl").alias("tl_a"))
-    B = t.select(F.col("id").alias("id_b"), F.col("prefix").alias("pb"),
-                 F.col("tl").alias("tl_b"))
-    # identical shared prefix: pairs survive iff the prefix retains any
-    # key; symmetric equi-join, id order kept directly
-    diag_prefixes = vk.select(F.col("prefix").alias("pa")).distinct()
-    diag = (A.join(diag_prefixes, "pa", "left_semi")
-            .join(B.withColumnRenamed("pb", "pa"), "pa")
-            .where((F.col("id_a") < F.col("id_b"))
-                   & (F.abs(F.col("tl_a") - F.col("tl_b")) <= max_len_diff))
-            .select("id_a", "id_b"))
-    # distinct prefixes within the distance bound: both orientations of
-    # page ownership occur, so canonicalize with least/greatest (a plain
-    # id_a < id_b join condition would drop pairs where the larger id owns
-    # the smaller prefix)
-    crossx = (cross.join(A, "pa").join(B, "pb")
-              .where((F.col("id_a") != F.col("id_b"))
-                     & (F.abs(F.col("tl_a") - F.col("tl_b"))
-                        <= max_len_diff))
-              .select(F.least("id_a", "id_b").alias("id_a"),
-                      F.greatest("id_a", "id_b").alias("id_b")))
-    pairs = diag.union(crossx).distinct()
-    return pairs, hot_prefix, hot_key

@@ -1,14 +1,13 @@
 """Pairwise scoring: vectorized banded Damerau-OSA over candidate pairs —
 the reference's verification join-filter (sym_spell.rs:445-450 →
-damerau_osa.rs:308-339).  Two implementations (pandas-UDF default,
-mapInArrow variant), both delegating to kernels property-tested equal to
-the scalar parity kernel.
+damerau_osa.rs:308-339).  One pandas-UDF implementation delegating to
+the numpy kernel (kernels/distance_np.py), property-tested equal to the
+scalar parity kernel.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql import types as T
 
 from ..functions.udfs import osa_distance_udf
 
@@ -73,49 +72,6 @@ def distance_from_similarity(similarity, length,
                    * (F.lit(1.0) - similarity)).cast("long")
 
 
-def score_pairs_arrow(pairs: DataFrame, left_col: str = "term_a",
-                      right_col: str = "term_b", max_distance: int = 2,
-                      keep_above_threshold: bool = False) -> DataFrame:
-    """mapInArrow variant: ships whole rows through Python but zero Python
-    string objects.  Measured SLOWER than the pandas-UDF scorer on narrow
-    pair schemas (0.85M vs 2.5M pairs/s at 32 cores) because mapInArrow
-    returns full rows while ArrowEvalPython returns only the int32 distance
-    column — prefer this only when the pair schema is wide and mostly
-    consumed by the filter."""
-    import numpy as np
-    import pyarrow as pa
-
-    from ..kernels.distance_np import osa_batch_arrow
-
-    in_schema = pairs.schema
-    out_schema = T.StructType(list(in_schema.fields)
-                              + [T.StructField("distance", T.IntegerType())])
-    li = pairs.columns.index(left_col)
-    ri = pairs.columns.index(right_col)
-
-    def fn(batches):
-        for batch in batches:
-            d = osa_batch_arrow(batch.column(li), batch.column(ri),
-                                max_distance)
-            if keep_above_threshold:
-                dist = pa.array(np.where(d >= 0, d, 0), type=pa.int32(),
-                                mask=d < 0)
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(i) for i in range(batch.num_columns)]
-                    + [dist], schema=pa.schema(out_schema_pa))
-            else:
-                mask = pa.array(d >= 0)
-                dist = pa.array(d[d >= 0].astype("int32"), type=pa.int32())
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(i).filter(mask)
-                     for i in range(batch.num_columns)] + [dist],
-                    schema=pa.schema(out_schema_pa))
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-    out_schema_pa = to_arrow_schema(out_schema)
-    return pairs.mapInArrow(fn, out_schema)
-
-
 def score_pairs(pairs: DataFrame, left_col: str = "term_a",
                 right_col: str = "term_b", max_distance: int = 2,
                 keep_above_threshold: bool = False,
@@ -124,7 +80,8 @@ def score_pairs(pairs: DataFrame, left_col: str = "term_a",
     keep_above_threshold, which yields NULL distances instead).  Pandas-UDF
     ArrowEvalPython plan: only (left, right) cross into Python and only the
     distance column returns — the narrow-exchange shape that measured
-    fastest (see score_pairs_arrow docstring).
+    fastest (2.5M pairs/s at 32 cores, against 0.85M for a mapInArrow
+    scorer that returns whole rows).
 
     ``jvm_prefilter``: lossless candidate reduction BEFORE the Python
     exchange using Spark's codegen'd banded Levenshtein.  Since

@@ -6,7 +6,8 @@ skewed relation feeds an operator AQE cannot split (streaming joins,
 stateful ops), or (b) a single key exceeds what one task can hold even
 after splitting.  The pipeline's own skew strategy is hot-key CAPPING
 (with logged drops) because super-node blocking keys carry no signal; this
-operator is for joins where the hot keys must be KEPT.
+operator is for joins where the hot keys must be KEPT.  ``fan_out``
+spreads an under-partitioned scan over the session's cores.
 """
 
 from __future__ import annotations
@@ -36,3 +37,13 @@ def salted_join(big: DataFrame, dim: DataFrame, key: str,
                                       F.lit(n_salts - 1).cast("long"))))
     out = salted.join(replicated, [key, "_salt"], how)
     return out.drop("_salt")
+
+
+def fan_out(df: DataFrame) -> DataFrame:
+    """Round-robin repartition ``df`` to the session's default parallelism
+    when it arrives in fewer partitions — the fixture tables are ONE
+    parquet file each, so a generate or Python pass over them otherwise
+    runs on one core.  Inputs that are already well-partitioned (any
+    at-scale table) keep their partitioning; no shuffle is added."""
+    dp = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(dp) if df.rdd.getNumPartitions() < dp else df

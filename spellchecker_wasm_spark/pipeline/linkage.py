@@ -34,7 +34,6 @@ from pyspark.sql.functions import pandas_udf
 from ..functions.delete_expr import delete_keys_array, delete_keys_of_prefix
 from ..functions.delete_hash_expr import delete_key_hash_explode
 from ..functions.text_expr import title_expr, title_tokens_array
-from ..functions.udfs import parse_words_udf
 from ..operators.clustering import connected_components
 from ..operators.pairs import candidate_pairs
 from ..operators.scoring import score_pairs
@@ -71,30 +70,6 @@ def title_block_keys(title, config: "LinkageConfig"):
                                           config.prefix_length))))
 
 
-def pages_to_blocks(pages: DataFrame, config: "LinkageConfig") -> DataFrame:
-    """Fused extract→tokenize→delete-keys pass as ONE Catalyst projection:
-    pages(url, html) → (url, title, block_key), no Python anywhere.
-
-    The round-1 version was a mapInPandas pass (kept below as
-    ``pages_to_blocks_python``, the parity reference); profiling attributed
-    22.5s of the 26.3s sf0.1 pipeline to its per-row token/delete loops.
-    Here the whole stage is JVM expressions — regex extraction
-    (text_expr.title_expr), separator-class tokenization
-    (title_tokens_array), and the ≤28-position-mask combinatorial delete
-    family (delete_expr.delete_keys_array) folded over the token array —
-    so the scan stays inside whole-stage codegen with zero exchanges: the
-    first shuffle of the pipeline is the blocking-count aggregation.
-    Per-page keys are deduplicated with array_distinct *before* explode,
-    matching the Python pass's per-page key set.
-    """
-    title = title_expr(F.col("html"))
-    keys = title_block_keys(F.col("title"), config)
-    return (pages
-            .where(F.col("html").isNotNull())
-            .select("url", title.alias("title"))
-            .select("url", "title", F.explode(keys).alias("block_key")))
-
-
 def pages_to_block_hashes(pdim: DataFrame,
                           config: "LinkageConfig") -> DataFrame:
     """pdim(id, title) → (page_id, tl, block_key:long) — the blocking
@@ -106,16 +81,16 @@ def pages_to_block_hashes(pdim: DataFrame,
     whole-stage-codegen'd, no higher-order function in the fan-out path
     (the per-page prefix array is vocabulary-small; the ~29× key fan-out
     is where interpretation hurt).  Measured 1.56× over the round-2
-    string+xxhash64 shape on the 600k-page explode (scripts/exp_keygen.py:
-    7.69s → 4.94s at 8 pinned cores), with zero string allocation.
+    string+xxhash64 shape on the 600k-page explode (7.69s → 4.94s at 8
+    pinned cores), with zero string allocation.
 
-    Deviation from the string path: per-page cross-PREFIX duplicate keys
-    (two distinct title prefixes sharing a delete variant) are no longer
-    deduplicated before the join — ~0.2% extra rows on the protocol input
-    — because recovering the per-page distinct would cost a 47M-row
-    aggregate for join input the pair-stage ``distinct()`` already
-    absorbs.  Hot-key weights count such pages twice, matching the
-    vocabulary path's documented upper-bound semantics (hot_keys_vocab).
+    Deviation from the string keys (``title_block_keys``): per-page
+    cross-PREFIX duplicate keys (two distinct title prefixes sharing a
+    delete variant) are not deduplicated before the join — ~0.2% extra
+    rows on the protocol input — because recovering the per-page distinct
+    would cost a 47M-row aggregate for join input the pair-stage
+    ``distinct()`` already absorbs.  Posting sizes count such pages
+    twice, exactly as hot_keys_vocab's weights do.
     """
     if config.prefix_length > config.max_edit_distance:
         pref = pdim.select(
@@ -147,17 +122,9 @@ def hot_keys_vocab(toks: DataFrame, config: "LinkageConfig") -> DataFrame:
     instead of pages × fan-out) and without materializing or re-scanning
     that explode at all.  Returns (block_key:long) hot-key rows.
 
-    The weight is an UPPER BOUND on the page-level posting size
-    cap_hot_blocks counts, not always equal to it: a page whose title
-    holds two distinct prefixes that share a delete key contributes twice
-    here but once there.  For a hot-key CAP the bound errs exactly the
-    right way — a key can only be dropped slightly *before* its true
-    posting size crosses the threshold, never kept past it, so candidate
-    recall loss is bounded by the flat path's own cap.  (Exact distinct
-    page counts would need the (page, key) explode back — the cost this
-    path exists to avoid; the flat/vocab equivalence test in
-    tests/test_pipeline_linkage.py holds on fixtures where no shared-key
-    collision straddles the cap boundary, the common case by far.)
+    The weight equals the posting size cap_hot_blocks counts on the
+    pages_to_block_hashes explode, so both drop the same keys
+    (tests/test_pipeline_linkage.py).
 
     ``toks``: (…, prefix) one row per distinct (page, prefix).
     """
@@ -169,88 +136,6 @@ def hot_keys_vocab(toks: DataFrame, config: "LinkageConfig") -> DataFrame:
             .agg(F.sum("n_pages").alias("weight"))
             .where(F.col("weight") > config.max_block_size)
             .select("block_key", "weight"))
-
-
-def pages_to_prefixes(pages: DataFrame, config: "LinkageConfig") -> DataFrame:
-    """pages(url, html) → (url, title, prefix) — one row per distinct
-    blocking-token PREFIX of a page, pure Catalyst.
-
-    Feeds the two-level blocking (operators.pairs.candidate_pairs_prefix):
-    delete keys are generated from the VOCABULARY of these prefixes, not
-    per page.  keys(token) == keys(prefix(token)) always — the generator
-    prefix-truncates internally and its empty-key rule only fires at
-    lengths ≤ max_edit_distance where prefix == token — so pairing
-    prefixes is exactly pairing tokens (asserted in
-    tests/test_pipeline_linkage.py against the flat path).
-    """
-    title = title_expr(F.col("html"))
-    prefixes = title_prefixes_array(F.col("title"), config)
-    return (pages
-            .where(F.col("html").isNotNull())
-            .select("url", title.alias("title"))
-            .select("url", "title", F.explode(prefixes).alias("prefix")))
-
-
-_DELETE_MEMO: dict[str, list[str]] = {}
-
-
-def pages_to_blocks_python(pages: DataFrame, config: "LinkageConfig") -> DataFrame:
-    """Round-1 fused mapInPandas pass — retained as the Python parity
-    reference for pages_to_blocks (tests assert set-equality); superseded
-    in the hot path by the pure-Catalyst version above."""
-    import pandas as _pd
-
-    from ..kernels.deletes import generate_deletes
-    from ..kernels.text import parse_words
-
-    med = config.max_edit_distance
-    plen = config.prefix_length
-    min_len = config.min_token_len
-    schema = T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("block_key", T.StringType()),
-    ])
-
-    # keys fan out ~100-150× per page, so an input batch must be processed
-    # in small chunks and yielded incrementally — otherwise every worker
-    # builds a multi-million-row pandas frame at once and N workers × that
-    # spike thrashes memory (measured 5× slowdown at 32 workers)
-    chunk_rows = 512
-
-    def fn(batches):
-        memo = _DELETE_MEMO
-        for pdf in batches:
-            for lo in range(0, len(pdf), chunk_rows):
-                chunk = pdf.iloc[lo:lo + chunk_rows]
-                urls, titles, keys = [], [], []
-                for url, html in zip(chunk["url"], chunk["html"]):
-                    if html is None:
-                        continue
-                    title = extract_text_from_html(bytes(html)).split("\n", 1)[0].lower()
-                    toks = set()
-                    for tok in parse_words(title):
-                        # leading-separator strip == regexp ^[^\p{L}_]+ in
-                        # the staged path (equivalence is tested)
-                        while tok and not (tok[0].isalpha() or tok[0] == "_"):
-                            tok = tok[1:]
-                        if len(tok) >= min_len:
-                            toks.add(tok)
-                    page_keys = set()
-                    for tok in toks:
-                        k = memo.get(tok)
-                        if k is None:
-                            k = sorted(generate_deletes(tok, med, plen))
-                            if len(memo) < 2_000_000:
-                                memo[tok] = k
-                        page_keys.update(k)
-                    urls.extend([url] * len(page_keys))
-                    titles.extend([title] * len(page_keys))
-                    keys.extend(page_keys)
-                yield _pd.DataFrame({"url": urls, "title": titles,
-                                     "block_key": keys})
-
-    return pages.select("url", "html").mapInPandas(fn, schema)
 
 
 @dataclass
@@ -268,24 +153,6 @@ class LinkageConfig:
     # on this workload, so off by default; see the docstring for when it
     # wins.  Requires the (id, title) dim to be broadcastable.
     prefilter_before_dedup: bool = False
-
-
-def extract_and_tokenize(pages: DataFrame, config: LinkageConfig) -> DataFrame:
-    """pages → (url, title, token) — one row per distinct title token."""
-    docs = pages.select(
-        "url",
-        F.lower(F.substring_index(extract_text_udf(F.col("html")),
-                                  "\n", 1)).alias("title"))
-    toks = docs.select(
-        "url", "title",
-        F.explode(parse_words_udf(F.col("title"))).alias("raw_token"))
-    # strip the tokenizer's leading-separator quirk for blocking purposes
-    # (\p{L}: Java \w is ASCII-only and would erase non-Latin tokens)
-    toks = toks.select(
-        "url", "title",
-        F.regexp_replace("raw_token", r"^[^\p{L}_]+", "").alias("token"))
-    return (toks.where(F.length("token") >= config.min_token_len)
-            .dropDuplicates(["url", "token"]))
 
 
 def verify_extraction_invariant(pages: DataFrame) -> int:
@@ -317,10 +184,6 @@ def run_linkage(spark: SparkSession, pages: DataFrame,
     # that scoring rejects; recall is unaffected) and the title payload
     # never rides the ~80×-fan-out explode or the pair-join shuffles; it
     # is re-attached post-dedup from the pages-derived dimension below.
-    # (candidate_pairs_prefix, the vocabulary-level two-level variant, is
-    # equivalence-tested and preferable when the token vocabulary is far
-    # smaller than the corpus; this synthetic workload's unique per-entity
-    # slugs make vocab ≈ corpus, where the flat explode measures faster.)
     # ONE persisted slim dimension (id, title) — ~60 bytes/page — feeds
     # every downstream pass: the html-regex extraction runs exactly once;
     # the ~80×-fan-out key explode is NEVER materialized — each pair-join

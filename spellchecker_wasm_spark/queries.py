@@ -27,6 +27,7 @@ from .operators.clustering import connected_components
 from .operators.lookup import distributed_lookup
 from .operators.pairs import candidate_pairs
 from .operators.scoring import score_pairs
+from .operators.skew import fan_out
 
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
@@ -1662,6 +1663,8 @@ def _q_dedup_embedding(spark, sf_dir):
     import numpy as np
 
     pdf = n.select("vid", "v").toPandas()
+    if pdf.empty:  # nothing under the cap: no pairs (and no 2-D matrix)
+        return spark.createDataFrame([], "vec_a long, vec_b long")
     ids_all = pdf["vid"].to_numpy(dtype=np.int64)
     order = np.argsort(ids_all, kind="stable")
     ids_all = ids_all[order]
@@ -3958,14 +3961,11 @@ def _q_lang_id(spark, sf_dir):
     docs = (load(spark, sf_dir, "documents")
             .where(F.col("text").isNotNull())
             .select("doc_id", "lang", F.lower("text").alias("t")))
-    # the fixture documents table is ONE parquet file — fan the trigram
-    # explode out to the session parallelism (same rationale as
-    # operators/compound._parallel_select; an at-scale table keeps its
-    # partitioning, no shuffle added).  Only the explode SOURCE is
+    # fan the trigram explode out to the session parallelism
+    # (operators/skew.fan_out).  Only the explode SOURCE is
     # repartitioned: the final output join reads `docs` directly so the
     # fan-out exchange never stacks under the join's own exchange.
-    dp = spark.sparkContext.defaultParallelism
-    src = docs.repartition(dp) if docs.rdd.getNumPartitions() < dp else docs
+    src = fan_out(docs)
     # explode positions then slice at TOP level (whole-stage codegen) —
     # a lambda inside transform() stays interpreted per element
     tg = (src.where(F.length("t") >= 3)
@@ -4920,18 +4920,13 @@ def _lk_pb(spark, sf_dir):
     hash explode (page_id, tl, block_key) — consumed by the candidate
     generator (_lk_cand) and by meta_blocking's weighted pair
     aggregation.  The explode source fans out to session parallelism
-    when the input arrives in fewer partitions (the fixture's part table
-    is ONE parquet file, so the delete-mask codegen otherwise ran on one
-    core); at-scale tables keep their partitioning."""
+    (operators/skew.fan_out)."""
     from .functions.delete_hash_expr import delete_key_hash_explode
 
     pages = _lk_pages(spark, sf_dir)
     pref = pages.select("page_id", F.length("title").alias("tl"),
                         F.substring("title", 1, 7).alias("prefix"))
-    dp = spark.sparkContext.defaultParallelism
-    if pref.rdd.getNumPartitions() < dp:
-        pref = pref.repartition(dp)
-    return delete_key_hash_explode(pref, "prefix",
+    return delete_key_hash_explode(fan_out(pref), "prefix",
                                    keep_cols=["page_id", "tl"]).persist()
 
 
@@ -5032,9 +5027,9 @@ def _q_linkage_f1(spark, sf_dir):
     (id:long, key, len:int) rows once with a shuffle_hash hint, scoring
     exchanges only surviving (term_a, term_b) through one ArrowEvalPython,
     and the truth join + metric agg shuffle (long, long) pairs.  At 10^12
-    pages the only addition is cap_hot_blocks (slugs here have no
-    super-node keys; the cap is exercised by candidate_pairs_prefix and
-    the dedup queries)."""
+    pages the only addition is the hot-key cap (slugs here have no
+    super-node keys; the cap is exercised by run_linkage's hot_keys_vocab
+    and the dedup queries)."""
     pages, pred = _lk_pred(spark, sf_dir)
     return _lk_metrics(pages, pred)
 
@@ -5393,13 +5388,8 @@ def _q_blocking_stats(spark, sf_dir):
     keys) + one combine-reduced groupBy(block_key) + a scalar aggregate;
     nothing quadratic is materialized — the pair volume is computed from
     posting sizes, not by emitting pairs."""
-    pages = _lk_pages(spark, sf_dir)
-    # r6: fan the string-key explode out to session parallelism (the
-    # fixture's part table is one parquet split — the generate otherwise
-    # ran on one core; at-scale tables keep their partitioning)
-    dp = spark.sparkContext.defaultParallelism
-    if pages.rdd.getNumPartitions() < dp:
-        pages = pages.repartition(dp)
+    # fan the string-key explode out to session parallelism
+    pages = fan_out(_lk_pages(spark, sf_dir))
     blocks = build_blocks(pages, term_col="title", carry_cols=("page_id",))
     per_key = blocks.groupBy("block_key").agg(
         F.count(F.lit(1)).alias("s"))

@@ -38,29 +38,6 @@ def test_input_schema_matches_hint(pages_and_labels):
                                   "lang": "string"}
 
 
-def test_fused_blocks_equal_staged(pages_and_labels):
-    """All three blocking paths must emit exactly the same
-    (url, title, block_key) set: the pure-Catalyst pages_to_blocks (hot
-    path), the round-1 Python mapInPandas pass (parity reference), and the
-    staged operator chain."""
-    from spellchecker_wasm_spark.operators.blocking import build_blocks
-    from spellchecker_wasm_spark.pipeline.linkage import (
-        LinkageConfig, extract_and_tokenize, pages_to_blocks,
-        pages_to_blocks_python)
-    pages, _ = pages_and_labels
-    cfg = LinkageConfig()
-    catalyst = {(r["url"], r["title"], r["block_key"])
-                for r in pages_to_blocks(pages, cfg).collect()}
-    fused = {(r["url"], r["title"], r["block_key"])
-             for r in pages_to_blocks_python(pages, cfg).collect()}
-    tokens = extract_and_tokenize(pages, cfg)
-    staged = {(r["url"], r["title"], r["block_key"])
-              for r in build_blocks(tokens, term_col="token",
-                                    carry_cols=("url", "title")).collect()}
-    assert catalyst == fused
-    assert fused == staged
-
-
 def test_linkage_f1(pages_and_labels):
     pages, labels = pages_and_labels
     result = run_linkage(pages.sparkSession, pages)
@@ -134,37 +111,28 @@ def test_multibyte_entities_clustered(pages_and_labels):
             assert comp[row["url_a"]] == comp[row["url_b"]]
 
 
-@pytest.mark.parametrize("cap", [10**9, 500, 20])
-def test_two_level_pairs_equal_flat(pages_and_labels, cap):
-    """candidate_pairs_prefix (vocabulary-level keying + expansion) must
-    produce EXACTLY the flat key-explosion candidate set — uncapped AND at
-    any hot-key cap (its page-weighted key cap mirrors cap_hot_blocks)."""
-    from pyspark.sql import functions as F
-
+@pytest.mark.parametrize("cap", [10**9, 20, 5])
+def test_hot_keys_vocab_matches_flat_cap(pages_and_labels, cap):
+    """run_linkage's vocabulary-level hot-key cap (hot_keys_vocab) must
+    drop EXACTLY the keys the flat posting-size cap (cap_hot_blocks over
+    the page-level hash explode) drops — uncapped, and at caps where
+    hundreds of keys are hot on this fixture."""
+    from spellchecker_wasm_spark.functions.text_expr import title_expr
     from spellchecker_wasm_spark.operators.blocking import cap_hot_blocks
-    from spellchecker_wasm_spark.operators.pairs import (
-        candidate_pairs, candidate_pairs_prefix)
     from spellchecker_wasm_spark.pipeline.linkage import (
-        LinkageConfig, pages_to_blocks, pages_to_prefixes)
+        hot_keys_vocab, pages_to_block_hashes, title_prefixes_array)
     pages, _ = pages_and_labels
-    cfg = LinkageConfig()
+    cfg = LinkageConfig(max_block_size=cap)
+    pdim = (pages.where(F.col("html").isNotNull())
+            .select(F.xxhash64("url").alias("id"),
+                    title_expr(F.col("html")).alias("title")))
 
-    blocks = (pages_to_blocks(pages, cfg)
-              .select(F.xxhash64("url").alias("page_id"),
-                      F.length("title").alias("tl"), "block_key"))
-    capped, _ = cap_hot_blocks(blocks, cap)
-    dim = pages.select(F.xxhash64("url").alias("id"),
-                       F.lit("x").alias("term"))
-    flat = {(r["id_a"], r["id_b"]) for r in
-            candidate_pairs(capped, id_col="page_id", dim=dim,
-                            len_col="tl",
-                            max_len_diff=cfg.max_edit_distance)
-            .select("id_a", "id_b").collect()}
+    _, flat = cap_hot_blocks(pages_to_block_hashes(pdim, cfg), cap)
+    toks = pdim.select(F.explode(
+        title_prefixes_array(F.col("title"), cfg)).alias("prefix"))
+    vocab = hot_keys_vocab(toks, cfg)
 
-    toks = (pages_to_prefixes(pages, cfg)
-            .select(F.xxhash64("url").alias("page_id"),
-                    F.length("title").alias("tl"), "prefix"))
-    two, _, _ = candidate_pairs_prefix(
-        toks, max_len_diff=cfg.max_edit_distance, max_block_size=cap)
-    two_set = {(r["id_a"], r["id_b"]) for r in two.collect()}
-    assert two_set == flat
+    flat_keys = {r["block_key"] for r in flat.select("block_key").collect()}
+    vocab_keys = {r["block_key"] for r in vocab.select("block_key").collect()}
+    assert vocab_keys == flat_keys
+    assert (len(flat_keys) > 0) == (cap < 10**9)

@@ -109,3 +109,17 @@ def test_dedup_embedding_matches_hof_formulation(spark):
             .select("vec_a", "vec_b"))
     assert _rows(got) == _rows(want)
     assert len(_rows(got)) > 0  # non-vacuous at this SF
+
+
+def test_dedup_embedding_empty_capped_slice(spark, tmp_path):
+    """An embeddings table with no vec_id under the cap yields no pairs
+    (the capped matrix is empty, not a crash)."""
+    import spellchecker_wasm_spark.queries as Q
+
+    rows = [(Q._DEDUP_EMB_CAP + i, [float(i), 1.0, 0.5], 0) for i in range(4)]
+    (spark.createDataFrame(rows, "vec_id long, embedding array<float>, "
+                                 "label int")
+     .write.parquet(str(tmp_path / "embeddings.parquet")))
+    got = Q._q_dedup_embedding(spark, str(tmp_path))
+    assert got.columns == ["vec_a", "vec_b"]
+    assert got.collect() == []

@@ -1,0 +1,53 @@
+"""Every package name a script imports must exist.
+
+The scripts, the bench entry points, the benchmark harness and
+``__spark_entry__.py`` are not imported by any other test, so a package
+name deleted or renamed under them would only surface when someone runs
+the script.  This parses each file (no Spark session) and resolves every
+``from spellchecker_wasm_spark… import name`` and
+``import spellchecker_wasm_spark…`` against the package.
+"""
+
+import ast
+import importlib
+import importlib.util
+from pathlib import Path
+
+import pytest
+
+ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = "spellchecker_wasm_spark"
+FILES = sorted([*ROOT.glob("scripts/*.py"), *ROOT.glob("bench*.py"),
+                *ROOT.glob("perfbench/*.py"), ROOT / "__spark_entry__.py"])
+
+
+def _package_imports(path: Path):
+    """(line, module, name) for each package import in ``path``; name is
+    None for a plain ``import module``."""
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.ImportFrom) and node.level == 0 \
+                and (node.module or "").split(".")[0] == PACKAGE:
+            for alias in node.names:
+                yield node.lineno, node.module, alias.name
+        elif isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.name.split(".")[0] == PACKAGE:
+                    yield node.lineno, alias.name, None
+
+
+def _resolves(module: str, name: str | None) -> bool:
+    if importlib.util.find_spec(module) is None:
+        return False
+    if name is None or name == "*":
+        return True
+    return (hasattr(importlib.import_module(module), name)
+            or importlib.util.find_spec(f"{module}.{name}") is not None)
+
+
+@pytest.mark.parametrize("path", FILES,
+                         ids=lambda p: str(p.relative_to(ROOT)))
+def test_script_package_imports_resolve(path):
+    missing = [f"{path.name}:{line}: {module}" + (f".{name}" if name else "")
+               for line, module, name in _package_imports(path)
+               if not _resolves(module, name)]
+    assert not missing, missing

@@ -105,6 +105,15 @@ def test_candidate_pairs_lossless_blocking(spark):
     assert got == want
 
 
+def test_score_pairs_keep_above_threshold(spark):
+    df = spark.createDataFrame([Row(term_a="abc", term_b="abd"),
+                                Row(term_a="abc", term_b="zzzzzz")])
+    rows = {(r["term_a"], r["term_b"]): r["distance"]
+            for r in score_pairs(df, keep_above_threshold=True).collect()}
+    assert rows[("abc", "abd")] == 1
+    assert rows[("abc", "zzzzzz")] is None
+
+
 def test_cap_hot_blocks(spark):
     rows = [Row(term=f"t{i}", block_key="hot") for i in range(20)]
     rows += [Row(term="a", block_key="cold"), Row(term="b", block_key="cold")]
