@@ -4,12 +4,7 @@ from .delete_expr import (
     query_deletes_array,
 )
 from .text_expr import extract_text_expr, title_expr, title_tokens_array
-from .udfs import (
-    generate_deletes_udf,
-    osa_distance_udf,
-    parse_words_udf,
-    query_deletes_udf,
-)
+from .udfs import osa_distance_udf, parse_words_udf
 
 __all__ = [
     "delete_keys_array",
@@ -18,8 +13,6 @@ __all__ = [
     "extract_text_expr",
     "title_expr",
     "title_tokens_array",
-    "generate_deletes_udf",
     "osa_distance_udf",
     "parse_words_udf",
-    "query_deletes_udf",
 ]

@@ -70,6 +70,15 @@ def delete_key_hashes_of_prefix(
     # them across the ~29 mask hashes
     codes = [F.when(pl >= i, F.ascii(F.substring(prefix, i, 1)))
              for i in range(1, prefix_length + 1)]
+    return _mask_hashes(codes, pl, F.octet_length(prefix),
+                        max_edit_distance, prefix_length)
+
+
+def _mask_hashes(codes: list[Column], pl: Column, ol: Column,
+                 max_edit_distance: int, prefix_length: int) -> Column:
+    """array<long>: the distinct delete-variant hashes of one prefix, from
+    its per-position codepoint columns ``codes``, codepoint length ``pl``
+    and octet length ``ol``."""
     # the undeleted prefix itself
     keys: list[Column] = [F.xxhash64(*codes)]
     for positions in _masks(max_edit_distance, prefix_length):
@@ -83,8 +92,7 @@ def delete_key_hashes_of_prefix(
             # the recursive kernel emits "" there only if some prefix char
             # is multi-byte (sym_spell.rs:217-219) — same quirk condition
             # as the string path
-            cond = (pl > maxpos) | ((pl == maxpos)
-                                    & (F.octet_length(prefix) > pl))
+            cond = (pl > maxpos) | ((pl == maxpos) & (ol > pl))
         else:
             cond = pl >= maxpos
         keys.append(F.when(cond, h))
@@ -123,22 +131,6 @@ def delete_key_hash_explode(df, prefix_col: str,
         F.octet_length(p).alias("__ol"),
         *[F.when(pl >= i, F.ascii(F.substring(p, i, 1))).alias(n)
           for i, n in enumerate(code_names, start=1)])
-    plc = F.col("__pl")
-    codes = [F.col(n) for n in code_names]
-    keys: list = [F.xxhash64(*codes)]
-    for positions in _masks(max_edit_distance, prefix_length):
-        maxpos = positions[-1]
-        k = len(positions)
-        kept = [codes[i - 1] for i in range(1, prefix_length + 1)
-                if i not in positions]
-        h = F.xxhash64(*kept) if kept else F.xxhash64(F.lit(None).cast('int'))
-        if positions == tuple(range(1, k + 1)):
-            cond = (plc > maxpos) | ((plc == maxpos)
-                                     & (F.col("__ol") > plc))
-        else:
-            cond = plc >= maxpos
-        keys.append(F.when(cond, h))
-    keys.append(F.when(plc <= max_edit_distance,
-                       F.xxhash64(F.lit(None).cast('int'))))
-    arr = F.array_distinct(F.array_compact(F.array(*keys)))
+    arr = _mask_hashes([F.col(n) for n in code_names], F.col("__pl"),
+                       F.col("__ol"), max_edit_distance, prefix_length)
     return staged.select(*keep_cols, F.explode(arr).alias(out_col))

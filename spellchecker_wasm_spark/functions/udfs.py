@@ -8,11 +8,9 @@ Everything else in the operators is built-in Catalyst expressions.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..kernels.deletes import generate_deletes, query_deletes
 from ..kernels.distance_np import osa_batch
 from ..kernels.text import parse_words
 
@@ -53,44 +51,12 @@ def jaro_winkler_udf():
     return _jw.asNondeterministic()
 
 
-def generate_deletes_udf(max_edit_distance: int = 2, prefix_length: int = 7):
-    """Column function: dictionary-side blocking keys (create_deletes,
-    sym_spell.rs:243-261) as array<string> — explode downstream."""
-
-    @pandas_udf(T.ArrayType(T.StringType()))
-    def _deletes(terms: pd.Series) -> pd.Series:
-        return terms.map(lambda t: sorted(
-            generate_deletes(t, max_edit_distance, prefix_length))
-            if t is not None else [])
-
-    return _deletes
-
-
-def query_deletes_udf(max_edit_distance: int = 2, prefix_length: int = 7):
-    """Column function: query-side candidate keys (lookup BFS,
-    sym_spell.rs:334-345,485-506) as array<string>."""
-
-    @pandas_udf(T.ArrayType(T.StringType()))
-    def _deletes(terms: pd.Series) -> pd.Series:
-        return terms.map(lambda t: sorted(
-            query_deletes(t, max_edit_distance, prefix_length))
-            if t is not None else [])
-
-    return _deletes
-
-
 @pandas_udf(T.ArrayType(T.StringType()))
 def parse_words_udf(texts: pd.Series) -> pd.Series:
     """Reference-quirk tokenizer (sym_spell.rs:191-214) as array<string>.
     Regex cannot express the leading-separator quirk; the kernel scan runs
     per batch."""
     return texts.map(lambda t: parse_words(t) if t is not None else [])
-
-
-def clean_tokens(col):
-    """Expression: strip the tokenizer's leading-separator quirk for the
-    stages that want plain terms (blocking on web-page tokens)."""
-    return F.regexp_replace(col, r"^[^\p{L}_]+", "")
 
 
 def soft_tfidf_dot_udf(theta: float):

@@ -219,68 +219,3 @@ def _osa_from_matrices(A: np.ndarray, Bm: np.ndarray, la: np.ndarray,
             r = np.where(d <= max_distance, d.astype(np.int64), -1)
             res[todo[sel]] = r
     return res
-
-
-def osa_full_single(s1: str, s2: str) -> int:
-    """Unbounded full OSA for ONE (possibly long) pair — the
-    ``lookup_compound`` final-assembly distance (sym_spell.rs:663-676
-    calls distance_compare(input, joined, usize::MAX) on whole
-    sentences).  The scalar DP costs O(|s1|·|s2|) interpreted steps
-    (~16ms for 300-char documents — it dominated compound_correct's
-    wall); here each DP row is numpy-vectorized across j.
-
-    The horizontal dependency cur[j] = min(cand[j], cur[j-1]+1) is
-    resolved with the classic running-min identity: with
-    e[j] = cur[j] - j,  e[j] = min(cand[j] - j, e[j-1]), i.e. one
-    ``np.minimum.accumulate`` per row; the transposition term reads only
-    prev2 (two rows up) so it joins cand before the accumulate.  Exactly
-    equal to osa_distance_max(s1, s2, USIZE_MAX) — same empty rules,
-    shorter-first swap, prefix/suffix strip — property-tested in
-    tests/test_distance_np.py.
-    """
-    if not s1 or not s2:
-        return max(len(s1), len(s2))
-    if len(s1) > len(s2):
-        s1, s2 = s2, s1
-    # common prefix/suffix strip (exactness-preserving, same as scalar)
-    n1, n2 = len(s1), len(s2)
-    suf = 0
-    while suf < n1 and s1[n1 - 1 - suf] == s2[n2 - 1 - suf]:
-        suf += 1
-    pre = 0
-    lim = n1 - suf
-    while pre < lim and s1[pre] == s2[pre]:
-        pre += 1
-    s1 = s1[pre:n1 - suf]
-    s2 = s2[pre:n2 - suf]
-    if not s1:
-        return len(s2)
-    a = np.frombuffer(s1.encode("utf-32-le"), dtype=np.uint32)
-    b = np.frombuffer(s2.encode("utf-32-le"), dtype=np.uint32)
-    L1, L2 = len(a), len(b)
-    j_idx = np.arange(1, L2 + 1, dtype=np.int32)
-    prev2 = np.zeros(L2 + 1, dtype=np.int32)
-    prev = np.arange(L2 + 1, dtype=np.int32)
-    cand = np.empty(L2, dtype=np.int32)
-    acc = np.empty(L2 + 1, dtype=np.int32)
-    for i in range(1, L1 + 1):
-        c1 = a[i - 1]
-        eq = b == c1
-        # substitution / match from prev[j-1], deletion-in-s2 from prev[j]
-        np.minimum(prev[:-1] + 1 - eq.astype(np.int32), prev[1:] + 1,
-                   out=cand)
-        if i > 1 and L2 > 1:
-            # transposition at (i, j): s2[j-2] == s1[i-1] and
-            # s2[j-1] == s1[i-2], cost prev2[j-2] + 1 (cand[k] is j=k+1)
-            trans = (b[:-1] == c1) & (b[1:] == a[i - 2])
-            np.minimum(cand[1:], prev2[:L2 - 1] + 1, out=cand[1:],
-                       where=trans)
-        # horizontal relaxation via running min of cand[j]-j seeded at i
-        acc[0] = i
-        np.subtract(cand, j_idx, out=cand)
-        acc[1:] = cand
-        np.minimum.accumulate(acc, out=acc)
-        prev2, prev = prev, prev2
-        np.add(acc[1:], j_idx, out=prev[1:])
-        prev[0] = i
-    return int(prev[L2])

@@ -57,22 +57,3 @@ def aggregate_word_counts(entries: DataFrame, count_threshold: int = 1,
             .groupBy(F.col(term_col).alias("term"))
             .agg(F.sum(count_col).alias("count"))
             .where(F.col("count") >= count_threshold))
-
-
-def parse_bigram_lines(lines: DataFrame, separator: str = " ",
-                       wasm_truncation: bool = False,
-                       value_col: str = "value") -> DataFrame:
-    """text lines → (bigram, count) for the compound stage
-    (sym_spell.rs:153-163: key = parts[0] + ' ' + parts[1])."""
-    v = F.col(value_col)
-    if wasm_truncation:
-        v = F.expr(f"substring({value_col}, 1, length({value_col}) - 1)")
-    parts = _split_literal(v, separator)
-    raw_count = F.rtrim(F.element_at(parts, 3))
-    count = F.when(raw_count.rlike(_USIZE_RE),
-                   raw_count.cast("long")).otherwise(F.lit(0))
-    return (lines
-            .where(F.size(parts) >= 3)
-            .select(F.concat_ws(" ", F.element_at(parts, 1),
-                                F.element_at(parts, 2)).alias("bigram"),
-                    count.alias("count")))

@@ -40,37 +40,29 @@ def distributed_lookup(queries: DataFrame, words: DataFrame,
                        verbosity: Verbosity = Verbosity.CLOSEST,
                        max_edit_distance: int = 2, prefix_length: int = 7,
                        include_unknown: bool = False,
-                       include_self: bool = False,
-                       broadcast_words: bool = True,
-                       max_dict_len: int | None = None) -> DataFrame:
+                       include_self: bool = False) -> DataFrame:
     """queries(query) × words(term, count) →
     (query, term, distance, count, rank).
 
-    ``broadcast_words=True`` broadcasts the dictionary + its delete index —
-    the right plan for dictionary-vs-corpus spelling (dictionaries are
-    ~10^5-10^6 rows; the corpus side is the 10^12 one).  Set False to
-    shuffle-join when both sides are huge.
+    The dictionary + its delete index are broadcast — the right plan for
+    dictionary-vs-corpus spelling (dictionaries are ~10^5-10^6 rows; the
+    corpus side is the 10^12 one).
 
-    Plan construction is action-free: when ``max_dict_len`` isn't passed,
-    the dictionary's max term length enters the plan as a broadcast
-    one-row aggregate (evaluated inside the query's own job) instead of
-    an eager ``.first()`` that would block the driver once per build.
+    Plan construction is action-free: the dictionary's max term length
+    enters the plan as a broadcast one-row aggregate (evaluated inside
+    the query's own job) instead of an eager ``.first()`` that would
+    block the driver once per build.
     """
     q = queries.select("query").where(F.col("query").isNotNull()).distinct()
     q = q.withColumn("q_len", F.length("query"))
     # early exits (sym_spell.rs:306-308)
-    if max_dict_len is None:
-        mdl = words.agg(
-            F.coalesce(F.max(F.length("term")), F.lit(0)).alias("_mdl"))
-        eligible = (q.join(F.broadcast(mdl))
-                    .where((F.col("q_len") >= max_edit_distance)
-                           & (F.col("q_len") - max_edit_distance
-                              <= F.col("_mdl")))
-                    .drop("_mdl"))
-    else:
-        eligible = q.where(
-            (F.col("q_len") >= max_edit_distance)
-            & (F.col("q_len") - max_edit_distance <= max_dict_len))
+    mdl = words.agg(
+        F.coalesce(F.max(F.length("term")), F.lit(0)).alias("_mdl"))
+    eligible = (q.join(F.broadcast(mdl))
+                .where((F.col("q_len") >= max_edit_distance)
+                       & (F.col("q_len") - max_edit_distance
+                          <= F.col("_mdl")))
+                .drop("_mdl"))
 
     # exact match runs AFTER the length guards (sym_spell.rs:306 precedes
     # :311): a too-short query never emits its self row.  Exactness is
@@ -79,20 +71,17 @@ def distributed_lookup(queries: DataFrame, words: DataFrame,
     # reference (and recompute) a second corpus-sized subtree.
     wq = words.select(F.col("term").alias("query"),
                       F.col("count").alias("_exact_count"))
-    eligible = eligible.join(
-        F.broadcast(wq) if broadcast_words else wq, "query", "left")
+    eligible = eligible.join(F.broadcast(wq), "query", "left")
     exact = (eligible.where(F.col("_exact_count").isNotNull())
              .select("query", F.col("query").alias("term"),
                      F.lit(0).alias("distance"),
                      F.col("_exact_count").alias("count")))
 
-    blocks = words.select(
+    blocks = F.broadcast(words.select(
         "term", "count",
         F.explode(delete_keys_array(
             F.col("term"), max_edit_distance, prefix_length))
-        .alias("block_key"))
-    if broadcast_words:
-        blocks = F.broadcast(blocks)
+        .alias("block_key")))
 
     cand = eligible.select(
         "query", "q_len",

@@ -56,18 +56,14 @@ def similarity_from_distance(distance, length):
     return F.when(d >= 0, F.lit(1.0) - d / length.cast("double"))
 
 
-def distance_from_similarity(similarity, length,
-                             reproduce_truncation_quirk: bool = False):
+def distance_from_similarity(similarity, length):
     """helpers.rs:75-77: ``length * (1 - similarity) as usize``.
 
     The reference casts ``(1.0 - similarity) as usize`` BEFORE multiplying
     (precedence bug, helpers.rs:76) so any similarity in (0, 1] yields
-    distance 0 — the path is unreachable from SymSpell, so the default
-    here computes the intended ``trunc(length * (1 - similarity))``;
-    pass reproduce_truncation_quirk=True for the faithful broken form.
+    distance 0 — the path is unreachable from SymSpell, so this computes
+    the intended ``trunc(length * (1 - similarity))``.
     """
-    if reproduce_truncation_quirk:
-        return length.cast("long") * F.floor(F.lit(1.0) - similarity)
     return F.floor(length.cast("double")
                    * (F.lit(1.0) - similarity)).cast("long")
 

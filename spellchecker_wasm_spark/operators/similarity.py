@@ -209,16 +209,12 @@ def lsh_signature_expr(n_planes: int, n_dims: int, seed: int = 7):
 
 def lsh_buckets(embeddings: DataFrame, n_planes: int = 8, seed: int = 7,
                 id_col: str = "vec_id",
-                vec_col: str = "embedding",
-                n_dims: int | None = None) -> DataFrame:
+                vec_col: str = "embedding", *, n_dims: int) -> DataFrame:
     """(vec_id, bucket) — the blocking stage of ANN.
 
-    Pass ``n_dims`` (the embedding dimensionality is part of any real
-    table's schema contract) so plan construction stays action-free; when
-    omitted, a one-row probe job runs at build time as a convenience."""
+    ``n_dims`` is the embedding dimensionality (part of any real table's
+    schema contract), passed in so plan construction stays action-free."""
     base = _prep(embeddings, id_col, vec_col)
-    if n_dims is None:
-        n_dims = len(embeddings.select(vec_col).first()[0])
     return base.withColumn("bucket",
                            lsh_signature_expr(n_planes, n_dims, seed))
 
@@ -226,12 +222,14 @@ def lsh_buckets(embeddings: DataFrame, n_planes: int = 8, seed: int = 7,
 def lsh_bucketed_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
                       n_planes: int = 8, seed: int = 7, probe_hamming: int = 1,
                       id_col: str = "vec_id",
-                      vec_col: str = "embedding",
-                      n_dims: int | None = None) -> DataFrame:
+                      vec_col: str = "embedding", *,
+                      n_dims: int) -> DataFrame:
     """ANN top-k: join on LSH bucket (query side multi-probes all buckets
     within Hamming distance ``probe_hamming``), exact cosine re-rank."""
-    base = lsh_buckets(embeddings, n_planes, seed, id_col, vec_col, n_dims)
-    qb = lsh_buckets(queries, n_planes, seed, id_col, vec_col, n_dims)
+    base = lsh_buckets(embeddings, n_planes, seed, id_col, vec_col,
+                       n_dims=n_dims)
+    qb = lsh_buckets(queries, n_planes, seed, id_col, vec_col,
+                     n_dims=n_dims)
     # multi-probe: query explodes to its bucket plus single-bit flips
     flips = [F.col("bucket")] + [
         F.expr(f"CAST(bucket AS BIGINT) ^ {1 << p}L")

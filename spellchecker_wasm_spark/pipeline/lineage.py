@@ -6,8 +6,7 @@ Each stage writes to ``<base>/<run_id>/<stage>`` as parquet with an
 atomic-rename commit protocol (_SUCCESS is written by Spark); a stage whose
 output already exists is read back instead of recomputed, so a killed run
 resumes from its last completed stage.  Metrics (row counts, per-partition
-row counts, wall time, input fingerprint) append to
-``<base>/<run_id>/_metrics.jsonl``.
+row counts, wall time) append to ``<base>/<run_id>/_metrics.jsonl``.
 
 Format note: this container has no Iceberg runtime jars, so the writer
 targets plain parquet directories; on a cluster, swapping
@@ -49,8 +48,6 @@ class StageWriter:
         return os.path.exists(os.path.join(self.stage_path(name), "_SUCCESS"))
 
     def materialize(self, name: str, df: DataFrame,
-                    input_fingerprint: str | None = None,
-                    force: bool = False,
                     partition_by: list[str] | None = None) -> DataFrame:
         """Write-or-resume: if the stage output exists, read it back
         (idempotent resume); otherwise compute, write, and record metrics.
@@ -63,7 +60,7 @@ class StageWriter:
         back to physical task partitions (spark_partition_id).
         """
         path = self.stage_path(name)
-        if self.is_complete(name) and not force:
+        if self.is_complete(name):
             self._log({"stage": name, "event": "resume", "path": path})
             return self.spark.read.parquet(path)
         t0 = time.time()
@@ -82,8 +79,7 @@ class StageWriter:
         wall = time.time() - t0
         metrics = {"stage": name, "event": "write", "path": path,
                    "wall_sec": round(wall, 3),
-                   "row_count": int(obs.get["rows"]),
-                   "input_fingerprint": input_fingerprint}
+                   "row_count": int(obs.get["rows"])}
         if self.collect_partition_lineage:
             if partition_by:
                 per_part = out.groupBy(*partition_by).count().collect()

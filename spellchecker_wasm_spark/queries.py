@@ -20,7 +20,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .functions.udfs import generate_deletes_udf
 from .kernels.symspell import Verbosity
 from .operators.blocking import build_blocks
 from .operators.clustering import connected_components
@@ -2112,9 +2111,9 @@ FROM documents WHERE text IS NOT NULL
 
 
 def _q_binary_features(spark, sf_dir):
-    """Multimodal plumbing fixture: treat text bytes as an opaque payload;
-    n_bytes + a byte checksum stand in for decoded features (real decode is
-    stubbed — see operators/multimodal.py)."""
+    """Binary-payload plumbing fixture: treat text bytes as an opaque
+    payload; n_bytes + a byte checksum stand in for decoded features (no
+    codec library ships with the package, so nothing is decoded)."""
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     return docs.select(
         "doc_id", F.octet_length("text").alias("n_bytes"),
@@ -2517,12 +2516,11 @@ _FRAME_CHARS = 256
 
 
 def _q_media_frames(spark, sf_dir):
-    """Multimodal frame-sampling plumbing under the oracle: documents
+    """Media frame-sampling plumbing under the oracle: documents
     treated as opaque media payloads, windowed into fixed-size 'frames'
     inside an Arrow-batched mapInPandas (the real distributed shape —
-    schema, batching, per-frame explode; decode itself stays the
-    deterministic stub per operators/multimodal.py), with integer
-    checksums both engines can compute."""
+    schema, batching, per-frame explode; nothing is decoded), with
+    integer checksums both engines can compute."""
     from pyspark.sql import types as T
 
     docs = (load(spark, sf_dir, "documents")

@@ -1,4 +1,4 @@
-"""Tests for compound correction, ANN similarity, and multimodal plumbing."""
+"""Tests for compound correction and ANN similarity."""
 
 import gzip
 
@@ -9,8 +9,6 @@ from pyspark.sql import Row, functions as F
 from spellchecker_wasm_spark.kernels import SymSpellKernel
 from spellchecker_wasm_spark.operators.compound import (
     compound_correct, kernel_from_counts)
-from spellchecker_wasm_spark.operators.multimodal import (
-    decode_media_features, make_fake_media, sample_video_frames)
 from spellchecker_wasm_spark.operators.similarity import (
     brute_force_topk, lsh_bucketed_topk, lsh_buckets)
 
@@ -112,7 +110,7 @@ def test_brute_force_topk_finds_planted_neighbors(vectors):
 def test_lsh_recall_against_brute_force(vectors):
     brute = brute_force_topk(vectors, vectors.where(F.col("vec_id") < 10), k=1)
     ann = lsh_bucketed_topk(vectors, vectors.where(F.col("vec_id") < 10),
-                            k=1, n_planes=8, probe_hamming=1)
+                            k=1, n_planes=8, probe_hamming=1, n_dims=16)
     b = {r["query_id"]: r["neighbor_id"] for r in brute.collect()}
     a = {r["query_id"]: r["neighbor_id"] for r in ann.collect()}
     hits = sum(1 for q in b if a.get(q) == b[q])
@@ -120,36 +118,9 @@ def test_lsh_recall_against_brute_force(vectors):
 
 
 def test_lsh_buckets_deterministic(vectors):
-    b1 = {r["vid"]: r["bucket"] for r in lsh_buckets(vectors).collect()}
-    b2 = {r["vid"]: r["bucket"] for r in lsh_buckets(vectors).collect()}
+    b1 = {r["vid"]: r["bucket"]
+          for r in lsh_buckets(vectors, n_dims=16).collect()}
+    b2 = {r["vid"]: r["bucket"]
+          for r in lsh_buckets(vectors, n_dims=16).collect()}
     assert b1 == b2
     assert all(0 <= v < 256 for v in b1.values())
-
-
-def test_multimodal_stub_decode(spark):
-    rows = [Row(media_id=i, blob=make_fake_media(
-        i, kind, 64 * (i + 1), 48, bytes(range(256)) * (i + 1)))
-        for i, kind in enumerate(["image", "audio", "video"])]
-    df = spark.createDataFrame(rows)
-    out = decode_media_features(df, "blob").collect()
-    assert {r["kind"] for r in out} == {"image", "audio", "video"}
-    for r in out:
-        assert len(r["features"]) == 16
-        assert abs(sum(r["features"]) - 1.0) < 1e-5
-        assert r["width"] == 64 * (r["media_id"] + 1)
-        assert r["n_bytes"] > 256
-
-
-def test_multimodal_real_mode_stubbed(spark):
-    df = spark.createDataFrame([Row(media_id=1, blob=b"x")])
-    with pytest.raises(NotImplementedError, match="decoder"):
-        decode_media_features(df, "blob", mode="real")
-
-
-def test_video_frame_sampling(spark):
-    payload = bytes(range(256)) * 12  # 3072 bytes → 3 frames @1024
-    df = spark.createDataFrame(
-        [Row(media_id=7, blob=make_fake_media(7, "video", 0, 0, payload))])
-    frames = sample_video_frames(df, "blob", every_n_bytes=1024).collect()
-    assert [r["frame_index"] for r in sorted(frames, key=lambda r: r["frame_index"])] == [0, 1, 2]
-    assert all(len(r["frame_features"]) == 16 for r in frames)

@@ -64,30 +64,6 @@ def test_large_batch_throughput_sanity():
         assert got[i] == ref(words[i], other[i], 2)
 
 
-def test_osa_full_single_equals_scalar_unbounded():
-    """osa_full_single == osa_distance_max(·,·,USIZE_MAX) — exhaustive
-    over tiny strings (transposition lattice) + random unicode."""
-    import itertools
-    import random
-
-    from spellchecker_wasm_spark.kernels.distance import osa_distance_max
-    from spellchecker_wasm_spark.kernels.distance_np import osa_full_single
-
-    big = 2**64 - 1
-    for n1 in range(0, 5):
-        for n2 in range(0, 5):
-            for s1 in map("".join, itertools.product("ab", repeat=n1)):
-                for s2 in map("".join, itertools.product("ab", repeat=n2)):
-                    assert osa_full_single(s1, s2) == osa_distance_max(
-                        s1, s2, big), (s1, s2)
-    rng = random.Random(7)
-    alpha = "abcdя -_"
-    for _ in range(1500):
-        s1 = "".join(rng.choice(alpha) for _ in range(rng.randint(0, 40)))
-        s2 = "".join(rng.choice(alpha) for _ in range(rng.randint(0, 40)))
-        assert osa_full_single(s1, s2) == osa_distance_max(s1, s2, big)
-
-
 def test_compound_batch_distance_equals_scalar_lookup_compound():
     """The operator's batched final-assembly distance (osa_batch over
     (input, joined) pairs) must equal the scalar lookup_compound result
@@ -121,16 +97,28 @@ def test_compound_batch_distance_equals_scalar_lookup_compound():
 
 def test_osa_batch_unbounded_escalation_equals_scalar():
     """The operator's escalating-band unbounded distance == scalar
-    osa_distance_max(·,·,USIZE_MAX), including pairs whose distance
-    forces one or more escalations past the starting band of 16."""
+    osa_distance_max(·,·,USIZE_MAX): exhaustive over the {a,b}^≤4
+    transposition lattice, random unicode pairs, and pairs whose
+    distance forces one or more escalations past the starting band
+    of 16."""
+    import itertools
     import random
 
     from spellchecker_wasm_spark.kernels.distance import osa_distance_max
     from spellchecker_wasm_spark.operators.compound import (
         _osa_batch_unbounded)
 
+    words = ["".join(w) for n in range(5)
+             for w in itertools.product("ab", repeat=n)]
+    pairs = list(itertools.product(words, words))
+    rng = random.Random(7)
+    alpha = "abcdя -_"
+    for _ in range(1500):
+        pairs.append((
+            "".join(rng.choice(alpha) for _ in range(rng.randint(0, 40))),
+            "".join(rng.choice(alpha) for _ in range(rng.randint(0, 40)))))
     rng = random.Random(11)
-    pairs = [("", ""), ("", "abc"), ("abc", ""), ("ab", "ba")]
+    pairs += [("", ""), ("", "abc"), ("abc", ""), ("ab", "ba")]
     for _ in range(300):
         n1, n2 = rng.randint(0, 60), rng.randint(0, 60)
         pairs.append((

@@ -261,9 +261,8 @@ def test_combi_bound_tightening_matches_reference(en_gb_kernel_with_bigrams):
 
 
 def test_fast_top_paths_match_lookup(en_gb_kernel):
-    """The tiered fast path (_lookup_top_fast) and the batched path
-    (lookup_top_batch) must be result-identical to
-    lookup(term, Top, med, False, True) — including quirk branches,
+    """The tiered fast path (_lookup_top_fast) must be result-identical
+    to lookup(term, Top, med, False, True) — including quirk branches,
     tie-breaks, and empty results — across dictionary words, corrupted
     variants, merged pairs, split fragments, and unicode."""
     import hashlib
@@ -293,10 +292,4 @@ def test_fast_top_paths_match_lookup(en_gb_kernel):
             got = [(s.term, s.distance, s.count)
                    for s in k._lookup_top_fast(p, med)]
             assert got == want[p], (p, med, got, want[p])
-        k._top_cache.clear()
-        k.lookup_top_batch(probes, med)
-        for p in probes:
-            got = [(s.term, s.distance, s.count)
-                   for s in k._top_cache[(p, med)]]
-            assert got == want[p], ("batch", p, med, got, want[p])
         k._top_cache.clear()

@@ -145,28 +145,83 @@ _EAGER = ("stream_", "fs_round2", "fs_converged", "checkpoint_resume",
           "stage_lineage", "sink_", "source_", "incremental_linkage")
 
 
-def test_catalog_global_plan_invariants(spark):
+# lazy catalog entries whose builder still runs a job today, each with
+# the reason; every other entry must build without scheduling one
+# (ROADMAP aim 3: building a DataFrame never runs a job)
+_BUILD_RUNS_JOBS = {
+    # connected_components counts the edge frame and collects it to the
+    # driver union-find when it fits (operators/clustering.py)
+    **{name: "connected_components counts + collects the edges"
+       for name in ("ari_quality", "bcubed_quality", "canopy_blocking",
+                    "cluster_diameter", "cluster_stats", "curation_funnel",
+                    "dedup_clusters", "dedup_lsh_clusters", "golden_record",
+                    "leakage_safe_split", "linkage_cluster_f1",
+                    "purity_quality", "term_clusters")},
+    # the kernel needs the whole dictionary on the driver
+    # (operators/compound._collect_dict)
+    **{name: "collects the dictionary into the SymSpell kernel"
+       for name in ("compound_correct", "compound_known", "compound_merge",
+                    "compound_split", "word_segmentation")},
+    "dedup_embedding": "toPandas of the capped embedding slice for the "
+                       "numpy matmul",
+}
+
+
+def test_catalog_global_plan_invariants(spark, monkeypatch):
     """The two invariants every batch plan in the catalog must hold at
     any scale: no row-at-a-time Python (BatchEvalPython — Arrow only)
     and no unbounded cartesian product (CartesianProduct; the catalog's
     BroadcastNestedLoopJoins are constant-size attaches, audited in
-    PLANS_TABLE.md).  Builds every lazy entry's executed plan — plan
-    construction only, no jobs."""
-    from spellchecker_wasm_spark.queries import CATALOG
+    PLANS_TABLE.md).  Builds every lazy entry's executed plan, and
+    asserts that building it schedules no Spark job unless the entry is
+    in _BUILD_RUNS_JOBS.
 
+    Tables are read with their schema given, as a production job reads a
+    table with a known schema: Spark's parquet schema inference is itself
+    a job, and would otherwise show up under every entry."""
+    from spellchecker_wasm_spark import queries
+    from spellchecker_wasm_spark.queries import CATALOG, TABLES
+
+    schemas = {t: queries.load(spark, SF_DIR, t).schema for t in TABLES}
+    monkeypatch.setattr(
+        queries, "load", lambda spark, sf_dir, name: spark.read.schema(
+            schemas[name]).parquet(f"{sf_dir}/{name}.parquet"))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
     offenders = {}
+    ran_jobs = {}
     for name in sorted(CATALOG):
         if any(name.startswith(p) or name == p.rstrip("_")
                for p in _EAGER):
             continue
-        plan = (CATALOG[name][0](spark, SF_DIR)
-                ._jdf.queryExecution().executedPlan().toString())
+        group = f"build:{name}"
+        sc.setJobGroup(group, "catalog construction must schedule no jobs")
+        try:
+            df = CATALOG[name][0](spark, SF_DIR)
+        finally:
+            sc.setJobGroup("", "")
+        # the status tracker is fed by the listener bus; drain it so a
+        # job the build just ran cannot be missed
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = tracker.getJobIdsForGroup(group)
+        if jobs:
+            ran_jobs[name] = sorted({
+                tracker.getStageInfo(s).name for j in jobs
+                for s in tracker.getJobInfo(j).stageIds
+                if tracker.getStageInfo(s)})
+        plan = df._jdf.queryExecution().executedPlan().toString()
         bad = {n: plan.count(n)
                for n in ("BatchEvalPython", "CartesianProduct")
                if n in plan}
         if bad:
             offenders[name] = bad
     assert not offenders, offenders
+    eager = {n: st for n, st in ran_jobs.items()
+             if n not in _BUILD_RUNS_JOBS}
+    assert not eager, f"construction scheduled jobs: {eager}"
+    # a listed entry that now builds lazily (or is gone) leaves the list
+    stale = set(_BUILD_RUNS_JOBS) - set(ran_jobs)
+    assert not stale, f"drop from _BUILD_RUNS_JOBS: {sorted(stale)}"
 
 
 def test_semdedup_bucket_collect_no_pair_join(spark):

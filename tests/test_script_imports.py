@@ -1,16 +1,21 @@
-"""Every package name a script imports must exist.
+"""Every package name a script imports must exist, and every script the
+docs name must exist.
 
 The scripts, the bench entry points, the benchmark harness and
 ``__spark_entry__.py`` are not imported by any other test, so a package
 name deleted or renamed under them would only surface when someone runs
 the script.  This parses each file (no Spark session) and resolves every
 ``from spellchecker_wasm_spark… import name`` and
-``import spellchecker_wasm_spark…`` against the package.
+``import spellchecker_wasm_spark…`` against the package.  A deleted
+script would likewise only surface when someone follows a doc that still
+names it, so every ``scripts/<name>.py`` and ``perfbench/<name>.py`` path
+in the README and the verify recipe must exist.
 """
 
 import ast
 import importlib
 import importlib.util
+import re
 from pathlib import Path
 
 import pytest
@@ -51,3 +56,14 @@ def test_script_package_imports_resolve(path):
                for line, module, name in _package_imports(path)
                if not _resolves(module, name)]
     assert not missing, missing
+
+
+DOCS = [ROOT / "README.md", *sorted(ROOT.glob(".*/skills/*/SKILL.md"))]
+_SCRIPT_PATH = re.compile(r"\b(?:scripts|perfbench)/\w+\.py\b")
+
+
+@pytest.mark.parametrize("doc", DOCS, ids=lambda p: str(p.relative_to(ROOT)))
+def test_documented_scripts_exist(doc):
+    missing = sorted({m for m in _SCRIPT_PATH.findall(doc.read_text())
+                      if not (ROOT / m).exists()})
+    assert not missing, f"{doc.name} names missing scripts: {missing}"
