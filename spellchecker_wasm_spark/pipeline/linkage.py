@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..functions.delete_expr import delete_keys_array, delete_keys_of_prefix
+from ..functions.delete_expr import delete_keys_of_prefix
 from ..functions.delete_hash_expr import delete_key_hash_explode
 from ..functions.text_expr import title_expr, title_tokens_array
 from ..operators.clustering import connected_components
@@ -57,17 +57,10 @@ def title_prefixes_array(title, config: "LinkageConfig"):
 def title_block_keys(title, config: "LinkageConfig"):
     """Column: array<string> of deduplicated blocking keys of a title
     (tokenize → prefix-truncate → combinatorial delete masks)."""
-    toks = title_tokens_array(title, config.min_token_len)
-    if config.prefix_length > config.max_edit_distance:
-        prefixes = F.array_distinct(F.transform(
-            toks, lambda t: F.substring(t, 1, config.prefix_length)))
-        return F.array_distinct(F.flatten(F.transform(
-            prefixes,
-            lambda p: delete_keys_of_prefix(p, config.max_edit_distance,
-                                            config.prefix_length))))
     return F.array_distinct(F.flatten(F.transform(
-        toks, lambda t: delete_keys_array(t, config.max_edit_distance,
-                                          config.prefix_length))))
+        title_prefixes_array(title, config),
+        lambda p: delete_keys_of_prefix(p, config.max_edit_distance,
+                                        config.prefix_length))))
 
 
 def pages_to_block_hashes(pdim: DataFrame,
@@ -90,29 +83,17 @@ def pages_to_block_hashes(pdim: DataFrame,
     rows on the protocol input — because recovering the per-page distinct
     would cost a 47M-row aggregate for join input the pair-stage
     ``distinct()`` already absorbs.  Posting sizes count such pages
-    twice, exactly as hot_keys_vocab's weights do.
+    twice, exactly as hot_keys_vocab's weights do.  Like every key
+    generator here it requires prefix_length > max_edit_distance
+    (ValueError otherwise).
     """
-    if config.prefix_length > config.max_edit_distance:
-        pref = pdim.select(
-            F.col("id").alias("page_id"), F.length("title").alias("tl"),
-            F.explode(title_prefixes_array(F.col("title"), config))
-            .alias("prefix"))
-        return delete_key_hash_explode(
-            pref, "prefix", config.max_edit_distance, config.prefix_length,
-            keep_cols=["page_id", "tl"])
-    # exotic P <= d configs: the empty-key rule reads the UNTRUNCATED token
-    # length, so explode whole tokens through the general string generator
-    # + xxhash64 (delete_key_hash_explode requires P > d)
-    toks = pdim.select(
+    pref = pdim.select(
         F.col("id").alias("page_id"), F.length("title").alias("tl"),
-        F.explode(title_tokens_array(F.col("title"), config.min_token_len))
-        .alias("tok"))
-    return (toks.select(
-        "page_id", "tl",
-        F.explode(delete_keys_array(F.col("tok"),
-                                    config.max_edit_distance,
-                                    config.prefix_length)).alias("k"))
-        .select("page_id", "tl", F.xxhash64("k").alias("block_key")))
+        F.explode(title_prefixes_array(F.col("title"), config))
+        .alias("prefix"))
+    return delete_key_hash_explode(
+        pref, "prefix", config.max_edit_distance, config.prefix_length,
+        keep_cols=["page_id", "tl"])
 
 
 def hot_keys_vocab(toks: DataFrame, config: "LinkageConfig") -> DataFrame:

@@ -499,11 +499,15 @@ FROM probes WHERE query NOT IN (SELECT query FROM top)
 # training-data pipeline operators
 # ---------------------------------------------------------------------------
 
-def _q_dedup_exact(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    return (docs.groupBy(F.md5("text").alias("text_md5"))
+def _dedup_exact(docs):
+    return (docs.where(F.col("text").isNotNull())
+            .groupBy(F.md5("text").alias("text_md5"))
             .agg(F.min("doc_id").alias("keep_id"),
                  F.count(F.lit(1)).alias("n_copies")))
+
+
+def _q_dedup_exact(spark, sf_dir):
+    return _dedup_exact(load(spark, sf_dir, "documents"))
 
 
 _O_DEDUP_EXACT = ("SELECT md5(text) AS text_md5, min(doc_id) AS keep_id, "
@@ -3194,7 +3198,7 @@ FROM nn LEFT JOIN drp d ON d.vec_id = nn.vec_id
 # click before purchase, per user, by event time).  Min-timestamp per
 # (user, step) + ordered comparisons express sequence detection without
 # a per-user sort — one narrow aggregation, then a 3-way conditional.
-def _q_event_funnel(spark, sf_dir):
+def _event_funnel(events):
     """Per-user ordered funnel: reached_view / reached_click /
     reached_purchase where each step requires a strictly later (or
     equal) first occurrence than the previous step.
@@ -3203,8 +3207,8 @@ def _q_event_funnel(spark, sf_dir):
     min timestamps per user) and a projection — no per-user sort, no
     window, no explode.  The funnel summary is a second fixed-width
     aggregation to a single row."""
-    ev = (load(spark, sf_dir, "events")
-          .where(F.col("user_id").isNotNull() & F.col("ts").isNotNull()))
+    ev = events.where(F.col("user_id").isNotNull()
+                      & F.col("ts").isNotNull())
     per_user = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts")))
         .alias("t_view"),
@@ -3222,6 +3226,10 @@ def _q_event_funnel(spark, sf_dir):
         s1.cast("int").alias("reached_view"),
         s2.cast("int").alias("reached_click"),
         s3.cast("int").alias("reached_purchase"))
+
+
+def _q_event_funnel(spark, sf_dir):
+    return _event_funnel(load(spark, sf_dir, "events"))
 
 
 _O_EVENT_FUNNEL = """
@@ -4411,24 +4419,36 @@ WHERE rnk <= 3
 # Streaming batch-equivalence under the driver oracle (VERDICT r2 #6):
 # the harness is batch-parquet, so these entries replay the fixture as a
 # bounded file stream (two time-ordered micro-batches), run the streaming
-# operator to completion, and return the final state — which provably
-# equals the batch query the existing oracle SQL describes.
+# operator to completion, and return the final state.  Rows with a batch
+# twin apply the twin's own body to the stream, so the batch oracle
+# checks the same computation.
 # ---------------------------------------------------------------------------
 
+# Stateful-shuffle width, fixed at stream start (AQE does not apply to
+# streaming state partitioning) and sized to the fixture's key space: 64
+# state stores x 2 micro-batches cost ~1-2 s of open/commit overhead per
+# streaming row for key spaces of a few thousand (r4).
+_STREAM_PARTITIONS = 8
+_STREAM_TIMEOUT_S = 300
 
-def _stream_two_file_source(spark, sf_dir, table: str, order_col: str) -> str:
-    """Materialize <table> as two parquet files split at the order_col
-    median, file2's mtime bumped so FileStreamSource replays them in
-    order — a deterministic two-micro-batch rendition of the fixture
-    that preserves per-key time order across batches.
 
-    Built with pyarrow directly (read → sort-free median split → two
-    writes): the previous Spark rendition cost three jobs (median, two
+def _read_arrow(sf_dir, table: str):
+    import pyarrow.parquet as pq
+
+    return pq.read_table(f"{sf_dir}/{table}.parquet")
+
+
+def _stream_two_file_source(tbl, order_col: str) -> str:
+    """Write the Arrow table ``tbl`` as two parquet files split at the
+    order_col median, file2's mtime bumped so FileStreamSource replays
+    them in order — a deterministic two-micro-batch rendition of the
+    fixture that preserves per-key time order across batches.  Returns
+    a fresh temp directory the caller removes.
+
+    Built with pyarrow directly (sort-free median split → two writes):
+    the previous Spark rendition cost three jobs (median, two
     coalesce(1) writes) per streaming catalog query, ~2-3s of the
-    fixture's wall at sf0.1.  The parquet schema (incl. timestamp_ntz)
-    round-trips byte-identically through pyarrow, so the streaming
-    reader sees exactly the driver-generated schema."""
-    import glob
+    fixture's wall at sf0.1."""
     import os
     import tempfile
     import time
@@ -4437,8 +4457,7 @@ def _stream_two_file_source(spark, sf_dir, table: str, order_col: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    d = tempfile.mkdtemp(prefix=f"swspark_stream_{table}_")
-    tbl = pq.read_table(os.path.join(sf_dir, f"{table}.parquet"))
+    d = tempfile.mkdtemp(prefix="swspark_stream_")
     col = tbl.column(order_col)
     key = (col.cast(pa.int64()) if pa.types.is_timestamp(col.type)
            else col).cast(pa.float64())
@@ -4448,63 +4467,62 @@ def _stream_two_file_source(spark, sf_dir, table: str, order_col: str) -> str:
     pq.write_table(tbl.filter(mask), d + "/f1/part-0.parquet")
     pq.write_table(tbl.filter(pc.invert(mask)), d + "/f2/part-0.parquet")
     later = time.time() + 60
-    for p in glob.glob(d + "/f2/*.parquet"):
-        os.utime(p, (later, later))
+    os.utime(d + "/f2/part-0.parquet", (later, later))
     return d
 
 
-class _stream_state_partitions:
-    """Stateful-shuffle width is fixed at stream start (AQE does not
-    apply to streaming state partitioning) — size it to the fixture's
-    key space: 64 state stores × 2 micro-batches cost ~1-2 s of
-    open/commit overhead per streaming catalog entry for key spaces of
-    a few thousand (first measured on stream_event_sessions, r4; round
-    6 applies the same lever to every stateful streaming row).  A
-    production stream sizes this to its key space —
-    SPARK_GRAFT_STREAM_PARTITIONS overrides (scale-parameterised, not
-    a local[32] constant: state-store count is a per-key-space knob,
-    independent of core count)."""
+def _run_stream(spark, row: str, tbl, order_col: str, body,
+                mode: str = "complete",
+                one_file_per_trigger: bool = True) -> DataFrame:
+    """Replay ``tbl`` through ``body`` as a file stream and return the
+    final state: split it into two mtime-ordered files, read them (one
+    file per trigger unless told otherwise), run ``body(stream)`` into a
+    memory sink (availableNow, output ``mode``) under _STREAM_PARTITIONS
+    shuffle partitions, and return the sink's table.  The schema comes
+    from the Arrow table, so building runs no inference job; the split
+    directory is removed once the query has ended, and a query still
+    running after _STREAM_TIMEOUT_S is stopped and raises."""
+    import shutil
+    import uuid
 
-    def __init__(self, spark, n: int = 8):
-        import os as _os
-        self.spark = spark
-        self.n = _os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", str(n))
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.n)
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
+    schema = from_arrow_schema(tbl.schema, prefer_timestamp_ntz=True)
+    path = _stream_two_file_source(tbl, order_col)
+    name = f"{row}_{uuid.uuid4().hex[:8]}"
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(_STREAM_PARTITIONS))
+    try:
+        reader = spark.readStream.schema(schema)
+        if one_file_per_trigger:
+            reader = reader.option("maxFilesPerTrigger", "1")
+        q = (body(reader.parquet(path + "/*")).writeStream.format("memory")
+             .queryName(name).outputMode(mode)
+             .trigger(availableNow=True).start())
+        if not q.awaitTermination(_STREAM_TIMEOUT_S):
+            q.stop()
+            raise TimeoutError(f"{row}: streaming query did not finish "
+                               f"within {_STREAM_TIMEOUT_S} s")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        shutil.rmtree(path, ignore_errors=True)
+    return spark.table(name)
 
 
 def _q_stream_dedup_exact(spark, sf_dir):
     """dedup_exact as a STREAMING aggregation: incremental
     (min(doc_id), count) state per content hash maintained across
     micro-batches (complete-mode stateful agg — the streaming form a
-    continuously-ingesting pipeline runs); final state == the batch
-    groupBy, so the existing dedup_exact oracle applies verbatim.  The
-    first-arrival row-dedup variant (streaming/dedup.stream_exact_dedup,
+    continuously-ingesting pipeline runs).  The stream runs the batch
+    row's own body (_dedup_exact), so its final state is the batch
+    groupBy and the dedup_exact oracle checks it.  The first-arrival
+    row-dedup variant (streaming/dedup.stream_exact_dedup,
     dropDuplicatesWithinWatermark) stays pytest-covered — its kept-row
     identity is arrival-order-defined, which no value-hash oracle can
     pin."""
-    import uuid
-
-    schema = load(spark, sf_dir, "documents").schema
-    path = _stream_two_file_source(spark, sf_dir, "documents", "doc_id")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(path + "/*"))
-    agg = (stream.where(F.col("text").isNotNull())
-           .groupBy(F.md5("text").alias("text_md5"))
-           .agg(F.min("doc_id").alias("keep_id"),
-                F.count(F.lit(1)).alias("n_copies")))
-    name = "stream_dedup_" + uuid.uuid4().hex[:8]
-    with _stream_state_partitions(spark):
-        q = (agg.writeStream.format("memory").queryName(name)
-             .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination(300)
-    return spark.table(name)
+    return _run_stream(spark, "stream_dedup_exact",
+                       _read_arrow(sf_dir, "documents"), "doc_id",
+                       _dedup_exact)
 
 
 def _q_stream_event_sessions(spark, sf_dir):
@@ -4515,29 +4533,14 @@ def _q_stream_event_sessions(spark, sf_dir):
     state, provably equal to the batch window computation because the
     ts-median split preserves per-user event order across batches
     (counts are monotone, so max == last)."""
-    import uuid
-
     from .streaming.sessions import sessionize_stream
 
-    schema = load(spark, sf_dir, "events").schema
-    path = _stream_two_file_source(spark, sf_dir, "events", "ts")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(path + "/*"))
-    out = sessionize_stream(stream, gap_seconds=1800, output_mode="update")
-    name = "stream_sess_" + uuid.uuid4().hex[:8]
-    # stateful-shuffle width is fixed at stream start (AQE does not apply
-    # to streaming state partitioning) — size it to the fixture: 64 state
-    # stores x 2 micro-batches was ~6s of open/commit overhead for a
-    # 1.5k-user table; a production stream sizes this to its key space
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (out.writeStream.format("memory").queryName(name)
-             .outputMode("update").trigger(availableNow=True).start())
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return (spark.table(name).groupBy("user_id")
+    out = _run_stream(
+        spark, "stream_event_sessions", _read_arrow(sf_dir, "events"), "ts",
+        lambda s: sessionize_stream(s, gap_seconds=1800,
+                                    output_mode="update"),
+        mode="update")
+    return (out.groupBy("user_id")
             .agg(F.max("n_events").alias("n_events"),
                  F.max("n_sessions").alias("n_sessions")))
 
@@ -4549,69 +4552,26 @@ def _q_stream_windowed_counts(spark, sf_dir):
     emits its final value — provably equal to the batch tumbling-window
     aggregation the oracle computes (epoch-floored 10-minute buckets,
     money as exact integer cents)."""
-    import uuid
-
     from .streaming.ingest import windowed_event_counts
 
-    schema = load(spark, sf_dir, "events").schema
-    path = _stream_two_file_source(spark, sf_dir, "events", "ts")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(path + "/*"))
-    agg = windowed_event_counts(stream, window="10 minutes")
-    name = "stream_wc_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (agg.writeStream.format("memory").queryName(name)
-             .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return (spark.table(name)
-            .select(F.col("window_start").cast("timestamp_ntz")
-                    .alias("window_start"),
-                    "event_type", "n", "value_cents"))
+    out = _run_stream(
+        spark, "stream_windowed_counts", _read_arrow(sf_dir, "events"),
+        "ts", lambda s: windowed_event_counts(s, window="10 minutes"))
+    return out.select(F.col("window_start").cast("timestamp_ntz")
+                      .alias("window_start"),
+                      "event_type", "n", "value_cents")
 
 
 def _q_stream_event_funnel(spark, sf_dir):
     """event_funnel as a STREAM: the three conditional-min timestamps
     are monotone aggregates, so per-user funnel state is exactly three
     scalars maintained across micro-batches (complete-mode stateful
-    agg); the ordered-step flags are a stateless projection of the
-    final state, so the batch event_funnel oracle applies verbatim —
-    streamed result == batch result, proven by the same value hash."""
-    import uuid
-
-    schema = load(spark, sf_dir, "events").schema
-    path = _stream_two_file_source(spark, sf_dir, "events", "ts")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(path + "/*"))
-    per_user = (stream
-                .where(F.col("user_id").isNotNull()
-                       & F.col("ts").isNotNull())
-                .groupBy("user_id").agg(
-                    F.min(F.when(F.col("event_type") == "view",
-                                 F.col("ts"))).alias("t_view"),
-                    F.min(F.when(F.col("event_type") == "click",
-                                 F.col("ts"))).alias("t_click"),
-                    F.min(F.when(F.col("event_type") == "purchase",
-                                 F.col("ts"))).alias("t_purchase")))
-    name = "stream_funnel_" + uuid.uuid4().hex[:8]
-    with _stream_state_partitions(spark):
-        q = (per_user.writeStream.format("memory").queryName(name)
-             .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination(300)
-    state = spark.table(name)
-    s1 = F.col("t_view").isNotNull()
-    s2 = s1 & F.col("t_click").isNotNull() & (F.col("t_click")
-                                              >= F.col("t_view"))
-    s3 = s2 & F.col("t_purchase").isNotNull() & (F.col("t_purchase")
-                                                 >= F.col("t_click"))
-    return state.select(
-        "user_id",
-        s1.cast("int").alias("reached_view"),
-        s2.cast("int").alias("reached_click"),
-        s3.cast("int").alias("reached_purchase"))
+    agg), and the ordered-step flags are a stateless projection of that
+    state.  The stream runs the batch row's own body (_event_funnel),
+    flags included, so the event_funnel oracle checks the same
+    computation."""
+    return _run_stream(spark, "stream_event_funnel",
+                       _read_arrow(sf_dir, "events"), "ts", _event_funnel)
 
 
 _O_STREAM_WINDOWED_COUNTS = """
@@ -4895,14 +4855,19 @@ _LK_RESIDUES = ("(h * h + h) % 2147483647 AS g1",
                 "(h2 * h2 + h2) % 2147483647 AS g2")
 
 
+def _lk_slugs(spark, sf_dir):
+    """(p_partkey, h, s): each part entity's hash and base slug."""
+    base = (load(spark, sf_dir, "part")
+            .select("p_partkey", *[F.expr(x) for x in _LK_HASHES]))
+    g = base.select("p_partkey", "h", *[F.expr(x) for x in _LK_RESIDUES])
+    return g.select("p_partkey", "h", F.expr(_LK_SLUG).alias("s"))
+
+
 def _lk_pages(spark, sf_dir):
     """pages(page_id, title): 3 deterministic variants per part entity.
     ONE scan — the variants explode from an inline array rather than a
     3-branch union (which would re-scan part per branch)."""
-    base = (load(spark, sf_dir, "part")
-            .select("p_partkey", *[F.expr(x) for x in _LK_HASHES]))
-    g = base.select("p_partkey", "h", *[F.expr(x) for x in _LK_RESIDUES])
-    sl = g.select("p_partkey", "h", F.expr(_LK_SLUG).alias("s"))
+    sl = _lk_slugs(spark, sf_dir)
     variants = F.explode(F.expr(
         f"array(named_struct('v', 0L, 't', s), "
         f"named_struct('v', 1L, 't', {_LK_V1}), "
@@ -5015,6 +4980,14 @@ def _lk_metrics(pages, pred):
         .alias("f1"))
 
 
+def _lk_recall(pages, cand):
+    """Blocking scorecard (n_cand, n_tp, n_truth, recall) of an (id_a,
+    id_b) candidate set: _lk_metrics with the candidates as predictions,
+    so every blocking family is scored against one truth."""
+    return _lk_metrics(pages, cand).select(
+        F.col("n_pred").alias("n_cand"), "n_tp", "n_truth", "recall")
+
+
 def _q_linkage_f1(spark, sf_dir):
     """North-rule metric under the driver oracle: run blocking + pairwise
     OSA scoring over the labeled page fixture and emit one row of
@@ -5087,17 +5060,23 @@ pred AS (SELECT id_a, id_b FROM cand
          WHERE damerau_levenshtein(ta, tb) <= 2)"""
 
 
-def _lk_sql_metrics(pred_cte: str) -> str:
-    """truth CTE + metric SELECT vs an arbitrary (id_a, id_b) pair CTE."""
-    return f""",
-truth AS (SELECT a.page_id AS id_a, b.page_id AS id_b
+# complete within-entity truth: every pair of pages of one part entity
+_LK_SQL_TRUTH = """truth AS (SELECT a.page_id AS id_a, b.page_id AS id_b
           FROM pages a JOIN pages b
             ON a.page_id // 10 = b.page_id // 10
-           AND a.page_id < b.page_id),
+           AND a.page_id < b.page_id)"""
+
+
+def _lk_sql_metrics(pred_cte: str, select: str = "*") -> str:
+    """truth CTE + metric CTE vs an arbitrary (id_a, id_b) pair CTE, then
+    SELECT ``select`` over the metric row (n_truth, n_pred, n_tp,
+    precision, recall, f1)."""
+    return f""",
+{_LK_SQL_TRUTH},
 m AS (SELECT p.id_a AS pa, t.id_a AS ta
       FROM {pred_cte} p FULL OUTER JOIN truth t
-        ON p.id_a = t.id_a AND p.id_b = t.id_b)
-SELECT
+        ON p.id_a = t.id_a AND p.id_b = t.id_b),
+metrics AS (SELECT
   CAST(sum(CASE WHEN ta IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_truth,
   CAST(sum(CASE WHEN pa IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_pred,
   CAST(sum(CASE WHEN pa IS NOT NULL AND ta IS NOT NULL
@@ -5112,9 +5091,13 @@ SELECT
                THEN 1 ELSE 0 END) AS DOUBLE)
       / (sum(CASE WHEN pa IS NOT NULL THEN 1 ELSE 0 END)
          + sum(CASE WHEN ta IS NOT NULL THEN 1 ELSE 0 END)) AS f1
-FROM m
+FROM m)
+SELECT {select} FROM metrics
 """
 
+
+# the blocking scorecard: _lk_recall's columns
+_LK_SQL_RECALL = "n_pred AS n_cand, n_tp, n_truth, recall"
 
 _O_LINKAGE_F1 = ("WITH RECURSIVE" + _LK_SQL_FIXTURE
                  + _lk_sql_metrics("pred"))
@@ -5646,6 +5629,22 @@ WHERE n_members >= 2
 """)
 
 
+def _lk_cells(spark, sf_dir):
+    """(component, entity, n_pt): the predicted-cluster x truth-entity
+    intersection cells the extrinsic cluster metrics (B³, purity, ARI)
+    aggregate."""
+    _, asg = _lk_cc_asg(spark, sf_dir)
+    return (asg.withColumn("entity", F.expr("page_id div 10"))
+            .groupBy("component", "entity")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_pt")))
+
+
+_LK_SQL_CELLS = ("WITH RECURSIVE" + _LK_SQL_FIXTURE + _LK_SQL_CC + """,
+cells AS (SELECT component, node // 10 AS entity,
+                 CAST(count(*) AS BIGINT) AS n_pt
+          FROM asg GROUP BY component, node // 10)""")
+
+
 def _q_bcubed_quality(spark, sf_dir):
     """B-cubed (B³) precision/recall/F1 of the predicted entity
     clustering against the labeled truth partition — the standard
@@ -5675,10 +5674,7 @@ def _q_bcubed_quality(spark, sf_dir):
     (N rows in, ≤ #clusters+#entities out); n_p/n_t re-aggregate and
     join back on the tiny cells table; the final agg is one row.
     Nothing beyond clustering itself shuffles more than (long, long)."""
-    pages, asg = _lk_cc_asg(spark, sf_dir)
-    cells = (asg.withColumn("entity", F.expr("page_id div 10"))
-             .groupBy("component", "entity")
-             .agg(F.count(F.lit(1)).cast("bigint").alias("n_pt")))
+    cells = _lk_cells(spark, sf_dir)
     n_p = cells.groupBy("component").agg(F.sum("n_pt").alias("n_p"))
     n_t = cells.groupBy("entity").agg(F.sum("n_pt").alias("n_t"))
     j = cells.join(n_p, "component").join(n_t, "entity")
@@ -5697,10 +5693,7 @@ def _q_bcubed_quality(spark, sf_dir):
         (F.lit(2.0) * p * r / (p + r)).alias("bcubed_f1"))
 
 
-_O_BCUBED_QUALITY = ("WITH RECURSIVE" + _LK_SQL_FIXTURE + _LK_SQL_CC + """,
-cells AS (SELECT component, node // 10 AS entity,
-                 CAST(count(*) AS BIGINT) AS n_pt
-          FROM asg GROUP BY component, node // 10),
+_O_BCUBED_QUALITY = (_LK_SQL_CELLS + """,
 np AS (SELECT component, CAST(sum(n_pt) AS BIGINT) AS n_p
        FROM cells GROUP BY component),
 nt AS (SELECT entity, CAST(sum(n_pt) AS BIGINT) AS n_t
@@ -5749,10 +5742,7 @@ def _q_purity_quality(spark, sf_dir):
     two tiny per-group max re-aggregations, three 1-row reductions
     attached by constant-size BNLJ (the sanctioned scalar-attach
     pattern)."""
-    pages, asg = _lk_cc_asg(spark, sf_dir)
-    cells = (asg.withColumn("entity", F.expr("page_id div 10"))
-             .groupBy("component", "entity")
-             .agg(F.count(F.lit(1)).cast("bigint").alias("n_pt")))
+    cells = _lk_cells(spark, sf_dir)
     sum_pmax = (cells.groupBy("component").agg(F.max("n_pt").alias("m"))
                 .agg(F.sum("m").cast("bigint").alias("sum_pmax")))
     sum_emax = (cells.groupBy("entity").agg(F.max("n_pt").alias("m"))
@@ -5767,10 +5757,7 @@ def _q_purity_quality(spark, sf_dir):
         (F.lit(2.0) * p * ip / (p + ip)).alias("purity_f1"))
 
 
-_O_PURITY_QUALITY = ("WITH RECURSIVE" + _LK_SQL_FIXTURE + _LK_SQL_CC + """,
-cells AS (SELECT component, node // 10 AS entity,
-                 CAST(count(*) AS BIGINT) AS n_pt
-          FROM asg GROUP BY component, node // 10),
+_O_PURITY_QUALITY = (_LK_SQL_CELLS + """,
 pm AS (SELECT CAST(sum(m) AS BIGINT) AS sum_pmax
        FROM (SELECT max(n_pt) AS m FROM cells GROUP BY component)),
 em AS (SELECT CAST(sum(m) AS BIGINT) AS sum_emax
@@ -5806,10 +5793,7 @@ def _q_ari_quality(spark, sf_dir):
     Scale shape: identical to bcubed_quality — one cells aggregation
     over the assignments, two re-aggregations of the tiny cells table,
     three single-row reductions cross-joined at the end."""
-    pages, asg = _lk_cc_asg(spark, sf_dir)
-    cells = (asg.withColumn("entity", F.expr("page_id div 10"))
-             .groupBy("component", "entity")
-             .agg(F.count(F.lit(1)).cast("bigint").alias("n_pt")))
+    cells = _lk_cells(spark, sf_dir)
     c2 = "(x * (x - 1)) div 2"
     a_ = cells.agg(
         F.sum("n_pt").cast("bigint").alias("n_items"),
@@ -5828,10 +5812,7 @@ def _q_ari_quality(spark, sf_dir):
             .withColumn("ari", F.col("ari_num") / F.col("ari_den")))
 
 
-_O_ARI_QUALITY = ("WITH RECURSIVE" + _LK_SQL_FIXTURE + _LK_SQL_CC + """,
-cells AS (SELECT component, node // 10 AS entity,
-                 CAST(count(*) AS BIGINT) AS n_pt
-          FROM asg GROUP BY component, node // 10),
+_O_ARI_QUALITY = (_LK_SQL_CELLS + """,
 aa AS (SELECT CAST(sum(n_pt) AS BIGINT) AS n_items,
               CAST(sum((n_pt * (n_pt - 1)) // 2) AS BIGINT) AS a
        FROM cells),
@@ -5862,12 +5843,9 @@ _LK_V3 = (f"concat(substr(s, 1, {_LK_D3} - 1), "
 
 
 def _lk_new_pages(spark, sf_dir):
-    base = (load(spark, sf_dir, "part")
-            .select("p_partkey", *[F.expr(x) for x in _LK_HASHES]))
-    g = base.select("p_partkey", "h", *[F.expr(x) for x in _LK_RESIDUES])
-    sl = g.select("p_partkey", "h", F.expr(_LK_SLUG).alias("s"))
-    return sl.select((F.col("p_partkey") * 10 + 3).alias("page_id"),
-                     F.expr(_LK_V3).alias("title"))
+    return _lk_slugs(spark, sf_dir).select(
+        (F.col("p_partkey") * 10 + 3).alias("page_id"),
+        F.expr(_LK_V3).alias("title"))
 
 
 # best-match order key: distance then component — packed into ONE BIGINT
@@ -5958,43 +5936,14 @@ FROM newpages n LEFT JOIN bestn b ON n.page_id = b.new_id
 """)
 
 
-def _stream_two_file_source_df(df, order_col: str) -> str:
-    """_stream_two_file_source for a DERIVED DataFrame (no backing
-    parquet table): materialize via Arrow into two mtime-ordered files
-    split at the order_col midpoint.  Inputs are small derived fixtures
-    (the incremental page batch: |part| rows), so one toPandas is the
-    cheap path."""
-    import glob
-    import os
-    import tempfile
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pdf = df.toPandas().sort_values(order_col, kind="mergesort")
-    d = tempfile.mkdtemp(prefix="swspark_stream_df_")
-    os.makedirs(d + "/f1"), os.makedirs(d + "/f2")
-    n = len(pdf)
-    pq.write_table(pa.Table.from_pandas(pdf.iloc[:n // 2],
-                                        preserve_index=False),
-                   d + "/f1/part-0.parquet")
-    pq.write_table(pa.Table.from_pandas(pdf.iloc[n // 2:],
-                                        preserve_index=False),
-                   d + "/f2/part-0.parquet")
-    later = time.time() + 60
-    for p in glob.glob(d + "/f2/*.parquet"):
-        os.utime(p, (later, later))
-    return d
-
-
 def _q_stream_incremental_linkage(spark, sf_dir):
     """incremental_linkage as a STREAM: new pages arrive in micro-batches
     and are matched against the STANDING cluster index via a
     stream-static join — the continuous-arrival rendition of the
     steady-state ER operation (the batch query is the backfill form).
-    Final state == the batch assignment, so the incremental_linkage
-    oracle applies verbatim.
+    The stream runs the batch row's own assignment
+    (assign_new_records + _lk_correct, here over a prebuilt standing
+    index), so the incremental_linkage oracle checks it.
 
     Plan shape: the static side (existing pages' hash delete keys +
     title + component) is computed once, persisted, and re-read from
@@ -6010,14 +5959,10 @@ def _q_stream_incremental_linkage(spark, sf_dir):
     change a min, and per-batch dedup would add a stateful op for pure
     cost at this fan-out (~29 keys/page).  Assignment mechanics live in
     operators/incremental.assign_new_records (streaming path)."""
-    import uuid
-
     pages, asg = _lk_cc_asg(spark, sf_dir)
     eb = standing_index(pages, asg).persist()
     eb.count()  # materialize the standing index before the stream starts
 
-    new = _lk_new_pages(spark, sf_dir)
-    path = _stream_two_file_source_df(new, "page_id")
     # r6 (r5 VERDICT #4): ONE availableNow micro-batch over both files —
     # the per-trigger Structured-Streaming floor (~5 s each here) was
     # 2/3 of this row's wall while adding nothing the oracle or the
@@ -6025,15 +5970,13 @@ def _q_stream_incremental_linkage(spark, sf_dir):
     # drive the operators with maxFilesPerTrigger=1 sources) don't
     # already pin; complete-mode state and the batch-equivalence oracle
     # are trigger-count-invariant by construction.
-    stream = spark.readStream.schema(new.schema).parquet(path + "/*")
-    out = _lk_correct(assign_new_records(stream, pages, asg, index=eb))
-    name = "stream_inc_linkage_" + uuid.uuid4().hex[:8]
-    with _stream_state_partitions(spark):
-        q = (out.writeStream.format("memory").queryName(name)
-             .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination(300)
+    out = _run_stream(
+        spark, "stream_incremental_linkage",
+        _lk_new_pages(spark, sf_dir).toArrow(), "page_id",
+        lambda s: _lk_correct(assign_new_records(s, pages, asg, index=eb)),
+        one_file_per_trigger=False)
     eb.unpersist()
-    return spark.table(name)
+    return out
 
 
 def _q_er_threshold_sweep(spark, sf_dir):
@@ -6072,11 +6015,8 @@ def _q_er_threshold_sweep(spark, sf_dir):
                / (F.col("n_pred") + F.col("n_truth"))).alias("f1"))
 
 
-_O_ER_THRESHOLD_SWEEP = ("WITH RECURSIVE" + _LK_SQL_FIXTURE + """,
-truth AS (SELECT a.page_id AS id_a, b.page_id AS id_b
-          FROM pages a JOIN pages b
-            ON a.page_id // 10 = b.page_id // 10
-           AND a.page_id < b.page_id),
+_O_ER_THRESHOLD_SWEEP = ("WITH RECURSIVE" + _LK_SQL_FIXTURE
+                         + ",\n" + _LK_SQL_TRUTH + """,
 predd AS (SELECT c.id_a, c.id_b, damerau_levenshtein(c.ta, c.tb) AS d
           FROM cand c WHERE damerau_levenshtein(c.ta, c.tb) <= 2),
 sc AS (SELECT p.id_a, p.d,
@@ -6656,11 +6596,7 @@ _FS_SQL_DEC_ALL = _FS_SQL_DEC.replace(
 assert _FS_SQL_DEC_ALL != _FS_SQL_DEC  # replace() must fire
 
 _O_FS_CALIBRATION = ("WITH RECURSIVE" + _LK_SQL_FIXTURE
-                     + _FS_SQL_DEC_ALL + f""",
-truth AS (SELECT a.page_id AS id_a, b.page_id AS id_b
-          FROM pages a JOIN pages b
-            ON a.page_id // 10 = b.page_id // 10
-           AND a.page_id < b.page_id),
+                     + _FS_SQL_DEC_ALL + ",\n" + _LK_SQL_TRUTH + f""",
 jt AS (SELECT f.weight_mb,
               CASE WHEN t.id_a IS NOT NULL THEN 1 ELSE 0 END AS it
        FROM fsdec f LEFT JOIN truth t
@@ -6956,11 +6892,7 @@ def _q_blocking_compare(spark, sf_dir):
 
 
 _O_BLOCKING_COMPARE = ("WITH RECURSIVE" + _LK_SQL_FIXTURE
-                       + _SNM_SQL_RANKS + """,
-truth AS (SELECT a.page_id AS id_a, b.page_id AS id_b
-          FROM pages a JOIN pages b
-            ON a.page_id // 10 = b.page_id // 10
-           AND a.page_id < b.page_id),
+                       + _SNM_SQL_RANKS + ",\n" + _LK_SQL_TRUTH + """,
 snmf AS (SELECT id_a, id_b, max(s1) AS s1 FROM (
              SELECT id_a, id_b, 1 AS s1 FROM snm1
              UNION ALL SELECT id_a, id_b, 0 FROM snm2)
@@ -7099,16 +7031,7 @@ def _q_qgram_blocking(spark, sf_dir):
     cand = (_lk_gram_pair_counts(spark, sf_dir)
             .where(F.abs(F.col("tla") - F.col("tlb")) <= 2)
             .select("id_a", "id_b"))
-    truth = _lk_truth(pages)
-    m = (cand.withColumn("ic", F.lit(1))
-         .join(truth, ["id_a", "id_b"], "full_outer"))
-    return m.agg(
-        F.sum(F.coalesce("ic", F.lit(0))).cast("bigint").alias("n_cand"),
-        F.sum(F.when(F.col("ic").isNotNull() & F.col("it").isNotNull(), 1)
-              .otherwise(0)).cast("bigint").alias("n_tp"),
-        F.sum(F.coalesce("it", F.lit(0))).cast("bigint").alias("n_truth")
-    ).select("n_cand", "n_tp", "n_truth",
-             (F.col("n_tp") / F.col("n_truth")).alias("recall"))
+    return _lk_recall(pages, cand)
 
 
 _O_QGRAM_BLOCKING = ("WITH " + _LK_SQL_PAGES + """,
@@ -7121,25 +7044,8 @@ qg AS (SELECT DISTINCT page_id, length(title) AS tl, gram
 cand AS (SELECT DISTINCT a.page_id AS id_a, b.page_id AS id_b
          FROM qg a JOIN qg b
            ON a.gram = b.gram AND a.page_id < b.page_id
-          AND abs(a.tl - b.tl) <= 2),
-truth AS (SELECT a.page_id AS id_a, b.page_id AS id_b
-          FROM pages a JOIN pages b
-            ON a.page_id // 10 = b.page_id // 10
-           AND a.page_id < b.page_id),
-m AS (SELECT c.id_a AS ca, t.id_a AS ta
-      FROM cand c FULL OUTER JOIN truth t
-        ON c.id_a = t.id_a AND c.id_b = t.id_b)
-SELECT CAST(sum(CASE WHEN ca IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_cand,
-       CAST(sum(CASE WHEN ca IS NOT NULL AND ta IS NOT NULL
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_tp,
-       CAST(sum(CASE WHEN ta IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_truth,
-       CAST(sum(CASE WHEN ca IS NOT NULL AND ta IS NOT NULL
-                THEN 1 ELSE 0 END) AS DOUBLE)
-           / sum(CASE WHEN ta IS NOT NULL THEN 1 ELSE 0 END) AS recall
-FROM m
-""")
+          AND abs(a.tl - b.tl) <= 2)"""
+    + _lk_sql_metrics("cand", _LK_SQL_RECALL))
 
 
 # US-English Soundex code per letter a..z (9 = H/W, transparent to run
@@ -7182,16 +7088,7 @@ def _q_soundex_blocking(spark, sf_dir):
                    & (F.col("a.page_id") < F.col("b.page_id")))
             .select(F.col("a.page_id").alias("id_a"),
                     F.col("b.page_id").alias("id_b")))
-    truth = _lk_truth(pages)
-    m = (cand.withColumn("ic", F.lit(1))
-         .join(truth, ["id_a", "id_b"], "full_outer"))
-    return m.agg(
-        F.sum(F.coalesce("ic", F.lit(0))).cast("bigint").alias("n_cand"),
-        F.sum(F.when(F.col("ic").isNotNull() & F.col("it").isNotNull(), 1)
-              .otherwise(0)).cast("bigint").alias("n_tp"),
-        F.sum(F.coalesce("it", F.lit(0))).cast("bigint").alias("n_truth")
-    ).select("n_cand", "n_tp", "n_truth",
-             (F.col("n_tp") / F.col("n_truth")).alias("recall"))
+    return _lk_recall(pages, cand)
 
 
 _O_SOUNDEX_BLOCKING = ("WITH " + _LK_SQL_PAGES + f""",
@@ -7216,25 +7113,8 @@ sx AS (SELECT page_id,
        FROM sr),
 cand AS (SELECT a.page_id AS id_a, b.page_id AS id_b
          FROM sx a JOIN sx b
-           ON a.sx = b.sx AND a.page_id < b.page_id),
-truth AS (SELECT a.page_id AS id_a, b.page_id AS id_b
-          FROM pages a JOIN pages b
-            ON a.page_id // 10 = b.page_id // 10
-           AND a.page_id < b.page_id),
-m AS (SELECT c.id_a AS ca, t.id_a AS ta
-      FROM cand c FULL OUTER JOIN truth t
-        ON c.id_a = t.id_a AND c.id_b = t.id_b)
-SELECT CAST(sum(CASE WHEN ca IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_cand,
-       CAST(sum(CASE WHEN ca IS NOT NULL AND ta IS NOT NULL
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_tp,
-       CAST(sum(CASE WHEN ta IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_truth,
-       CAST(sum(CASE WHEN ca IS NOT NULL AND ta IS NOT NULL
-                THEN 1 ELSE 0 END) AS DOUBLE)
-           / sum(CASE WHEN ta IS NOT NULL THEN 1 ELSE 0 END) AS recall
-FROM m
-""")
+           ON a.sx = b.sx AND a.page_id < b.page_id)"""
+    + _lk_sql_metrics("cand", _LK_SQL_RECALL))
 
 
 _SUFFIX_MIN_LEN = 5    # shortest suffix emitted as a block key
@@ -7286,16 +7166,7 @@ def _q_suffix_blocking(spark, sf_dir):
             .select(F.col("a.page_id").alias("id_a"),
                     F.col("b.page_id").alias("id_b"))
             .distinct())
-    truth = _lk_truth(pages)
-    m = (cand.withColumn("ic", F.lit(1))
-         .join(truth, ["id_a", "id_b"], "full_outer"))
-    return m.agg(
-        F.sum(F.coalesce("ic", F.lit(0))).cast("bigint").alias("n_cand"),
-        F.sum(F.when(F.col("ic").isNotNull() & F.col("it").isNotNull(), 1)
-              .otherwise(0)).cast("bigint").alias("n_tp"),
-        F.sum(F.coalesce("it", F.lit(0))).cast("bigint").alias("n_truth")
-    ).select("n_cand", "n_tp", "n_truth",
-             (F.col("n_tp") / F.col("n_truth")).alias("recall"))
+    return _lk_recall(pages, cand)
 
 
 _O_SUFFIX_BLOCKING = ("WITH " + _LK_SQL_PAGES + f""",
@@ -7310,25 +7181,8 @@ ok AS (SELECT suf FROM sf GROUP BY suf
 cand AS (SELECT DISTINCT a.page_id AS id_a, b.page_id AS id_b
          FROM sf a JOIN sf b
            ON a.suf = b.suf AND a.page_id < b.page_id
-         WHERE a.suf IN (SELECT suf FROM ok)),
-truth AS (SELECT a.page_id AS id_a, b.page_id AS id_b
-          FROM pages a JOIN pages b
-            ON a.page_id // 10 = b.page_id // 10
-           AND a.page_id < b.page_id),
-m AS (SELECT c.id_a AS ca, t.id_a AS ta
-      FROM cand c FULL OUTER JOIN truth t
-        ON c.id_a = t.id_a AND c.id_b = t.id_b)
-SELECT CAST(sum(CASE WHEN ca IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_cand,
-       CAST(sum(CASE WHEN ca IS NOT NULL AND ta IS NOT NULL
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_tp,
-       CAST(sum(CASE WHEN ta IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_truth,
-       CAST(sum(CASE WHEN ca IS NOT NULL AND ta IS NOT NULL
-                THEN 1 ELSE 0 END) AS DOUBLE)
-           / sum(CASE WHEN ta IS NOT NULL THEN 1 ELSE 0 END) AS recall
-FROM m
-""")
+         WHERE a.suf IN (SELECT suf FROM ok))"""
+    + _lk_sql_metrics("cand", _LK_SQL_RECALL))
 
 
 # Canopy thresholds in SHARED-3-GRAM units (similarity, so loose means
@@ -7466,19 +7320,10 @@ def _q_canopy_blocking(spark, sf_dir, max_component=None):
             .select(F.col("x.id").alias("id_a"),
                     F.col("y.id").alias("id_b"))
             .distinct())
-    truth = _lk_truth(pages)
-    m = (cand.withColumn("ic", F.lit(1))
-         .join(truth, ["id_a", "id_b"], "full_outer"))
     n_centers = cent.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_centers"))
-    summary = m.agg(
-        F.sum(F.coalesce("ic", F.lit(0))).cast("bigint").alias("n_cand"),
-        F.sum(F.when(F.col("ic").isNotNull() & F.col("it").isNotNull(), 1)
-              .otherwise(0)).cast("bigint").alias("n_tp"),
-        F.sum(F.coalesce("it", F.lit(0))).cast("bigint").alias("n_truth"))
-    return (n_centers.crossJoin(summary).crossJoin(drop)
-            .select("n_centers", "n_cand", "n_tp", "n_truth",
-                    (F.col("n_tp") / F.col("n_truth")).alias("recall"),
+    return (n_centers.crossJoin(_lk_recall(pages, cand)).crossJoin(drop)
+            .select("n_centers", "n_cand", "n_tp", "n_truth", "recall",
                     "n_dropped_components", "n_dropped_pages"))
 
 
@@ -7539,34 +7384,18 @@ memb AS (SELECT c.cmp, c.cid, p.id
          WHERE len(list_intersect(c.cgs, p.gs)) >= {_CANOPY_LOOSE}),
 cand AS (SELECT DISTINCT x.id AS id_a, y.id AS id_b
          FROM memb x JOIN memb y
-           ON x.cid = y.cid AND x.cmp = y.cmp AND x.id < y.id),
-truth AS (SELECT a.page_id AS id_a, b.page_id AS id_b
-          FROM pages a JOIN pages b
-            ON a.page_id // 10 = b.page_id // 10
-           AND a.page_id < b.page_id),
-m AS (SELECT c.id_a AS ca, t.id_a AS ta
-      FROM cand c FULL OUTER JOIN truth t
-        ON c.id_a = t.id_a AND c.id_b = t.id_b)
-SELECT (SELECT CAST(count(*) AS BIGINT) FROM cent) AS n_centers,
-       CAST(sum(CASE WHEN ca IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_cand,
-       CAST(sum(CASE WHEN ca IS NOT NULL AND ta IS NOT NULL
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_tp,
-       CAST(sum(CASE WHEN ta IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_truth,
-       CAST(sum(CASE WHEN ca IS NOT NULL AND ta IS NOT NULL
-                THEN 1 ELSE 0 END) AS DOUBLE)
-           / sum(CASE WHEN ta IS NOT NULL THEN 1 ELSE 0 END) AS recall,
+           ON x.cid = y.cid AND x.cmp = y.cmp AND x.id < y.id)"""
+            + _lk_sql_metrics("cand", f"""
+       (SELECT CAST(count(*) AS BIGINT) FROM cent) AS n_centers,
+       {_LK_SQL_RECALL},
        (SELECT ndc FROM dropped) AS n_dropped_components,
-       (SELECT ndp FROM dropped) AS n_dropped_pages
-FROM m
-""")
+       (SELECT ndp FROM dropped) AS n_dropped_pages"""))
 
 
 _O_CANOPY_BLOCKING = _o_canopy_blocking_sql()
 
 
-def _q_recrawl_dedup(spark, sf_dir):
+def _recrawl_dedup(ev):
     """URL-level recrawl dedup: keep the NEWEST capture per canonical
     URL — the capture-dedup pass a Common-Crawl-style corpus runs
     before linkage (the input_hint's (url, warc_ts) pairing; a ts tie
@@ -7578,7 +7407,6 @@ def _q_recrawl_dedup(spark, sf_dir):
     max-then-self-join would scan twice.  Fixture: captures derived
     from events (url from user_id mod 97, capture ts/id = event
     ts/event_id)."""
-    ev = load(spark, sf_dir, "events")
     url = F.concat(F.lit("https://crawl.example/u/"),
                    (F.col("user_id") % 97).cast("string"))
     key = F.concat(
@@ -7593,6 +7421,10 @@ def _q_recrawl_dedup(spark, sf_dir):
                  F.unix_micros(F.max("ts").cast("timestamp"))
                  .cast("bigint").alias("latest_ts_us"),
                  F.count(F.lit(1)).cast("bigint").alias("n_captures")))
+
+
+def _q_recrawl_dedup(spark, sf_dir):
+    return _recrawl_dedup(load(spark, sf_dir, "events"))
 
 
 _O_RECRAWL_DEDUP = """
@@ -7616,35 +7448,14 @@ def _q_stream_recrawl_dedup(spark, sf_dir):
     query is the backfill form).  State per url is the same packed
     (epoch-micros, capture-id) arg-max key the batch aggregation rides,
     so max_by/max/count partials combine across micro-batches exactly
-    as they combine across partitions; the final state equals the batch
-    aggregation by commutativity, and the batch oracle applies
-    verbatim.  The two-file split is by event_id, NOT time order —
-    max-state is order-independent, which is the point."""
-    import uuid
-
-    schema = load(spark, sf_dir, "events").schema
-    path = _stream_two_file_source(spark, sf_dir, "events", "event_id")
-    ev = (spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(path + "/*"))
-    url = F.concat(F.lit("https://crawl.example/u/"),
-                   (F.col("user_id") % 97).cast("string"))
-    key = F.concat(
-        F.lpad(F.unix_micros(F.col("ts").cast("timestamp"))
-               .cast("string"), 20, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"))
-    agg = (ev.select(url.alias("url"), "ts", "event_id", key.alias("k"))
-           .groupBy("url")
-           .agg(F.max_by("event_id", F.col("k")).cast("bigint")
-                .alias("kept_event_id"),
-                F.unix_micros(F.max("ts").cast("timestamp"))
-                .cast("bigint").alias("latest_ts_us"),
-                F.count(F.lit(1)).cast("bigint").alias("n_captures")))
-    name = "stream_recrawl_" + uuid.uuid4().hex[:8]
-    with _stream_state_partitions(spark):
-        q = (agg.writeStream.format("memory").queryName(name)
-             .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination(300)
-    return spark.table(name)
+    as they combine across partitions.  The stream runs the batch row's
+    own body (_recrawl_dedup), so the final state is the batch
+    aggregation by commutativity and the batch oracle checks it.  The
+    two-file split is by event_id, NOT time order — max-state is
+    order-independent, which is the point."""
+    return _run_stream(spark, "stream_recrawl_dedup",
+                       _read_arrow(sf_dir, "events"), "event_id",
+                       _recrawl_dedup)
 
 
 # oracle field: a literal SQL string, a callable (sf_dir) -> SQL for

@@ -136,3 +136,16 @@ def test_hot_keys_vocab_matches_flat_cap(pages_and_labels, cap):
     vocab_keys = {r["block_key"] for r in vocab.select("block_key").collect()}
     assert vocab_keys == flat_keys
     assert (len(flat_keys) > 0) == (cap < 10**9)
+
+
+def test_block_hashes_reject_prefix_not_above_edit_distance(spark):
+    """The hash-direct key generator needs prefix_length >
+    max_edit_distance (at P <= d the empty-key rule would read a truncated
+    length), so the page-level explode refuses such a config instead of
+    building keys."""
+    from spellchecker_wasm_spark.pipeline.linkage import (
+        pages_to_block_hashes)
+    pdim = spark.createDataFrame([(1, "acme widget")],
+                                 "id long, title string")
+    with pytest.raises(ValueError, match="prefix_length > max_edit_distance"):
+        pages_to_block_hashes(pdim, LinkageConfig(prefix_length=2))

@@ -1,8 +1,11 @@
 """Structured Streaming: incremental dictionary ingest must reach the same
 final state as a batch load (the reference's chunked-ingest invariant)."""
 
+import os
 import shutil
+import tempfile
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from spellchecker_wasm_spark.streaming import (
@@ -139,3 +142,46 @@ def test_stateful_sessionization_matches_batch(spark, tmp_path):
         if prev is None or cur[0] > prev[0]:
             got[r["user_id"]] = cur
     assert got == want
+
+
+# The catalog's streaming rows replay a fixture table through
+# queries._run_stream (two mtime-ordered files, memory sink).
+SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
+
+
+@pytest.mark.parametrize("table", ["documents", "events"])
+def test_stream_source_schema_from_arrow_equals_parquet_inference(
+        spark, table):
+    """The streaming rows take their source schema from the Arrow table
+    they split (no inference job); it must be exactly the schema Spark
+    infers from the parquet file, timestamp_ntz included."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from spellchecker_wasm_spark.queries import _read_arrow
+
+    got = from_arrow_schema(_read_arrow(SF_DIR, table).schema,
+                            prefer_timestamp_ntz=True)
+    assert got == spark.read.parquet(f"{SF_DIR}/{table}.parquet").schema
+
+
+def test_stream_row_timeout_raises_and_stops_query(spark, monkeypatch):
+    """A streaming row that does not finish in time is an error, not the
+    partial memory-sink contents, and it leaves no query running."""
+    from spellchecker_wasm_spark import queries
+
+    monkeypatch.setattr(queries, "_STREAM_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError, match="stream_dedup_exact"):
+        queries.CATALOG["stream_dedup_exact"][0](spark, SF_DIR)
+    assert spark.streams.active == []
+
+
+def test_stream_row_removes_its_split_directory(spark, tmp_path,
+                                                monkeypatch):
+    """The two-file split is a full copy of the table; the memory sink
+    holds the result, so nothing of the split may outlive the build."""
+    from spellchecker_wasm_spark import queries
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = queries.CATALOG["stream_dedup_exact"][0](spark, SF_DIR).collect()
+    assert rows
+    assert list(tmp_path.iterdir()) == []
