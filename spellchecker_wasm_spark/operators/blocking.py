@@ -20,9 +20,9 @@ from ..functions.delete_expr import delete_keys_array
 
 
 def build_blocks(terms: DataFrame, term_col: str = "term",
-                 max_edit_distance: int = 2, prefix_length: int = 7,
-                 carry_cols: tuple[str, ...] = ()) -> DataFrame:
-    """(…, term) → (block_key, term, …carry) — one row per delete key.
+                 max_edit_distance: int = 2,
+                 prefix_length: int = 7) -> DataFrame:
+    """(…, term) → (term, block_key) — one row per delete key.
 
     Key generation is the pure-Catalyst combinatorial expression
     (functions/delete_expr.py) — set-identical to the recursive reference
@@ -31,8 +31,8 @@ def build_blocks(terms: DataFrame, term_col: str = "term",
     distinct() is needed when `terms` is term-unique.
     """
     keys = delete_keys_array(F.col(term_col), max_edit_distance, prefix_length)
-    cols = [F.col(term_col).alias("term"), *[F.col(c) for c in carry_cols]]
-    return terms.select(*cols, F.explode(keys).alias("block_key"))
+    return terms.select(F.col(term_col).alias("term"),
+                        F.explode(keys).alias("block_key"))
 
 
 def cap_hot_blocks(blocks: DataFrame, max_block_size: int,

@@ -50,14 +50,19 @@ BEST_SCALE = 100_000_000_000
 
 def _explode_keys(df: DataFrame, id_alias: str, len_alias: str,
                   id_col: str, term_col: str, max_edit_distance: int,
-                  prefix_length: int) -> DataFrame:
+                  prefix_length: int, term_alias: str | None = None,
+                  fan: bool = False) -> DataFrame:
+    """(id, [term,] len, block_key) per whole-term-prefix delete-key hash;
+    ``fan``: spread the projected source first (skew.fan_out)."""
+    cols = [F.col(id_col).alias(id_alias)]
+    if term_alias:
+        cols.append(F.col(term_col).alias(term_alias))
+    src = df.select(*cols, F.length(term_col).alias(len_alias),
+                    F.substring(term_col, 1, prefix_length).alias("prefix"))
     return delete_key_hash_explode(
-        df.select(F.col(id_col).alias(id_alias),
-                  F.length(term_col).alias(len_alias),
-                  F.substring(term_col, 1, prefix_length)
-                  .alias("prefix")),
-        "prefix", max_edit_distance=max_edit_distance,
-        prefix_length=prefix_length, keep_cols=[id_alias, len_alias])
+        fan_out(src) if fan else src, "prefix",
+        max_edit_distance=max_edit_distance, prefix_length=prefix_length,
+        keep_cols=src.columns[:-1])
 
 
 def standing_index(pages: DataFrame, asg: DataFrame,
@@ -76,15 +81,9 @@ def standing_index(pages: DataFrame, asg: DataFrame,
     free and removes the pages re-join entirely (2 joins → 1; the one
     remaining join attaches the component map, broadcast-sized).  The
     explode source fans out to session parallelism (skew.fan_out)."""
-    src = pages.select(F.col(id_col).alias("ex_id"),
-                       F.col(term_col).alias("term_b"),
-                       F.length(term_col).alias("el"),
-                       F.substring(term_col, 1, prefix_length)
-                       .alias("prefix"))
-    eb = delete_key_hash_explode(
-        fan_out(src), "prefix", max_edit_distance=max_edit_distance,
-        prefix_length=prefix_length,
-        keep_cols=["ex_id", "term_b", "el"])
+    eb = _explode_keys(pages, "ex_id", "el", id_col, term_col,
+                       max_edit_distance, prefix_length, term_alias="term_b",
+                       fan=True)
     return eb.join(asg.select(F.col(id_col).alias("ex_id"), "component"),
                    "ex_id")
 
@@ -138,15 +137,9 @@ def assign_new_records(new: DataFrame, pages: DataFrame, asg: DataFrame,
         if index is None:
             index = standing_index(pages, asg, id_col, term_col,
                                    max_edit_distance, prefix_length)
-        nb = delete_key_hash_explode(
-            new.select(F.col(id_col).alias("new_id"),
-                       F.col(term_col).alias("term_a"),
-                       F.length(term_col).alias("nl"),
-                       F.substring(term_col, 1, prefix_length)
-                       .alias("prefix")),
-            "prefix", max_edit_distance=max_edit_distance,
-            prefix_length=prefix_length,
-            keep_cols=["new_id", "term_a", "nl"])
+        nb = _explode_keys(new, "new_id", "nl", id_col, term_col,
+                           max_edit_distance, prefix_length,
+                           term_alias="term_a")
         j = nb.join(index, "block_key", "left")
         osa = osa_distance_udf(max_edit_distance)
         scored = j.withColumn("distance", osa(F.col("term_a"),

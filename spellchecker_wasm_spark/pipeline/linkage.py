@@ -3,10 +3,13 @@
 pages(url, warc_ts, html, text, lang)
   → extract text (byte-identical invariant vs the stored column)
   → title tokens (reference-quirk tokenizer, lowered, cleaned)
-  → SymSpell delete-key blocking with hot-key capping        [stage blocks]
-  → candidate pairs (url_a < url_b, length window, dedup)    [stage pairs]
-  → vectorized banded Damerau-OSA scoring ≤ max_edit_distance [stage scored]
-  → large-star/small-star connected components               [stage clusters]
+  → SymSpell delete-key blocking with hot-key capping        [blocks_stage]
+  → candidate pairs (url_a < url_b, length window, dedup)    [pairs_stage]
+  → vectorized banded Damerau-OSA scoring ≤ max_edit_distance [scoring_stage]
+  → large-star/small-star connected components               [clusters]
+
+``run_linkage`` composes the three stage functions; the query catalog's
+linkage rows run them too, so its oracles check this plan.
 
 Scale design notes (10^12 documents):
 * every stage is a pure DataFrame plan: one vocabulary-level shuffle for
@@ -144,6 +147,46 @@ def verify_extraction_invariant(pages: DataFrame) -> int:
             .count())
 
 
+def blocks_stage(pdim: DataFrame, config: LinkageConfig
+                 ) -> tuple[DataFrame, DataFrame]:
+    """pdim(id, title) → (capped (page_id, tl, block_key), dropped hot
+    keys (block_key, weight))."""
+    blocks = pages_to_block_hashes(pdim, config)
+    toks = pdim.select(F.explode(
+        title_prefixes_array(F.col("title"), config)).alias("prefix"))
+    dropped = hot_keys_vocab(toks, config)
+    # persist only the CAPPED explode (hot keys carry most of the raw
+    # volume), materialized once for both pair-join sides — and persist it
+    # ALREADY PARTITIONED by block_key: the one repartition exchange here
+    # replaces the two exchanges the self-join would otherwise perform
+    # (both sides read the same cached partitioning), and with the
+    # shuffle_hash build hint the pair join runs with zero sorts and zero
+    # further shuffles (measured 59.6s → 36.9s block+pair at 8 pinned
+    # cores on the 600k-page protocol input)
+    capped = (blocks.join(F.broadcast(dropped.select("block_key")),
+                          "block_key", "left_anti")
+              .repartition(F.col("block_key"))
+              .persist())
+    return capped, dropped
+
+
+def pairs_stage(capped: DataFrame, pdim: DataFrame,
+                config: LinkageConfig) -> DataFrame:
+    """(capped, pdim) → UNVERIFIED (id_a, id_b, term_a, term_b)."""
+    dim = pdim.select("id", F.col("title").alias("term"))
+    band = (2 * config.max_edit_distance
+            if config.prefilter_before_dedup else None)
+    return candidate_pairs(capped, id_col="page_id",
+                           max_len_diff=config.max_edit_distance, dim=dim,
+                           len_col="tl", prefilter_band=band)
+
+
+def scoring_stage(pairs: DataFrame, config: LinkageConfig) -> DataFrame:
+    """pairs → pairs + distance, kept at OSA ≤ max_edit_distance."""
+    return score_pairs(pairs, max_distance=config.max_edit_distance,
+                       jvm_prefilter=not config.prefilter_before_dedup)
+
+
 def run_linkage(spark: SparkSession, pages: DataFrame,
                 config: LinkageConfig | None = None,
                 writer: StageWriter | None = None) -> dict:
@@ -164,47 +207,21 @@ def run_linkage(spark: SparkSession, pages: DataFrame,
     # 64-bit-hashed (a hash collision merely adds one spurious candidate
     # that scoring rejects; recall is unaffected) and the title payload
     # never rides the ~80×-fan-out explode or the pair-join shuffles; it
-    # is re-attached post-dedup from the pages-derived dimension below.
-    # ONE persisted slim dimension (id, title) — ~60 bytes/page — feeds
-    # every downstream pass: the html-regex extraction runs exactly once;
-    # the ~80×-fan-out key explode is NEVER materialized — each pair-join
-    # side re-derives it from the cached titles in whole-stage codegen
-    # (CPU work that scales with cores, unlike a memory/disk-bound persist
-    # of the exploded table), filtered inline by a broadcast anti-join
-    # against vocabulary-derived hot keys.
+    # is re-attached post-dedup from the pages-derived dimension
+    # (pairs_stage).  ONE persisted slim dimension (id, title) — ~60
+    # bytes/page — feeds every downstream pass: the html-regex extraction
+    # runs exactly once.
     pdim = (pages.where(F.col("html").isNotNull())
             .select(F.xxhash64("url").alias("id"),
                     title_expr(F.col("html")).alias("title"))
             .persist())
-    blocks = pages_to_block_hashes(pdim, config)
-    toks = pdim.select(F.explode(
-        title_prefixes_array(F.col("title"), config)).alias("prefix"))
-    dropped = hot_keys_vocab(toks, config)
-    # persist only the CAPPED explode (hot keys carry most of the raw
-    # volume), materialized once for both pair-join sides — and persist it
-    # ALREADY PARTITIONED by block_key: the one repartition exchange here
-    # replaces the two exchanges the self-join would otherwise perform
-    # (both sides read the same cached partitioning), and with the
-    # shuffle_hash build hint the pair join runs with zero sorts and zero
-    # further shuffles (measured 59.6s → 36.9s block+pair at 8 pinned
-    # cores on the 600k-page protocol input)
-    capped = (blocks.join(F.broadcast(dropped.select("block_key")),
-                          "block_key", "left_anti")
-              .repartition(F.col("block_key"))
-              .persist())
+    capped, dropped = blocks_stage(pdim, config)
     if writer:
         capped = writer.materialize("blocks", capped)
         writer._log({"stage": "blocks", "event": "hot_keys_dropped",
                      "dropped_keys": dropped.count()})
 
-    dim = pdim.select("id", F.col("title").alias("term"))
-    band = (2 * config.max_edit_distance
-            if config.prefilter_before_dedup else None)
-    pairs = candidate_pairs(capped, id_col="page_id",
-                            max_len_diff=config.max_edit_distance, dim=dim,
-                            len_col="tl", prefilter_band=band)
-    scored = score_pairs(pairs, max_distance=config.max_edit_distance,
-                         jvm_prefilter=band is None)
+    scored = scoring_stage(pairs_stage(capped, pdim, config), config)
     if writer:
         scored = writer.materialize("scored_pairs", scored)
 

@@ -18,7 +18,9 @@ import functools
 
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from .kernels.symspell import Verbosity
 from .operators.blocking import build_blocks
@@ -27,13 +29,19 @@ from .operators.lookup import distributed_lookup
 from .operators.pairs import candidate_pairs
 from .operators.scoring import score_pairs
 from .operators.skew import fan_out
+from .pipeline.linkage import (LinkageConfig, blocks_stage, pairs_stage,
+                               scoring_stage)
 
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Schema from the parquet footer(s): no Spark inference job."""
+    path = f"{sf_dir}/{name}.parquet"
+    return spark.read.schema(from_arrow_schema(
+        pq.ParquetDataset(path).schema, prefer_timestamp_ntz=True)
+    ).parquet(path)
 
 
 def _tokens(spark, sf_dir) -> DataFrame:
@@ -4433,8 +4441,6 @@ _STREAM_TIMEOUT_S = 300
 
 
 def _read_arrow(sf_dir, table: str):
-    import pyarrow.parquet as pq
-
     return pq.read_table(f"{sf_dir}/{table}.parquet")
 
 
@@ -4455,7 +4461,6 @@ def _stream_two_file_source(tbl, order_col: str) -> str:
 
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
     d = tempfile.mkdtemp(prefix="swspark_stream_")
     col = tbl.column(order_col)
@@ -4484,8 +4489,6 @@ def _run_stream(spark, row: str, tbl, order_col: str, body,
     running after _STREAM_TIMEOUT_S is stopped and raises."""
     import shutil
     import uuid
-
-    from pyspark.sql.pandas.types import from_arrow_schema
 
     schema = from_arrow_schema(tbl.schema, prefer_timestamp_ntz=True)
     path = _stream_two_file_source(tbl, order_col)
@@ -4823,10 +4826,11 @@ FROM rk GROUP BY doc_id
 # requires g > 2^52), so the slugs are bit-identical across Spark and
 # DuckDB.
 #
-# Predicted pairs run the REAL pipeline operators (build_blocks's
-# pure-Catalyst delete keys -> candidate_pairs slim-id self-join ->
-# score_pairs JVM-prefiltered Arrow OSA); the oracle replays blocking with
-# the recursive delete CTE and verifies with damerau_levenshtein (== OSA
+# Predicted pairs run the pipeline's own stages (pipeline/linkage.py:
+# blocks_stage's capped delete-key hash explode -> pairs_stage slim-id
+# self-join -> scoring_stage JVM-prefiltered Arrow OSA), exactly as
+# run_linkage composes them; the oracle replays blocking with the
+# recursive delete CTE and verifies with damerau_levenshtein (== OSA
 # on every constructed pair: the variants contain no transpositions).
 # F1 uses the algebraic 2·tp/(pp+tt) form so every float is ONE division
 # of exact integers — exact cross-engine identity.
@@ -4878,42 +4882,35 @@ def _lk_pages(spark, sf_dir):
                     F.col("x.t").alias("title")))
 
 
-def _lk_pb(spark, sf_dir):
-    """PERSISTED shared subtree (guide §5): the fixture pages' delete-key
-    hash explode (page_id, tl, block_key) — consumed by the candidate
-    generator (_lk_cand) and by meta_blocking's weighted pair
-    aggregation.  The explode source fans out to session parallelism
-    (operators/skew.fan_out)."""
-    from .functions.delete_hash_expr import delete_key_hash_explode
+_LK_CONFIG = LinkageConfig()  # defaults are the fixture's d=2, P=7
 
-    pages = _lk_pages(spark, sf_dir)
-    pref = pages.select("page_id", F.length("title").alias("tl"),
-                        F.substring("title", 1, 7).alias("prefix"))
-    return delete_key_hash_explode(fan_out(pref), "prefix",
-                                   keep_cols=["page_id", "tl"]).persist()
+
+def _lk_blocks(spark, sf_dir):
+    """(pdim(id, title), capped): the fixture's pipeline blocks stage.
+    Its titles are single tokens, so prefixes are substring(title, 1, 7)
+    and the cap drops no key (tests/test_r6_optimizations.py)."""
+    pdim = fan_out(_lk_pages(spark, sf_dir)
+                   .select(F.col("page_id").alias("id"), "title"))
+    return pdim, blocks_stage(pdim, _LK_CONFIG)[0]
 
 
 def _lk_cand(spark, sf_dir):
     """(pages, pairs): UNVERIFIED candidate pairs (id_a, id_b, term_a,
-    term_b) from the REAL blocking operators over the labeled fixture —
-    the pre-verification stage fs_calibration audits.
+    term_b) from pipeline.linkage.pairs_stage over the labeled fixture's
+    capped blocks (_lk_blocks) — the pre-verification stage
+    fs_calibration audits.
 
     Blocking uses the pipeline's hash-direct key generator
     (functions/delete_hash_expr): block keys are 64-bit hashes emitted
-    without ever materializing variant strings, carried per page (titles
-    are page-unique, so a distinct-titles detour would add a shuffle and
-    a join back for nothing).  Result-invariant vs the oracle's string
-    keys: shares-hash ⊇ shares-string only through ~2^-64 collisions, and
-    any pair at OSA ≤ 2 within the prefix window shares a TRUE string key
-    (SymSpell completeness), so the verified pair set is identical —
-    the same argument the linkage pipeline documents, bijection
-    property-tested in tests/test_delete_hash_expr.py."""
+    without ever materializing variant strings.  Result-invariant vs the
+    oracle's string keys: shares-hash ⊇ shares-string only through
+    ~2^-64 collisions, and any pair at OSA ≤ 2 within the prefix window
+    shares a TRUE string key (SymSpell completeness), so the verified
+    pair set is identical — bijection property-tested in
+    tests/test_delete_hash_expr.py."""
+    pdim, capped = _lk_blocks(spark, sf_dir)
+    pairs = pairs_stage(capped, pdim, _LK_CONFIG)
     pages = _lk_pages(spark, sf_dir)
-    pb = _lk_pb(spark, sf_dir)
-    dim = pages.select(F.col("page_id").alias("id"),
-                       F.col("title").alias("term"))
-    pairs = candidate_pairs(pb, id_col="page_id", term_col="term",
-                            max_len_diff=2, dim=dim, len_col="tl")
     # PERSISTED shared subtree (guide §5): the candidate set feeds the
     # scorer (_lk_scored) and the pre-verification audits
     # (fs_calibration); ~18 linkage-family catalog entries sit on this
@@ -4926,8 +4923,8 @@ def _lk_cand(spark, sf_dir):
 
 def _lk_scored(spark, sf_dir):
     """(pages, scored): scored candidate pairs (id_a, id_b, term_a,
-    term_b, distance) — _lk_cand's blocking output through the
-    verification stage (banded OSA ≤ 2 with the lossless JVM
+    term_b, distance) — _lk_cand's candidates through
+    pipeline.linkage.scoring_stage (banded OSA ≤ 2 with the lossless JVM
     Levenshtein prefilter).
 
     The scored frame is PERSISTED (guide §5): it is the shared head of
@@ -4936,13 +4933,7 @@ def _lk_scored(spark, sf_dir):
     incremental-linkage renditions — one Arrow OSA pass per session
     instead of one per catalog entry."""
     pages, pairs = _lk_cand(spark, sf_dir)
-    return pages, score_pairs(pairs, max_distance=2).persist()
-
-
-def _lk_pred(spark, sf_dir):
-    """(pages, pred): predicted (id_a, id_b, distance) via _lk_scored."""
-    pages, scored = _lk_scored(spark, sf_dir)
-    return pages, scored.select("id_a", "id_b", "distance")
+    return pages, scoring_stage(pairs, _LK_CONFIG).persist()
 
 
 def _lk_truth(pages):
@@ -4989,19 +4980,19 @@ def _lk_recall(pages, cand):
 
 
 def _q_linkage_f1(spark, sf_dir):
-    """North-rule metric under the driver oracle: run blocking + pairwise
-    OSA scoring over the labeled page fixture and emit one row of
+    """North-rule metric under the driver oracle: run the pipeline's
+    blocks → pairs → scoring stages (pipeline.linkage, as run_linkage
+    composes them) over the labeled page fixture and emit one row of
     (n_truth, n_pred, n_tp, precision, recall, f1).
 
     Scale shape (same audit as the full pipeline, PLANS.md): delete keys
-    are a whole-stage-codegen projection, the self-join shuffles slim
-    (id:long, key, len:int) rows once with a shuffle_hash hint, scoring
-    exchanges only surviving (term_a, term_b) through one ArrowEvalPython,
-    and the truth join + metric agg shuffle (long, long) pairs.  At 10^12
-    pages the only addition is the hot-key cap (slugs here have no
-    super-node keys; the cap is exercised by run_linkage's hot_keys_vocab
-    and the dedup queries)."""
-    pages, pred = _lk_pred(spark, sf_dir)
+    are a whole-stage-codegen projection, capped by the broadcast
+    hot-key anti-join and persisted partitioned by key, so the self-join
+    shuffles nothing more; scoring exchanges only surviving (term_a,
+    term_b) through one ArrowEvalPython, and the truth join + metric agg
+    shuffle (long, long) pairs.  The hot-key cap is in the plan; the
+    fixture's slugs have no super-node keys, so it drops none here."""
+    pages, pred = _lk_scored(spark, sf_dir)
     return _lk_metrics(pages, pred)
 
 
@@ -5017,17 +5008,13 @@ def _q_linkage_cluster_f1(spark, sf_dir):
     glues two entities and amplifies into up to 3×3 induced false pairs —
     exactly the precision amplification a production ER pipeline watches,
     now pinned by the oracle's recursive-reachability replay."""
-    pages, pred = _lk_pred(spark, sf_dir)
-    cc = connected_components(pred.select("id_a", "id_b"),
-                              nodes=pages.select(
-                                  F.col("page_id").alias("doc_id")))
-    asg = cc.select("node", "component")
+    pages, asg = _lk_cc_asg(spark, sf_dir)
     induced = (asg.alias("x")
                .join(asg.alias("y"),
                      (F.col("x.component") == F.col("y.component"))
-                     & (F.col("x.node") < F.col("y.node")))
-               .select(F.col("x.node").alias("id_a"),
-                       F.col("y.node").alias("id_b")))
+                     & (F.col("x.page_id") < F.col("y.page_id")))
+               .select(F.col("x.page_id").alias("id_a"),
+                       F.col("y.page_id").alias("id_b")))
     return _lk_metrics(pages, induced)
 
 
@@ -5365,15 +5352,13 @@ def _q_blocking_stats(spark, sf_dir):
     the naive N² pair space (the blocking 'reduction ratio' complement).
     One row; the fraction is a single division of exact BIGINTs.
 
-    Scale shape: one key explode (string path — the stats ARE about the
-    keys) + one combine-reduced groupBy(block_key) + a scalar aggregate;
-    nothing quadratic is materialized — the pair volume is computed from
-    posting sizes, not by emitting pairs."""
-    # fan the string-key explode out to session parallelism
-    pages = fan_out(_lk_pages(spark, sf_dir))
-    blocks = build_blocks(pages, term_col="title", carry_cols=("page_id",))
-    per_key = blocks.groupBy("block_key").agg(
-        F.count(F.lit(1)).alias("s"))
+    Scale shape: the persisted capped blocks the pair stage joins
+    (_lk_blocks; 64-bit key hashes, injective on each page's key set) +
+    one combine-reduced groupBy(block_key) + a scalar aggregate; nothing
+    quadratic is materialized — the pair volume is computed from posting
+    sizes, not by emitting pairs."""
+    pages, capped = _lk_blocks(spark, sf_dir)
+    per_key = capped.groupBy("block_key").agg(F.count(F.lit(1)).alias("s"))
     stats = per_key.agg(
         F.count(F.lit(1)).alias("n_blocks"),
         F.sum("s").cast("bigint").alias("n_key_rows"),
@@ -5513,7 +5498,7 @@ FROM d GROUP BY lang
 def _lk_cc_asg(spark, sf_dir):
     """(pages, asg): cluster assignments (page_id, component) for every
     fixture page — the shared head of the post-clustering ER stages."""
-    pages, pred = _lk_pred(spark, sf_dir)
+    pages, pred = _lk_scored(spark, sf_dir)
     cc = connected_components(pred.select("id_a", "id_b"),
                               nodes=pages.select(
                                   F.col("page_id").alias("doc_id")))
@@ -5990,7 +5975,7 @@ def _q_er_threshold_sweep(spark, sf_dir):
     Scale shape: one truth left-join on (long, long), one combine-reduced
     groupBy(distance) whose output is O(max_distance), then
     driver-trivial arithmetic — strictly cheaper than linkage_f1."""
-    pages, pred = _lk_pred(spark, sf_dir)
+    pages, pred = _lk_scored(spark, sf_dir)
     truth = _lk_truth(pages)
     by_d = (pred.join(truth, ["id_a", "id_b"], "left")
             .groupBy("distance")
@@ -6856,7 +6841,7 @@ def _q_blocking_compare(spark, sf_dir):
     Single-key membership rides the multi-key row as its s1 flag
     (single ⊆ multi by construction), so BOTH SNM columns come from ONE
     scored subtree — one union, one pair groupBy, one Arrow exchange."""
-    pages, pred = _lk_pred(spark, sf_dir)
+    pages, pred = _lk_scored(spark, sf_dir)
     flagged = _lk_snm_flagged(spark, sf_dir, pages)
     d = pred.select("id_a", "id_b").withColumn("ind", F.lit(1))
     k = flagged.select("id_a", "id_b", F.col("s1").alias("ins"),
@@ -6948,13 +6933,11 @@ def _q_meta_blocking(spark, sf_dir):
     (functions/delete_hash_expr), the oracle counts shared delete-variant
     STRINGS — equal pairwise because the hash is injective on the
     per-term variant set (bijection property-tested in
-    tests/test_delete_hash_expr.py) and both sides dedup per-term keys
-    before joining."""
+    tests/test_delete_hash_expr.py), both sides dedup per-term keys
+    before joining, and the cap drops no fixture key."""
     from .operators.pairs import weighted_candidate_pairs
 
-    # r6: reuses the persisted _lk_pb delete-key explode (shared with
-    # the candidate generator) instead of re-deriving it.
-    w = weighted_candidate_pairs(_lk_pb(spark, sf_dir),
+    w = weighted_candidate_pairs(_lk_blocks(spark, sf_dir)[1],
                                  id_col="page_id", len_col="tl")
     return w.select(F.col("id_a").cast("bigint").alias("id_a"),
                     F.col("id_b").cast("bigint").alias("id_b"),
@@ -7019,9 +7002,9 @@ def _q_qgram_blocking(spark, sf_dir):
     once, pair dedup exchanges 16-byte id pairs, and the truth probe is
     the usual (long, long) full-outer.  At web scale q-gram blocks are
     Zipf-hot (every page with 'the' in a token collides) — production
-    caps hot grams exactly like hot_keys_vocab caps delete keys; the
-    uniform-hash slugs here have no hot grams, so the cap lever lives
-    with the delete-key path where the fixture exercises it."""
+    caps hot grams exactly like the linkage blocks stage caps delete
+    keys; the uniform-hash slugs here have no hot grams, so the cap lever
+    lives with the delete-key path (pipeline.linkage.blocks_stage)."""
     pages = _lk_pages(spark, sf_dir)
     # r6: candidates derive from the SHARED persisted gram-pair-count
     # subtree (one self-join for the whole q-gram family instead of one
@@ -7074,8 +7057,8 @@ def _q_soundex_blocking(spark, sf_dir):
     key space is structurally bounded (26 first letters x <= 7^3 digit
     suffixes), so block sizes grow linearly with corpus size: at web
     scale Soundex blocks are the canonical hot-key case and MUST route
-    through the hot_keys_vocab cap (the uniform fixture keeps blocks
-    small; the cap lever is exercised on the delete-key path).  The
+    through the blocks stage's hot-key cap (the uniform fixture keeps
+    blocks small; the cap lever sits on the delete-key path).  The
     oracle reimplements Spark's exact soundex state machine as a DuckDB
     list_reduce fold (RE2 has no backreferences, so a regex-collapse
     oracle is impossible): translate to codes, fold keeping the LAST

@@ -99,13 +99,17 @@ def test_span_family_no_cartesian(spark, name):
 def test_fellegi_sunter_pure_codegen_decision_layer(spark):
     # the FS decision layer is ONE codegen projection over the linkage
     # fixture's scored pair set: the fixture's single ArrowEvalPython
-    # (the OSA scorer) and its 3 hash joins (pair join + 2 broadcast
-    # payload attaches) — the weights/decision add NO join, NO Python,
-    # NO cartesian
+    # (the OSA scorer) and exactly the fixture's own joins (its cached
+    # plan is printed inside fellegi_sunter's) — the weights/decision
+    # add NO join, NO Python, NO cartesian
+    from spellchecker_wasm_spark.queries import _lk_scored
+
     plan_fs = _plan(spark, "fellegi_sunter")
+    _, scored = _lk_scored(spark, SF_DIR)
+    plan_scored = scored._jdf.queryExecution().executedPlan().toString()
     assert _count(plan_fs, "ArrowEvalPython") == 1, plan_fs
     assert "BatchEvalPython" not in plan_fs, plan_fs
-    assert _count(plan_fs, "Join") <= 3, plan_fs
+    assert _count(plan_fs, "Join") == _count(plan_scored, "Join"), plan_fs
     assert "CartesianProduct" not in plan_fs, plan_fs
     assert "BroadcastNestedLoop" not in plan_fs, plan_fs
 
@@ -167,25 +171,16 @@ _BUILD_RUNS_JOBS = {
 }
 
 
-def test_catalog_global_plan_invariants(spark, monkeypatch):
+def test_catalog_global_plan_invariants(spark):
     """The two invariants every batch plan in the catalog must hold at
     any scale: no row-at-a-time Python (BatchEvalPython — Arrow only)
     and no unbounded cartesian product (CartesianProduct; the catalog's
     BroadcastNestedLoopJoins are constant-size attaches, audited in
     PLANS_TABLE.md).  Builds every lazy entry's executed plan, and
     asserts that building it schedules no Spark job unless the entry is
-    in _BUILD_RUNS_JOBS.
+    in _BUILD_RUNS_JOBS."""
+    from spellchecker_wasm_spark.queries import CATALOG
 
-    Tables are read with their schema given, as a production job reads a
-    table with a known schema: Spark's parquet schema inference is itself
-    a job, and would otherwise show up under every entry."""
-    from spellchecker_wasm_spark import queries
-    from spellchecker_wasm_spark.queries import CATALOG, TABLES
-
-    schemas = {t: queries.load(spark, SF_DIR, t).schema for t in TABLES}
-    monkeypatch.setattr(
-        queries, "load", lambda spark, sf_dir, name: spark.read.schema(
-            schemas[name]).parquet(f"{sf_dir}/{name}.parquet"))
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     offenders = {}

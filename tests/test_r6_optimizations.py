@@ -13,6 +13,10 @@ Covered here:
     moved to a post-agg filter; loose-graph derived from the counts)
   * queries._q_dedup_embedding — interpreted per-pair HOF dot replaced
     by one numpy matmul per Arrow batch
+  * queries._lk_blocks — the linkage fixture's blocks come from
+    pipeline.linkage.blocks_stage (tokenized prefixes, hot-key cap)
+    instead of the whole-title prefix explode the oracle rows were
+    first checked against
 """
 
 import os
@@ -123,3 +127,30 @@ def test_dedup_embedding_empty_capped_slice(spark, tmp_path):
     got = Q._q_dedup_embedding(spark, str(tmp_path))
     assert got.columns == ["vec_a", "vec_b"]
     assert got.collect() == []
+
+
+def test_linkage_fixture_blocks_match_whole_title_explode(spark):
+    """The pipeline's blocks stage over the fixture pdim must emit
+    exactly the (page_id, tl, block_key) multiset of the whole-title
+    formulation — substring(title, 1, 7) → delete_key_hash_explode — and
+    its hot-key cap must drop nothing: the oracle replays blocking on
+    whole titles with no cap."""
+    import spellchecker_wasm_spark.queries as Q
+    from spellchecker_wasm_spark.functions.delete_hash_expr import (
+        delete_key_hash_explode)
+    from spellchecker_wasm_spark.pipeline.linkage import blocks_stage
+
+    pdim, _ = Q._lk_blocks(spark, SF_DIR)
+    capped, dropped = blocks_stage(pdim, Q._LK_CONFIG)
+    pref = Q._lk_pages(spark, SF_DIR).select(
+        "page_id", F.length("title").alias("tl"),
+        F.substring("title", 1, 7).alias("prefix"))
+    want = delete_key_hash_explode(pref, "prefix",
+                                   keep_cols=["page_id", "tl"])
+    cols = ["page_id", "tl", "block_key"]
+    got = capped.select(*cols)
+    want = want.select(*cols)
+    assert got.exceptAll(want).isEmpty()
+    assert want.exceptAll(got).isEmpty()
+    assert not got.isEmpty()
+    assert dropped.isEmpty()

@@ -44,7 +44,7 @@ def test_parse_dictionary_lines(spark, kernel, words_df):
 def test_blocks_match_kernel_deletes(spark, words_df, kernel):
     from spellchecker_wasm_spark.kernels.deletes import generate_deletes
     sample = words_df.limit(50)
-    blocks = build_blocks(sample, carry_cols=("count",))
+    blocks = build_blocks(sample)
     got = {}
     for r in blocks.collect():
         got.setdefault(r["term"], set()).add(r["block_key"])

@@ -8,6 +8,7 @@ import tempfile
 import pytest
 from pyspark.sql import Row, functions as F
 
+from spellchecker_wasm_spark.queries import TABLES
 from spellchecker_wasm_spark.streaming import (
     stream_dictionary_ingest, windowed_event_counts)
 
@@ -149,19 +150,22 @@ def test_stateful_sessionization_matches_batch(spark, tmp_path):
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
-@pytest.mark.parametrize("table", ["documents", "events"])
+@pytest.mark.parametrize("table", TABLES)
 def test_stream_source_schema_from_arrow_equals_parquet_inference(
         spark, table):
     """The streaming rows take their source schema from the Arrow table
-    they split (no inference job); it must be exactly the schema Spark
-    infers from the parquet file, timestamp_ntz included."""
+    they split, and queries.load from the parquet footer (no inference
+    job); both must be exactly the schema Spark infers from the parquet
+    file, timestamp_ntz included."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    from spellchecker_wasm_spark.queries import _read_arrow
+    from spellchecker_wasm_spark.queries import _read_arrow, load
 
+    want = spark.read.parquet(f"{SF_DIR}/{table}.parquet").schema
     got = from_arrow_schema(_read_arrow(SF_DIR, table).schema,
                             prefer_timestamp_ntz=True)
-    assert got == spark.read.parquet(f"{SF_DIR}/{table}.parquet").schema
+    assert got == want
+    assert load(spark, SF_DIR, table).schema == want
 
 
 def test_stream_row_timeout_raises_and_stops_query(spark, monkeypatch):
