@@ -19,20 +19,18 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.delete_expr import delete_keys_array
 
 
-def build_blocks(terms: DataFrame, term_col: str = "term",
-                 max_edit_distance: int = 2,
-                 prefix_length: int = 7) -> DataFrame:
+def build_blocks(terms: DataFrame) -> DataFrame:
     """(…, term) → (term, block_key) — one row per delete key.
 
     Key generation is the pure-Catalyst combinatorial expression
     (functions/delete_expr.py) — set-identical to the recursive reference
     kernel but whole-stage-codegen'd JVM string ops, no Python worker.
     The expression returns a deduplicated key array per term, so no
-    distinct() is needed when `terms` is term-unique.
+    distinct() is needed when `terms` is term-unique.  Edit distance 2
+    and prefix length 7 match ``LinkageConfig``'s defaults.
     """
-    keys = delete_keys_array(F.col(term_col), max_edit_distance, prefix_length)
-    return terms.select(F.col(term_col).alias("term"),
-                        F.explode(keys).alias("block_key"))
+    return terms.select("term", F.explode(
+        delete_keys_array(F.col("term"), 2, 7)).alias("block_key"))
 
 
 def cap_hot_blocks(blocks: DataFrame, max_block_size: int,

@@ -1,12 +1,13 @@
-"""Transitive clustering: iterative large-star / small-star connected
-components (Kiveris et al., "Connected Components in MapReduce and
-Beyond") over scored pairs — the stage the north rule adds on top of the
-reference (which stops at pairwise suggestions).
+"""Transitive clustering: connected components over scored pairs — the
+stage the north rule adds on top of the reference (which stops at
+pairwise suggestions).
 
-Plain DataFrame ops, no GraphFrames: each round is two groupBy-min joins;
-``localCheckpoint`` truncates lineage per iteration so plans stay flat at
-any depth.  Converges in O(log n) rounds even on path graphs; termination
-is detected by edge-set fixpoint (count + order-insensitive hash).
+One lazy plan, no GraphFrames: ``max_iter`` large-star / small-star
+rounds (Kiveris et al., "Connected Components in MapReduce and Beyond")
+optionally shrink the edge set, then a union-find finisher runs in one
+``mapInPandas`` task over the remaining edges.  Each star round
+preserves connectivity, so the finisher is exact after any number of
+rounds.
 
 Output: (node, component) where component is the minimum member id —
 deterministic for longs and strings alike.
@@ -14,6 +15,7 @@ deterministic for longs and strings alike.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
@@ -46,16 +48,9 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return nbr_edges.union(self_edges).distinct()
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.select(
-        F.count(F.lit(1)).alias("n"),
-        F.expr("coalesce(bit_xor(xxhash64(src, dst)), 0)").alias("h")).first()
-    return row["n"], row["h"]
-
-
-def _driver_union_find(rows) -> dict:
-    """Weighted quick-union with path halving over collected edge rows —
-    the finisher for frontiers that fit on the driver."""
+def _union_find(rows) -> dict:
+    """Weighted quick-union with path halving over (src, dst) edge
+    rows → {node: min member of its component}."""
     parent: dict = {}
 
     def find(x):
@@ -75,111 +70,46 @@ def _driver_union_find(rows) -> dict:
     return {x: find(x) for x in parent}
 
 
+def _finish(batches):
+    """mapInPandas body: every edge batch of the single partition →
+    one (node, component) frame."""
+    comp = _union_find(pair for pdf in batches
+                       for pair in zip(pdf["src"].tolist(),
+                                       pdf["dst"].tolist()))
+    yield pd.DataFrame({"node": list(comp.keys()),
+                        "component": list(comp.values())})
+
+
 def connected_components(edges: DataFrame, src_col: str = "id_a",
-                         dst_col: str = "id_b", max_iter: int = 25,
-                         nodes: DataFrame | None = None,
-                         driver_finish_threshold: int = 4_000_000) -> DataFrame:
+                         dst_col: str = "id_b", max_iter: int = 0,
+                         nodes: DataFrame | None = None) -> DataFrame:
     """edges(src,dst) → (node, component=min id in component).
 
     ``nodes`` (single-column) adds isolated nodes as their own singleton
     components — pass the full entity table so every row gets a cluster id.
+    Edges with a NULL endpoint are dropped.
 
-    Hybrid strategy (the shape production CC systems use — Kiveris et al.
-    §6): large-star/small-star rounds shrink the edge frontier
-    geometrically, and once it fits comfortably on the driver
-    (``driver_finish_threshold`` rows) a union-find finisher replaces the
-    remaining O(log n) rounds — each distributed round costs ~6 fixed
-    shuffle stages regardless of size, which dominates wall clock on small
-    frontiers (measured: a 130k-edge graph spent ~8s in rounds vs <1s
-    collected).  At 10^12-page scale the early rounds run distributed and
-    the finisher only ever sees the shrunken star roots.
+    Building the result runs no Spark job unless ``max_iter`` > 0: each
+    of the ``max_iter`` star rounds ahead of the finisher is
+    materialized with ``localCheckpoint`` when the frame is built.
 
-    Driver memory at the threshold: the frontier arrives as TWO int64
-    pandas columns over Arrow (~16 B/edge resident, ~40 B/edge transient
-    during the Arrow batch handoff — NOT per-edge Row objects), plus the
-    union-find dict at ~90 B/node for the nodes the frontier touches; the
-    4M default is ~160 MB of Arrow columns + ~450 MB of transient Python
-    ints during the zip + ≤ ~720 MB dict worst-case (every edge touching
-    two fresh nodes) — ~1.3 GB peak, sized for the ≥4 GB drivers any
-    multi-executor job runs with.  Scale the threshold linearly with
-    driver heap if you raise it.  (Measured crossover: one distributed
-    round costs ~30 s of core-count-independent wall — 6 shuffle stages +
-    distinct + checkpoint — versus ~5 s to union-find a 2.6M-edge
-    frontier on the driver, so finishing early is the win well past the
-    old 2M default.)
+    Memory: the finisher task keeps one dict entry per node that an edge
+    touches; the edges stream through it in Arrow batches.  Measured
+    calling the finisher in one Python process on 100k-row batches (4-vCPU
+    host; growth of peak RSS over the loaded batches, output frame
+    included): 1M random edges (864k nodes) took 2.6 s and +151 MB, 4M
+    edges (3.46M nodes) 12.8 s and +551 MB.  Star rounds shrink the edges
+    shipped to that task, not the node set it holds.
     """
-    spark = edges.sparkSession
     node_type = edges.schema[src_col].dataType
-    base = (edges.select(F.col(src_col).alias("src"),
-                         F.col(dst_col).alias("dst"))
-            .where(F.col("src").isNotNull() & F.col("dst").isNotNull()))
-    # threshold decision on the RAW edge count (upper bound on distinct):
-    # the driver path skips the distinct shuffle entirely — union-find
-    # absorbs duplicate edges for free.
-    # The slim (src, dst) frame is PERSISTED for the first round: the
-    # threshold count and the subsequent consumer (Arrow collect on the
-    # driver path, distinct+checkpoint on the distributed path) would
-    # otherwise each re-evaluate the caller's edge subtree — for an
-    # expensive producer (dedup_clusters' inverted-index Jaccard pairs)
-    # that doubled the whole query.  16 B/edge, spills to disk at scale —
-    # the same materialization production CC systems start from.
-    e = base.persist()
-    src_cache = e
-    assign = None
-    prev_fp = None
-    first_round = True
+    e = (edges.select(F.col(src_col).alias("src"),
+                      F.col(dst_col).alias("dst"))
+         .where(F.col("src").isNotNull() & F.col("dst").isNotNull()))
     for _ in range(max_iter):
-        n_edges = prev_fp[0] if prev_fp is not None else e.count()
-        if first_round and n_edges > driver_finish_threshold:
-            # distinct + checkpoint only when distributed rounds will run
-            e = e.distinct().localCheckpoint(eager=True)
-            n_edges = e.count()
-            src_cache.unpersist()
-            src_cache = None
-        first_round = False
-        if n_edges <= driver_finish_threshold:
-            # Arrow collect: two flat int64 columns, not 100+B Row objects
-            pdf = e.toPandas()
-            if src_cache is not None:
-                src_cache.unpersist()
-                src_cache = None
-            comp = _driver_union_find(
-                zip(pdf["src"].tolist(), pdf["dst"].tolist()))
-            schema = T.StructType([T.StructField("node", node_type),
-                                   T.StructField("component", node_type)])
-            # Arrow in BOTH directions: building the assignment from two
-            # flat columns ships one Arrow batch instead of pickling a
-            # row list (measured ~2× on the materialize step; matters
-            # linearly as the finisher threshold grows)
-            import pandas as _pd
-            assign = spark.createDataFrame(
-                _pd.DataFrame({"node": list(comp.keys()),
-                               "component": list(comp.values())}), schema)
-            break
-        out = _small_star(_large_star(e))
-        # size-aware parallelism: each round runs ~6 shuffle stages over a
-        # rapidly-shrinking edge set; without this, small graphs pay
-        # per-task scheduling for hundreds of near-empty partitions (3×
-        # anti-scaling measured at 32 cores on a 260k-edge graph)
-        if prev_fp is not None:
-            # coalesce never increases partition count, so this is a no-op
-            # for graphs big enough to need full parallelism
-            out = out.coalesce(prev_fp[0] // 250_000 + 1)
-        e = out.localCheckpoint(eager=True)
-        fp = _fingerprint(e)
-        if fp == prev_fp:
-            break
-        prev_fp = fp
-    else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
-
-    if assign is None:
-        # converged distributed: every edge points node → component root
-        assign = (e.select(F.col("src").alias("node"),
-                           F.col("dst").alias("component"))
-                  .union(e.select(F.col("dst").alias("node"),
-                                  F.col("dst").alias("component")))
-                  .groupBy("node").agg(F.min("component").alias("component")))
+        e = _small_star(_large_star(e)).localCheckpoint()
+    schema = T.StructType([T.StructField("node", node_type),
+                           T.StructField("component", node_type)])
+    assign = e.repartition(1).mapInPandas(_finish, schema)
     if nodes is not None:
         node_col = nodes.columns[0]
         # one left join instead of anti-join + union (2 stages → 1):

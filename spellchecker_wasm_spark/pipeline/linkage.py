@@ -127,7 +127,9 @@ class LinkageConfig:
     max_edit_distance: int = 2
     prefix_length: int = 7
     max_block_size: int = 500
-    max_cc_iter: int = 25
+    # star rounds ahead of the clustering finisher
+    # (operators/clustering.connected_components)
+    max_cc_iter: int = 0
     min_token_len: int = 2
     verify_extraction: bool = True
     # apply the lossless 2d-banded Levenshtein verification BEFORE pair
@@ -156,16 +158,9 @@ def blocks_stage(pdim: DataFrame, config: LinkageConfig
         title_prefixes_array(F.col("title"), config)).alias("prefix"))
     dropped = hot_keys_vocab(toks, config)
     # persist only the CAPPED explode (hot keys carry most of the raw
-    # volume), materialized once for both pair-join sides — and persist it
-    # ALREADY PARTITIONED by block_key: the one repartition exchange here
-    # replaces the two exchanges the self-join would otherwise perform
-    # (both sides read the same cached partitioning), and with the
-    # shuffle_hash build hint the pair join runs with zero sorts and zero
-    # further shuffles (measured 59.6s → 36.9s block+pair at 8 pinned
-    # cores on the 600k-page protocol input)
+    # volume), materialized once for both pair-join sides
     capped = (blocks.join(F.broadcast(dropped.select("block_key")),
                           "block_key", "left_anti")
-              .repartition(F.col("block_key"))
               .persist())
     return capped, dropped
 

@@ -741,9 +741,7 @@ def _q_graph_triangles(spark, sf_dir):
     scalar row).  `pairs` feeds the degree union and the edge build,
     `deg` is referenced three times (two orientation joins + the
     wedge/global stats), and the oriented edge list `e` is self-joined
-    three ways; each is now computed exactly once per action — the
-    same slim-frame materialization connected_components starts from
-    (operators/clustering.py).
+    three ways; each is now computed exactly once per action.
 
     Degree-ORIENTED counting (the compact-forward algorithm): every
     edge points from the lower (degree, id) endpoint to the higher, so
@@ -1382,16 +1380,16 @@ _O_MINHASH_LSH = ("WITH " + _SQL_LSH_PAIR_CTES
 
 def _q_dedup_lsh_clusters(spark, sf_dir):
     """The dedup endgame over the SCALE path: MinHash-LSH candidate
-    pairs (bucket-capped, signatures computed once) feed large-star/
-    small-star connected components, emitting (cluster_id,
-    is_canonical) per document — dedup_clusters' twin with the LSH
-    pair generator swapped for the exact-Jaccard one.  At 10^12 docs
+    pairs (bucket-capped, signatures computed once) feed connected
+    components, emitting (cluster_id, is_canonical) per document —
+    dedup_clusters' twin with the LSH pair generator swapped for the
+    exact-Jaccard one.  At 10^12 docs
     THIS is the pipeline that runs: the inverted-index Jaccard row
     needs every posting pair; LSH needs only banded bucket collisions.
 
     Scale shape: everything above CC is the minhash_lsh_dups plan
-    (narrow (doc_id, band_key) shuffles); CC shuffles (long, long)
-    edges and driver-finishes small frontiers
+    (narrow (doc_id, band_key) shuffles); CC shuffles the (long, long)
+    edges into one union-find task inside the plan
     (operators/clustering.py)."""
     from .operators.clustering import connected_components
 
@@ -2685,13 +2683,13 @@ FROM s
 def _q_dedup_clusters(spark, sf_dir):
     """Doc-level near-duplicate CLUSTERING: the dedup endgame a training
     pipeline actually runs — verified near-dup pairs (inverted-index
-    n-gram Jaccard >= 0.2, hot-bucket capped) feed large-star/small-star
-    connected components, and each document gets (cluster_id, is_canonical)
+    n-gram Jaccard >= 0.2, hot-bucket capped) feed connected
+    components, and each document gets (cluster_id, is_canonical)
     where the canonical survivor is the minimum doc_id of its component.
 
     Scale shape: pair volume is bucket-bounded (the same cap the pair
-    query carries), CC shuffles only (long, long) edges and finishes on
-    the driver once the frontier fits (operators/clustering.py); the
+    query carries), CC shuffles only (long, long) edges into one
+    union-find task inside the plan (operators/clustering.py); the
     corpus itself is scanned once for the shingle pass and once for the
     singleton node set."""
     from .operators.clustering import connected_components
@@ -2754,7 +2752,7 @@ def _q_leakage_safe_split(spark, sf_dir):
     arithmetic (same residue family sample_stratified pins).
 
     Scale shape: everything rides dedup_clusters' plan (bucket-capped
-    pair volume, large-star/small-star CC); the split itself is a pure
+    pair volume, union-find CC); the split itself is a pure
     projection — zero additional shuffles."""
     cc = _q_dedup_clusters(spark, sf_dir)
     bucket = F.pmod(F.col("cluster_id") * F.lit(2654435761), F.lit(10))
@@ -5000,8 +4998,8 @@ def _q_linkage_cluster_f1(spark, sf_dir):
     """The north rule's FULL statement — "matching entity clusters
     (pairwise F1) on labeled pairs" — evaluated after the transitive
     clustering stage, not just on scored pairs: predicted pairs feed
-    large-star/small-star connected components, each cluster induces its
-    complete pair set, and the induced pairs are scored against truth.
+    connected components, each cluster induces its complete pair set,
+    and the induced pairs are scored against truth.
 
     Clustering can only merge (never split) blocking-stage predictions,
     so recall stays 1.0 while any scored false positive transitively
@@ -5505,7 +5503,7 @@ def _lk_cc_asg(spark, sf_dir):
     # PERSISTED shared subtree (guide §5): eight post-clustering catalog
     # entries (golden_record, cluster_stats/diameter, bcubed/ari/purity,
     # both incremental-linkage forms) consume this assignment; the CC
-    # driver-finish otherwise re-runs per entry.  (long, long) rows.
+    # finisher task otherwise re-runs per entry.  (long, long) rows.
     return pages, (cc.select(F.col("node").alias("page_id"), "component")
                    .persist())
 
@@ -7210,8 +7208,8 @@ def _q_canopy_blocking(spark, sf_dir, max_component=None):
 
     Scale shape: the gram inverted index bounds the similarity join
     (qgram_blocking's audited shape, plus the HAVING >= loose cut);
-    connected components is the hybrid large-star/small-star operator
-    the linkage pipeline ships; component payloads are (id, 6-gram
+    connected components is the union-find operator the linkage
+    pipeline ships; component payloads are (id, 6-gram
     array) structs bounded by the loose threshold's component sizes —
     the loose bar is the paper's T1 knob, but a knob is not a guard
     (VERDICT r4 #2): on a skewed real corpus one stock-phrase-dominated

@@ -65,6 +65,22 @@ def test_fused_prefilter_equals_post_dedup(pages_and_labels):
     assert to_sets(base["clusters"]) == to_sets(fused["clusters"])
 
 
+def test_run_linkage_builds_lazily(spark, pages_and_labels):
+    """Without the extraction check and a StageWriter, building the
+    linkage frames (blocks → pairs → scoring → clustering) schedules no
+    Spark job; the same job-group check as the catalog laziness test."""
+    pages, _ = pages_and_labels
+    sc = spark.sparkContext
+    group = "build:run_linkage"
+    sc.setJobGroup(group, "run_linkage construction must schedule no jobs")
+    try:
+        run_linkage(spark, pages, LinkageConfig(verify_extraction=False))
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert not sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_linkage_resume_from_checkpoint(spark, pages_and_labels, tmp_path):
     pages, labels = pages_and_labels
     writer = StageWriter(spark, str(tmp_path), "run1")

@@ -153,14 +153,6 @@ _EAGER = ("stream_", "fs_round2", "fs_converged", "checkpoint_resume",
 # the reason; every other entry must build without scheduling one
 # (ROADMAP aim 3: building a DataFrame never runs a job)
 _BUILD_RUNS_JOBS = {
-    # connected_components counts the edge frame and collects it to the
-    # driver union-find when it fits (operators/clustering.py)
-    **{name: "connected_components counts + collects the edges"
-       for name in ("ari_quality", "bcubed_quality", "canopy_blocking",
-                    "cluster_diameter", "cluster_stats", "curation_funnel",
-                    "dedup_clusters", "dedup_lsh_clusters", "golden_record",
-                    "leakage_safe_split", "linkage_cluster_f1",
-                    "purity_quality", "term_clusters")},
     # the kernel needs the whole dictionary on the driver
     # (operators/compound._collect_dict)
     **{name: "collects the dictionary into the SymSpell kernel"

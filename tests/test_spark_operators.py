@@ -157,9 +157,9 @@ def test_connected_components_random_graph(spark):
 
 
 def test_connected_components_distributed_rounds(spark):
-    """Force the large-star/small-star rounds (driver_finish_threshold=0
-    keeps the finisher out entirely) — they must agree with brute force
-    on the same random graph that exercises the driver path above."""
+    """Run three large-star/small-star rounds ahead of the finisher —
+    the finisher over their shrunken edge set must agree with brute
+    force on a second random graph."""
     import random
     rng = random.Random(7)
     nodes = list(range(150))
@@ -168,17 +168,35 @@ def test_connected_components_distributed_rounds(spark):
     ndf = spark.createDataFrame([Row(node=n) for n in nodes])
     got = {r["node"]: r["component"]
            for r in connected_components(
-               edf, nodes=ndf, driver_finish_threshold=0).collect()}
+               edf, nodes=ndf, max_iter=3).collect()}
     assert got == _brute_components(edges, nodes)
 
 
-def test_connected_components_long_chain(spark):
+@pytest.mark.parametrize("max_iter", [0, 2])
+def test_connected_components_long_chain(spark, max_iter):
     # path graph: worst case for naive propagation, fine for star rounds
+    # and for the finisher after them
     edges = [(i, i + 1) for i in range(40)]
     edf = spark.createDataFrame([Row(id_a=a, id_b=b) for a, b in edges])
-    got = connected_components(edf).collect()
+    got = connected_components(edf, max_iter=max_iter).collect()
     assert {r["component"] for r in got} == {0}
     assert len(got) == 41
+
+
+def test_connected_components_empty_and_null_edges(spark):
+    # no edges: nothing without ``nodes``, singletons with them; an edge
+    # with a NULL endpoint joins nothing
+    empty = spark.createDataFrame([], "id_a long, id_b long")
+    assert connected_components(empty).collect() == []
+    ndf = spark.createDataFrame([Row(node=5), Row(node=3)])
+    got = {r["node"]: r["component"]
+           for r in connected_components(empty, nodes=ndf).collect()}
+    assert got == {3: 3, 5: 5}
+    edf = spark.createDataFrame([(1, None), (None, 2), (4, 3), (None, None)],
+                                "id_a long, id_b long")
+    got = {r["node"]: r["component"]
+           for r in connected_components(edf).collect()}
+    assert got == {3: 3, 4: 3}
 
 
 def test_connected_components_strings(spark):
