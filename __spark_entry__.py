@@ -2,8 +2,8 @@
 
 ``entry(spark)`` runs the flagship record-linkage slice on sf0.001:
 SymSpell delete-key blocking over document tokens → candidate pairs →
-vectorized banded Damerau-OSA scoring → large-star/small-star connected
-components → (term, cluster_id).
+vectorized banded Damerau-OSA scoring → connected components (a
+union-find finisher inside the plan) → (term, cluster_id).
 
 ``queries()``/``oracle_sql()`` expose the full operator catalog
 (spellchecker_wasm_spark/queries.py) — every entry is oracle-checked

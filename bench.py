@@ -16,7 +16,8 @@ The complete 123-query timing map is written to the BENCH/ window file
 named in "full_results".  BENCH_MODE=pipeline restricts to the linkage
 pipeline (used by bench_scaling.py for the two-parallelism-level
 protocol); BENCH_QUERIES=a,b,c restricts the catalog subset;
-BENCH_ROUND tags the window file (default r4).
+BENCH_ROUND tags the window file (default r5: pass the current round's
+tag, or the run is filed under r5).
 """
 
 from __future__ import annotations

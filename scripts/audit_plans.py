@@ -10,6 +10,12 @@ zero BatchEvalPython, no CartesianProduct, and bounded exchange counts
 degrades predictably with input size; anything else needs a prose
 justification in PLANS.md.
 
+Each row is built from an empty cache, so its counts do not depend on
+which shared persisted frames earlier rows materialized (a materialized
+cache prints its AQE final and initial plans both).  An eager row still
+materializes what it collects while it is built: the compound rows show
+the shared term-count dictionary (queries._term_counts) that way.
+
 Streaming entries (stream_*) EXECUTE on build (they return the memory
 sink's table), so their batch-plan counts are not meaningful here; they
 are listed but marked — their stateful plans are audited in PLANS.md
@@ -51,6 +57,17 @@ NODES = [
 ]
 
 
+def plan_counts(spark, name: str, sf_dir: str = SF_DIR) -> dict:
+    """Node counts of one CATALOG row's executed plan, built from an
+    empty cache."""
+    from spellchecker_wasm_spark.queries import CATALOG
+
+    spark.catalog.clearCache()
+    df = CATALOG[name][0](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return {k: plan.count(pat) for k, pat in NODES}
+
+
 def main() -> int:
     from spellchecker_wasm_spark.queries import CATALOG
     from spellchecker_wasm_spark.session import get_spark
@@ -63,12 +80,10 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            df = CATALOG[name][0](spark, SF_DIR)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            counts = plan_counts(spark, name)
         except Exception as exc:  # noqa: BLE001 — audit must list, not die
             bad.append((name, repr(exc)))
             continue
-        counts = {k: plan.count(pat) for k, pat in NODES}
         counts["build_s"] = round(time.time() - t0, 2)
         rows.append((name, counts))
 
@@ -86,14 +101,16 @@ def main() -> int:
            "constant-size frame attaches (bloom bitmap, ARI/KMV scalar",
            "reductions, funnel constants).",
            "`imts` = InMemoryTableScan (persisted frame reference).",
+           "Each row is built from an empty cache.",
            "CAVEAT for rows with imts > 0: the formatted plan re-embeds",
            "a persisted frame's FULL build subtree at every reference,",
            "so the static `shuffles` count double-counts the producer",
            "per reference; at runtime the cache materializes once and",
            "every further reference is an in-memory scan — the static",
-           "number is an upper bound, not the executed shuffle count",
-           "(graph_triangles and the compound dictionary frames are the",
-           "persisted cases; see PLANS.md).\n",
+           "number is an upper bound, not the executed shuffle count.",
+           "The compound rows collect the shared term-count dictionary",
+           "while they are built, so their plans print it materialized",
+           "(AQE final and initial plan both); see PLANS.md.\n",
            "| query | shuffles | range | bcast | reused | SMJ | SHJ |"
            " BHJ | BNLJ | cart | arrowPy | batchPy | grpPandas |"
            " mapPandas | gen | wgl | imts |",

@@ -93,12 +93,43 @@ def kernel_from_counts(words: dict[str, int], bigrams: dict[str, int] | None,
         k.create_dictionary_entry(term, count)
     if bigrams:
         k.bigrams = dict(bigrams)
-        if bigrams:
-            k.bigram_count_min = min(bigrams.values())
+        k.bigram_count_min = min(bigrams.values())
         # direct bigram assignment bypasses write_line_to_bigram_dictionary,
         # so invalidate the bigram-dependent compound-decision memo here
         k._part_cache.clear()
     return k
+
+
+def _map_with_kernel(docs: DataFrame, text_col: str,
+                     id_cols: tuple[str, ...], kernel_args: tuple,
+                     fields: list[T.StructField], apply) -> DataFrame:
+    """The compound operators' harness: broadcast the collected
+    ``kernel_from_counts`` arguments, build the kernel once per executor
+    (cached by a per-call token), and stream the documents through
+    ``fan_out().mapInPandas``.  ``apply(kernel, texts)`` returns one
+    list per output field, aligned with the batch's texts."""
+    import uuid
+    bc = docs.sparkSession.sparkContext.broadcast(kernel_args)
+    cache_token = uuid.uuid4().hex
+    schema = T.StructType([docs.schema[c] for c in id_cols] + fields)
+    # text_col may itself be an id column (e.g. probe tables keyed by the
+    # probe text) — select each column once
+    cols = list(dict.fromkeys(list(id_cols) + [text_col]))
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        kernel = _KERNEL_CACHE.get(cache_token)
+        if kernel is None:
+            kernel = kernel_from_counts(*bc.value)
+            _cache_put(cache_token, kernel)
+        for pdf in batches:
+            out = pdf[list(id_cols)].copy() if id_cols else pd.DataFrame(
+                index=pdf.index)
+            for field, values in zip(fields,
+                                     apply(kernel, list(pdf[text_col]))):
+                out[field.name] = values
+            yield out
+
+    return fan_out(docs.select(cols)).mapInPandas(fn, schema)
 
 
 def compound_correct(docs: DataFrame, text_col: str, words_df: DataFrame,
@@ -111,56 +142,36 @@ def compound_correct(docs: DataFrame, text_col: str, words_df: DataFrame,
     correction row per document (lookup_compound always returns 1 item,
     sym_spell.rs:675).  The dictionary collect is threshold-filtered and
     hard-bounded (see _collect_dict)."""
-    spark = docs.sparkSession
     words = _collect_dict(words_df, "term", count_threshold, max_dict_terms)
     bigrams = (_collect_dict(bigrams_df, "bigram", count_threshold,
                              max_dict_terms)
                if bigrams_df is not None else None)
-    bc = spark.sparkContext.broadcast(
-        (words, bigrams, max_edit_distance, prefix_length))
-    import uuid
-    cache_token = uuid.uuid4().hex
 
-    out_fields = [docs.schema[c] for c in id_cols]
-    out_fields += [T.StructField("corrected", T.StringType()),
-                   T.StructField("distance", T.LongType()),
-                   T.StructField("count", T.LongType())]
-    schema = T.StructType(out_fields)
-    # text_col may itself be an id column (e.g. probe tables keyed by the
-    # probe text) — select each column once
-    cols = list(dict.fromkeys(list(id_cols) + [text_col]))
+    def correct(kernel: SymSpellKernel, texts: list) -> tuple[list, ...]:
+        # per-doc sequential correction (irreducible), but the final
+        # assembly distance — an UNBOUNDED full-document OSA
+        # (sym_spell.rs:663-676) that dominated the wall at ~16ms per
+        # 300-char doc — runs once per batch as a numpy DP vectorized
+        # across documents (exact per-pair equality with the scalar
+        # is property-tested)
+        parts = [kernel.lookup_compound_joined(t, max_edit_distance)
+                 if t is not None else None
+                 for t in texts]
+        pair_t = [t if p is not None else "" for t, p in zip(texts, parts)]
+        pair_j = [p[0] if p is not None else "" for p in parts]
+        dists = _osa_batch_unbounded(pair_t, pair_j)
+        return ([p[0] if p else None for p in parts],
+                [max(int(d), 0) if p is not None else None
+                 for p, d in zip(parts, dists)],
+                [min(int(p[1]), 2**63 - 1) if p else None for p in parts])
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.distance_np import osa_batch
-        kernel = _KERNEL_CACHE.get(cache_token)
-        if kernel is None:
-            w, b, med, plen = bc.value
-            kernel = kernel_from_counts(w, b, med, plen)
-            _cache_put(cache_token, kernel)
-        for pdf in batches:
-            # per-doc sequential correction (irreducible), but the final
-            # assembly distance — an UNBOUNDED full-document OSA
-            # (sym_spell.rs:663-676) that dominated the wall at ~16ms per
-            # 300-char doc — runs once per batch as a numpy DP vectorized
-            # across documents (exact per-pair equality with the scalar
-            # is property-tested)
-            texts = list(pdf[text_col])
-            parts = [kernel.lookup_compound_joined(t, max_edit_distance)
-                     if t is not None else None
-                     for t in texts]
-            pair_t = [t if p is not None else "" for t, p in zip(texts, parts)]
-            pair_j = [p[0] if p is not None else "" for p in parts]
-            dists = _osa_batch_unbounded(pair_t, pair_j)
-            out = pdf[list(id_cols)].copy() if id_cols else pd.DataFrame(
-                index=pdf.index)
-            out["corrected"] = [p[0] if p else None for p in parts]
-            out["distance"] = [max(int(d), 0) if p is not None else None
-                               for p, d in zip(parts, dists)]
-            out["count"] = [min(int(p[1]), 2**63 - 1) if p else None
-                            for p in parts]
-            yield out
-
-    return fan_out(docs.select(cols)).mapInPandas(fn, schema)
+    return _map_with_kernel(
+        docs, text_col, id_cols,
+        (words, bigrams, max_edit_distance, prefix_length),
+        [T.StructField("corrected", T.StringType()),
+         T.StructField("distance", T.LongType()),
+         T.StructField("count", T.LongType())],
+        correct)
 
 
 def _osa_batch_unbounded(a: list, b: list):
@@ -207,40 +218,19 @@ def segment_texts(docs: DataFrame, text_col: str, words_df: DataFrame,
     reference's dead-code sym_spell.rs:692-775 — see the kernel docstring
     for the five transliteration defects repaired): docs(…, text) →
     (…, segmented, corrected, distance).  Same broadcast-dictionary /
-    per-executor-index design as compound_correct."""
-    spark = docs.sparkSession
+    per-executor-index harness as compound_correct."""
     words = _collect_dict(words_df, "term", count_threshold, max_dict_terms)
-    bc = spark.sparkContext.broadcast(
-        (words, max_edit_distance, prefix_length))
-    import uuid
-    cache_token = uuid.uuid4().hex
 
-    out_fields = [docs.schema[c] for c in id_cols]
-    out_fields += [T.StructField("segmented", T.StringType()),
-                   T.StructField("corrected", T.StringType()),
-                   T.StructField("distance", T.LongType())]
-    schema = T.StructType(out_fields)
-    cols = list(dict.fromkeys(list(id_cols) + [text_col]))
+    def segment(kernel: SymSpellKernel, texts: list) -> list[list]:
+        res = [kernel.word_segmentation(t, max_edit_distance)
+               if t is not None else (None, None, None)
+               for t in texts]
+        return [[r[i] for r in res] for i in range(3)]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kernel = _KERNEL_CACHE.get(cache_token)
-        if kernel is None:
-            w, med, plen = bc.value
-            kernel = kernel_from_counts(w, None, max(med, 2), plen)
-            _cache_put(cache_token, kernel)
-        for pdf in batches:
-            segs, cors, dists = [], [], []
-            for t in pdf[text_col]:
-                if t is None:
-                    segs.append(None); cors.append(None); dists.append(None)
-                    continue
-                s, c, d, _ = kernel.word_segmentation(t, bc.value[1])
-                segs.append(s); cors.append(c); dists.append(d)
-            out = pdf[list(id_cols)].copy() if id_cols else pd.DataFrame(
-                index=pdf.index)
-            out["segmented"] = segs
-            out["corrected"] = cors
-            out["distance"] = dists
-            yield out
-
-    return fan_out(docs.select(cols)).mapInPandas(fn, schema)
+    return _map_with_kernel(
+        docs, text_col, id_cols,
+        (words, None, max(max_edit_distance, 2), prefix_length),
+        [T.StructField("segmented", T.StringType()),
+         T.StructField("corrected", T.StringType()),
+         T.StructField("distance", T.LongType())],
+        segment)

@@ -86,9 +86,10 @@ def candidate_pairs(blocks: DataFrame, id_col: str = "term",
     partition; partition counts scale with data, so the build stays
     executor-memory-sized at any cluster size).  Measured on the
     600k-page protocol input at 8 pinned cores: 59.6s → 36.9s for the
-    block+pair stage when the caller also pre-partitions ``blocks`` by
-    block_key (run_linkage does) — the persisted partitioning then feeds
-    BOTH join sides with zero additional exchanges.  The term path takes
+    block+pair stage.  run_linkage persists ``blocks`` without
+    partitioning them by block_key (under the session's
+    canChangeCachedPlanOutputPartitioning a cached frame reports no
+    partitioning), so the join shuffles both sides.  The term path takes
     no hint: its inputs are vocabulary-sized, where auto-broadcast beats
     a forced SHJ.
     """

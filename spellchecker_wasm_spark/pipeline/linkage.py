@@ -6,15 +6,18 @@ pages(url, warc_ts, html, text, lang)
   → SymSpell delete-key blocking with hot-key capping        [blocks_stage]
   → candidate pairs (url_a < url_b, length window, dedup)    [pairs_stage]
   → vectorized banded Damerau-OSA scoring ≤ max_edit_distance [scoring_stage]
-  → large-star/small-star connected components               [clusters]
+  → connected components: union-find finisher inside the plan [clusters]
+    (optional large-star/small-star rounds ahead, max_cc_iter=0 default)
 
 ``run_linkage`` composes the three stage functions; the query catalog's
 linkage rows run them too, so its oracles check this plan.
 
 Scale design notes (10^12 documents):
 * every stage is a pure DataFrame plan: one vocabulary-level shuffle for
-  hot-key weights, one for the pair join (AQE skew-split), one per
-  distributed clustering round;
+  hot-key weights, one per side of the pair join (AQE skew-split; the
+  persisted capped frame is not repartitioned by key), and a
+  single-partition exchange into the union-find finisher (each optional
+  star round adds its own joins);
 * hot blocking keys (shared vocab words) are capped with logged accounting —
   recall is preserved because duplicate pages always share their
   discriminating rare-token blocks, while hot keys only produce pairs that

@@ -97,14 +97,29 @@ cand AS (
 )"""
 
 
+def _term_counts(spark, sf_dir) -> DataFrame:
+    """The corpus dictionary words(term, count), persisted: every
+    vocabulary row (word counts, term pairs, lookup, compound) reads
+    this one frame, so the token explode and its aggregation run once
+    per session."""
+    return (_tokens(spark, sf_dir).groupBy("term")
+            .agg(F.count(F.lit(1)).alias("count")).persist())
+
+
+# the oracle twin of _term_counts(...).where(length(term) >= 2): the
+# dictionary the lookup and compound rows read
+_SQL_WORDS = f"""toks AS ({_SQL_TOKS_NE}),
+words AS (SELECT term, count(*) AS count FROM toks
+          WHERE length(term) >= 2 GROUP BY term)"""
+
+
 def _distinct_terms(spark, sf_dir):
-    return _tokens(spark, sf_dir).select("term").distinct()
+    return _term_counts(spark, sf_dir).select("term")
 
 
 def _q_word_counts(spark, sf_dir):
-    return (_tokens(spark, sf_dir).groupBy("term")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .where(F.col("cnt") >= 2))
+    return (_term_counts(spark, sf_dir).where(F.col("count") >= 2)
+            .select("term", F.col("count").alias("cnt")))
 
 
 _O_WORD_COUNTS = (f"SELECT term, count(*) AS cnt FROM ({_SQL_TOKS_NE}) "
@@ -266,30 +281,44 @@ WHERE term NOT IN (SELECT term FROM comp)
 
 
 def _lookup_inputs(spark, sf_dir):
-    # PERSISTED shared subtrees (guide §5): five lookup catalog rows
-    # (closest/top/all/closest_self/top_unknown) rebuild this dictionary
-    # aggregation and probe set; the first materializes, the rest read
+    # PERSISTED probe set (guide §5): lookup_closest/top/all rebuild it
+    # over the shared dictionary; the first materializes, the rest read
     # cache.  Vocabulary-bounded rows.
-    words = (_tokens(spark, sf_dir).groupBy("term")
-             .agg(F.count(F.lit(1)).alias("count"))
-             .where(F.length("term") >= 2)
-             .persist())
-    probes = (words.where(F.length("term") >= 4)
-              .select(F.expr("substring(term, 1, length(term) - 1)")
-                      .alias("query"))
-              .distinct()
+    words = _term_counts(spark, sf_dir).where(F.length("term") >= 2)
+    probes = (_trimmed(words).distinct()
               .join(words.select(F.col("term").alias("query")), "query",
                     "left_anti")
               .persist())
     return probes, words
 
 
-_SQL_LOOKUP_BASE = f"""
-WITH toks AS ({_SQL_TOKS_NE}),
-words AS (SELECT term, count(*) AS count FROM toks
-          WHERE length(term) >= 2 GROUP BY term),
-probes AS (SELECT DISTINCT substr(term, 1, length(term) - 1) AS query
-           FROM words WHERE length(term) >= 4),
+def _trimmed(words):
+    # each dictionary term of 4+ chars less its last char (_SQL_PROBES)
+    return (words.where(F.length("term") >= 4)
+            .select(F.expr("substring(term, 1, length(term) - 1)")
+                    .alias("query")))
+
+
+def _lookup(probes, words, verbosity, **flags):
+    """distributed_lookup at max distance 2, as the lookup rows'
+    (query, term, distance, count)."""
+    res = distributed_lookup(probes, words, verbosity, 2, **flags)
+    return res.select("query", "term",
+                      F.col("distance").cast("int").alias("distance"),
+                      "count")
+
+
+_SQL_PROBES = ("SELECT DISTINCT substr(term, 1, length(term) - 1) AS query "
+               "FROM words WHERE length(term) >= 4")
+
+
+def _sql_lookup(probes_sql: str) -> str:
+    """The lookup oracles' CTEs over a probe query: `queries` are the
+    probes that are not dictionary terms, `scored` every dictionary
+    term within OSA distance 2 of one."""
+    return f"""
+WITH {_SQL_WORDS},
+probes AS ({probes_sql}),
 queries AS (SELECT query FROM probes
             WHERE query NOT IN (SELECT term FROM words)),
 scored AS (
@@ -301,12 +330,11 @@ scored AS (
 )"""
 
 
+_SQL_LOOKUP_BASE = _sql_lookup(_SQL_PROBES)
+
+
 def _q_lookup_closest(spark, sf_dir):
-    probes, words = _lookup_inputs(spark, sf_dir)
-    res = distributed_lookup(probes, words, Verbosity.CLOSEST, 2)
-    return res.select("query", "term",
-                      F.col("distance").cast("int").alias("distance"),
-                      "count")
+    return _lookup(*_lookup_inputs(spark, sf_dir), Verbosity.CLOSEST)
 
 
 _O_LOOKUP_CLOSEST = _SQL_LOOKUP_BASE + """
@@ -317,42 +345,32 @@ WHERE distance = (SELECT min(distance) FROM scored s2
 
 
 def _q_lookup_top(spark, sf_dir):
-    probes, words = _lookup_inputs(spark, sf_dir)
-    res = distributed_lookup(probes, words, Verbosity.TOP, 2)
-    return res.select("query", "term",
-                      F.col("distance").cast("int").alias("distance"),
-                      "count")
+    return _lookup(*_lookup_inputs(spark, sf_dir), Verbosity.TOP)
 
 
-_O_LOOKUP_TOP = _SQL_LOOKUP_BASE + """
+_SQL_TOP = """
 SELECT query, term, distance, count FROM (
     SELECT *, row_number() OVER (PARTITION BY query
         ORDER BY distance ASC, count DESC, term ASC) AS rn FROM scored)
 WHERE rn = 1
 """
 
+_O_LOOKUP_TOP = _SQL_LOOKUP_BASE + _SQL_TOP
+
 
 def _q_dictionary_export(spark, sf_dir):
     """Offline dictionary builder (reference CreateDictionary.cs:34-156):
     aggregate counts, keep terms above threshold, rank by frequency, cap."""
-    return (_tokens(spark, sf_dir).groupBy("term")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .where(F.col("cnt") >= 2)
+    return (_q_word_counts(spark, sf_dir)
             .orderBy(F.desc("cnt"), F.asc("term"))
             .limit(50))
 
 
-_O_DICTIONARY_EXPORT = (
-    f"SELECT term, count(*) AS cnt FROM ({_SQL_TOKS_NE}) GROUP BY term "
-    "HAVING count(*) >= 2 ORDER BY cnt DESC, term ASC LIMIT 50")
+_O_DICTIONARY_EXPORT = _O_WORD_COUNTS + " ORDER BY cnt DESC, term ASC LIMIT 50"
 
 
 def _q_lookup_all(spark, sf_dir):
-    probes, words = _lookup_inputs(spark, sf_dir)
-    res = distributed_lookup(probes, words, Verbosity.ALL, 2)
-    return res.select("query", "term",
-                      F.col("distance").cast("int").alias("distance"),
-                      "count")
+    return _lookup(*_lookup_inputs(spark, sf_dir), Verbosity.ALL)
 
 
 _O_LOOKUP_ALL = (_SQL_LOOKUP_BASE
@@ -422,37 +440,13 @@ def _q_lookup_closest_self(spark, sf_dir):
     NOT anti-joined against the dictionary, so in-dictionary queries take
     the exact-match short circuit and emit only their self row."""
     _, words = _lookup_inputs(spark, sf_dir)
-    probes = (words.where(F.length("term") >= 4)
-              .select(F.expr("substring(term, 1, length(term) - 1)")
-                      .alias("query"))
-              .distinct())
-    res = distributed_lookup(probes, words, Verbosity.CLOSEST, 2,
-                             include_self=True)
-    return res.select("query", "term",
-                      F.col("distance").cast("int").alias("distance"),
-                      "count")
+    return _lookup(_trimmed(words).distinct(), words, Verbosity.CLOSEST,
+                   include_self=True)
 
 
-_O_LOOKUP_CLOSEST_SELF = f"""
-WITH toks AS ({_SQL_TOKS_NE}),
-words AS (SELECT term, count(*) AS count FROM toks
-          WHERE length(term) >= 2 GROUP BY term),
-probes AS (SELECT DISTINCT substr(term, 1, length(term) - 1) AS query
-           FROM words WHERE length(term) >= 4),
-known AS (SELECT p.query, p.query AS term, 0 AS distance, w.count
-          FROM probes p JOIN words w ON w.term = p.query),
-unknown_q AS (SELECT query FROM probes
-              WHERE query NOT IN (SELECT term FROM words)),
-scored AS (
-    SELECT q.query, w.term,
-           CAST(damerau_levenshtein(q.query, w.term) AS INTEGER) AS distance,
-           w.count
-    FROM unknown_q q JOIN words w
-      ON damerau_levenshtein(q.query, w.term) <= 2 AND w.term <> q.query)
-SELECT query, term, distance, count FROM scored s
-WHERE distance = (SELECT min(distance) FROM scored s2 WHERE s2.query = s.query)
-UNION ALL
-SELECT query, term, distance, count FROM known
+_O_LOOKUP_CLOSEST_SELF = _O_LOOKUP_CLOSEST + """UNION ALL
+SELECT p.query, p.query AS term, 0 AS distance, w.count
+FROM probes p JOIN words w ON w.term = p.query
 """
 
 
@@ -462,44 +456,22 @@ def _q_lookup_top_unknown(spark, sf_dir):
     has no suggestion within the distance bound and synthesizes
     (query, query, med+1, 0)."""
     _, words = _lookup_inputs(spark, sf_dir)
-    base = words.where(F.length("term") >= 4)
-    p1 = base.select(F.expr("substring(term, 1, length(term) - 1)")
-                     .alias("query"))
-    p2 = base.select(F.concat(F.col("term"), F.lit("qx")).alias("query"))
-    probes = (p1.union(p2).distinct()
+    mangled = (words.where(F.length("term") >= 4)
+               .select(F.concat(F.col("term"), F.lit("qx")).alias("query")))
+    probes = (_trimmed(words).union(mangled).distinct()
               .join(words.select(F.col("term").alias("query")), "query",
                     "left_anti"))
-    res = distributed_lookup(probes, words, Verbosity.TOP, 2,
-                             include_unknown=True)
-    return res.select("query", "term",
-                      F.col("distance").cast("int").alias("distance"),
-                      "count")
+    return _lookup(probes, words, Verbosity.TOP, include_unknown=True)
 
 
-_O_LOOKUP_TOP_UNKNOWN = f"""
-WITH toks AS ({_SQL_TOKS_NE}),
-words AS (SELECT term, count(*) AS count FROM toks
-          WHERE length(term) >= 2 GROUP BY term),
-probes AS (SELECT DISTINCT query FROM (
-        SELECT substr(term, 1, length(term) - 1) AS query FROM words
-        WHERE length(term) >= 4
-        UNION ALL
-        SELECT term || 'qx' FROM words WHERE length(term) >= 4)
-    WHERE query NOT IN (SELECT term FROM words)),
-scored AS (
-    SELECT q.query, w.term,
-           CAST(damerau_levenshtein(q.query, w.term) AS INTEGER) AS distance,
-           w.count
-    FROM probes q JOIN words w
-      ON damerau_levenshtein(q.query, w.term) <= 2 AND w.term <> q.query),
-top AS (SELECT query, term, distance, count FROM (
-    SELECT *, row_number() OVER (PARTITION BY query
-        ORDER BY distance ASC, count DESC, term ASC) AS rn FROM scored)
-    WHERE rn = 1)
+_O_LOOKUP_TOP_UNKNOWN = _sql_lookup(
+    _SQL_PROBES + " UNION SELECT term || 'qx' FROM words "
+    "WHERE length(term) >= 4") + f""",
+top AS ({_SQL_TOP})
 SELECT query, term, distance, count FROM top
 UNION ALL
 SELECT query, query AS term, 3 AS distance, CAST(0 AS BIGINT) AS count
-FROM probes WHERE query NOT IN (SELECT query FROM top)
+FROM queries WHERE query NOT IN (SELECT query FROM top)
 """
 
 
@@ -2170,10 +2142,16 @@ FROM documents WHERE text IS NOT NULL
 _N_SYMSPELL = 1024908267229.0  # corpus-size constant N (sym_spell.rs:46)
 
 
-def _compound_words(spark, sf_dir):
-    return (_tokens(spark, sf_dir).groupBy("term")
-            .agg(F.count(F.lit(1)).alias("count"))
-            .where(F.length("term") >= 2))
+def _correct_probes(probes, words, count_threshold=1):
+    """compound_correct over one-column `text` probes at max distance 2,
+    as the compound rows' (query, corrected, distance, count)."""
+    from .operators.compound import compound_correct
+    out = compound_correct(probes, "text", words, None, 2, 7,
+                           id_cols=("text",),
+                           count_threshold=count_threshold)
+    return out.select(F.col("text").alias("query"), "corrected",
+                      F.col("distance").cast("int").alias("distance"),
+                      "count")
 
 
 _KNOWN_THRESHOLD = 2  # count_threshold applied on BOTH engines
@@ -2184,40 +2162,28 @@ def _q_compound_known(spark, sf_dir):
     filter (sym_spell.rs:45): the operator drops sub-threshold terms from
     the dictionary before the bounded driver collect, and the probe set
     is restricted to promoted terms so every probe stays exact-path; the
-    oracle mirrors the threshold with HAVING count(*) >= t."""
-    from .operators.compound import compound_correct
-    # ONE persisted scan->explode->groupBy token-counts subtree feeds the
-    # dictionary (length>=2, = _compound_words), the probe branch, AND the
-    # single-char probe set (grouped terms are already distinct), so the
-    # expensive explode evaluates exactly once — during the operator's
-    # eager dictionary collect (r3 verdict: un-persisted shared subtrees
-    # re-evaluate per reference; same fix as graph_triangles)
-    tok_counts = (_tokens(spark, sf_dir).groupBy("term")
-                  .agg(F.count(F.lit(1)).alias("count")).persist())
-    words = tok_counts.where(F.length("term") >= 2)
+    oracle mirrors the threshold with count >= t."""
+    # the shared dictionary feeds the kernel's words (length>=2), the
+    # probe branch, AND the single-char probe set (grouped terms are
+    # already distinct)
+    counts = _term_counts(spark, sf_dir)
+    words = counts.where(F.length("term") >= 2)
     probes = (words.where(F.col("term").rlike("^[a-z]+$")
                           & (F.col("count") >= _KNOWN_THRESHOLD))
               .select(F.col("term").alias("text")))
-    ones = (tok_counts.where(F.col("term").rlike("^[a-z]$"))
+    ones = (counts.where(F.col("term").rlike("^[a-z]$"))
             .select(F.col("term").alias("text")))
-    docs = probes.unionByName(ones)
-    out = compound_correct(docs, "text", words, None, 2, 7,
-                           id_cols=("text",),
+    return _correct_probes(probes.unionByName(ones), words,
                            count_threshold=_KNOWN_THRESHOLD)
-    return out.select(F.col("text").alias("query"), "corrected",
-                      F.col("distance").cast("int").alias("distance"),
-                      "count")
 
 
 _O_COMPOUND_KNOWN = f"""
-WITH toks AS ({_SQL_TOKS_NE}),
-words AS (SELECT term, count(*) AS count FROM toks
-          WHERE length(term) >= 2 GROUP BY term
-          HAVING count(*) >= {_KNOWN_THRESHOLD})
+WITH {_SQL_WORDS}
 SELECT term AS query, term AS corrected, 0 AS distance,
        CAST(trunc({_N_SYMSPELL!r} * (count / {_N_SYMSPELL!r})) AS BIGINT)
            AS count
 FROM words WHERE regexp_matches(term, '^[a-z]+$')
+  AND count >= {_KNOWN_THRESHOLD}
 UNION ALL
 SELECT DISTINCT term AS query, term AS corrected, 0 AS distance,
        CAST(trunc({_N_SYMSPELL!r} * (3 / {_N_SYMSPELL!r})) AS BIGINT)
@@ -2226,6 +2192,56 @@ FROM toks WHERE regexp_matches(term, '^[a-z]$')
 """
 
 _SPLIT_PARTS_K = 40  # split probes built from the top-K dictionary terms
+
+
+def _split_probes(words):
+    """The probes compound_split and word_segmentation share: `cand`,
+    each concatenation s1||s2 of two of the top-K lowercase dictionary
+    terms that is not itself a term; `unique`, the texts of cand with
+    exactly ONE split into two terms; `skips`, the texts of cand with a
+    split that skips one char between two terms."""
+    w = (words.where(F.col("term").rlike("^[a-z]+$"))
+         .orderBy(F.desc("count"), F.asc("term")).limit(_SPLIT_PARTS_K)
+         .select("term"))
+    cand = (w.select(F.col("term").alias("s1"))
+            .crossJoin(w.select(F.col("term").alias("s2")))
+            .select(F.concat("s1", "s2").alias("text"))
+            .join(words.select(F.col("term").alias("text")), "text",
+                  "left_anti")
+            .distinct())
+    js = cand.select(
+        "text", F.explode(F.sequence(F.lit(1),
+                                     F.length("text") - 1)).alias("j"))
+    wset = F.broadcast(words.select("term"))
+
+    def splits(gap):
+        # (text, j) where text[:j] and text[j + gap:] are both terms (at
+        # gap 1 the last j leaves an empty tail, which is never a term)
+        return (js.select("text", "j",
+                          F.expr("substring(text, 1, j)").alias("p1"),
+                          F.expr(f"substring(text, j + {1 + gap}, "
+                                 "length(text))").alias("p2"))
+                .join(wset.withColumnRenamed("term", "p1"), "p1",
+                      "left_semi")
+                .join(wset.withColumnRenamed("term", "p2"), "p2",
+                      "left_semi"))
+
+    unique = (splits(0).groupBy("text").agg(F.count(F.lit(1)).alias("n"))
+              .where(F.col("n") == 1).select("text"))
+    return cand, unique, splits(1).select("text").distinct()
+
+
+_SQL_SPLIT_PROBES = f"""{_SQL_WORDS},
+w AS (SELECT term FROM words WHERE regexp_matches(term, '^[a-z]+$')
+      ORDER BY count DESC, term ASC LIMIT {_SPLIT_PARTS_K}),
+cand AS (SELECT DISTINCT a.term || b.term AS text
+         FROM w a CROSS JOIN w b
+         WHERE a.term || b.term NOT IN (SELECT term FROM words)),
+js AS (SELECT text, unnest(range(1, length(text))) AS j FROM cand),
+decomp AS (SELECT text, count(*) AS n, min(j) AS j FROM js
+           WHERE substr(text, 1, j) IN (SELECT term FROM words)
+             AND substr(text, j + 1) IN (SELECT term FROM words)
+           GROUP BY text)"""
 
 
 def _q_compound_split(spark, sf_dir):
@@ -2239,20 +2255,8 @@ def _q_compound_split(spark, sf_dir):
     distance-1 candidate the same string s1||' '||s2 regardless of lookup
     tie-breaks, so the output is order-independent and SQL-expressible."""
     from .functions.udfs import osa_distance_udf
-    from .operators.compound import compound_correct
-    # persisted: referenced by the top-K seed, the known-term anti-join,
-    # the fuzzy-probe broadcast, the decomposition semi-joins, and the
-    # operator's eager dictionary collect
-    words = _compound_words(spark, sf_dir).persist()
-    w = (words.where(F.col("term").rlike("^[a-z]+$"))
-         .orderBy(F.desc("count"), F.asc("term")).limit(_SPLIT_PARTS_K)
-         .select("term"))
-    cand = (w.select(F.col("term").alias("s1"))
-            .crossJoin(w.select(F.col("term").alias("s2")))
-            .select(F.concat("s1", "s2").alias("text"))
-            .join(words.select(F.col("term").alias("text")), "text",
-                  "left_anti")
-            .distinct())
+    words = _term_counts(spark, sf_dir).where(F.length("term") >= 2)
+    cand, unique, skips = _split_probes(words)
     # probes with no whole-term fuzzy suggestion (OSA <= 2)
     osa = osa_distance_udf(2)
     wd = F.broadcast(words.select(F.col("term").alias("w"),
@@ -2261,68 +2265,28 @@ def _q_compound_split(spark, sf_dir):
                        & (F.col("text") != F.col("w")))
              .where(osa(F.col("text"), F.col("w")).isNotNull())
              .select("text").distinct())
-    nofuzzy = cand.join(fuzzy, "text", "left_anti")
-
-    js = nofuzzy.select(
-        "text", F.explode(F.sequence(F.lit(1),
-                                     F.length("text") - 1)).alias("j"))
-    wset = F.broadcast(words.select("term"))
-    decomp = (js.select("text", "j",
-                        F.expr("substring(text, 1, j)").alias("p1"),
-                        F.expr("substring(text, j + 1, length(text))")
-                        .alias("p2"))
-              .join(wset.withColumnRenamed("term", "p1"), "p1", "left_semi")
-              .join(wset.withColumnRenamed("term", "p2"), "p2", "left_semi"))
-    uniq = (decomp.groupBy("text")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.min("j").alias("j"))
-            .where(F.col("n") == 1))
-    skips = (js.where(F.col("j") <= F.length("text") - 2)
-             .select("text",
-                     F.expr("substring(text, 1, j)").alias("p1"),
-                     F.expr("substring(text, j + 2, length(text))")
-                     .alias("p2"))
-             .join(wset.withColumnRenamed("term", "p1"), "p1", "left_semi")
-             .join(wset.withColumnRenamed("term", "p2"), "p2", "left_semi")
-             .select("text").distinct())
-    good = (nofuzzy.join(uniq.select("text"), "text", "left_semi")
+    good = (cand.join(fuzzy, "text", "left_anti")
+            .join(unique, "text", "left_semi")
             .join(skips, "text", "left_anti"))
-
-    out = compound_correct(good, "text", words, None, 2, 7,
-                           id_cols=("text",))
-    return out.select(F.col("text").alias("query"), "corrected",
-                      F.col("distance").cast("int").alias("distance"),
-                      "count")
+    return _correct_probes(good, words)
 
 
 _O_COMPOUND_SPLIT = f"""
-WITH toks AS ({_SQL_TOKS_NE}),
-words AS (SELECT term, count(*) AS count FROM toks
-          WHERE length(term) >= 2 GROUP BY term),
-w AS (SELECT term FROM words WHERE regexp_matches(term, '^[a-z]+$')
-      ORDER BY count DESC, term ASC LIMIT {_SPLIT_PARTS_K}),
-cand AS (SELECT DISTINCT a.term || b.term AS text
-         FROM w a CROSS JOIN w b
-         WHERE a.term || b.term NOT IN (SELECT term FROM words)),
+WITH {_SQL_SPLIT_PROBES},
 nofuzzy AS (SELECT c.text FROM cand c WHERE NOT EXISTS (
     SELECT 1 FROM words x
     WHERE x.term <> c.text
       AND abs(length(x.term) - length(c.text)) <= 2
       AND damerau_levenshtein(c.text, x.term) <= 2)),
-js AS (SELECT text, unnest(range(1, length(text))) AS j FROM nofuzzy),
-decomp AS (SELECT text, count(*) AS n, min(j) AS j FROM js
-           WHERE substr(text, 1, j) IN (SELECT term FROM words)
-             AND substr(text, j + 1) IN (SELECT term FROM words)
-           GROUP BY text),
 skips AS (SELECT DISTINCT text FROM js
-          WHERE j <= length(text) - 2
-            AND substr(text, 1, j) IN (SELECT term FROM words)
+          WHERE substr(text, 1, j) IN (SELECT term FROM words)
             AND substr(text, j + 2) IN (SELECT term FROM words))
 SELECT d.text AS query,
        substr(d.text, 1, d.j) || ' ' || substr(d.text, d.j + 1) AS corrected,
        1 AS distance, CAST(0 AS BIGINT) AS count
 FROM decomp d
-WHERE d.n = 1 AND d.text NOT IN (SELECT text FROM skips)
+WHERE d.n = 1 AND d.text IN (SELECT text FROM nofuzzy)
+  AND d.text NOT IN (SELECT text FROM skips)
 """
 
 
@@ -2358,30 +2322,19 @@ def _q_compound_merge(spark, sf_dir):
       count = trunc(N * (c_head / N)) — IEEE-double identical in Python
       and DuckDB (same expression as the compound_known oracle).
     """
-    from .operators.compound import compound_correct
-    # persisted: shared by the head/tail seeds, probe construction, and
-    # the operator's eager dictionary collect
-    words = (_compound_words(spark, sf_dir)
-             .where(F.col("term").rlike("^[a-z]+$")
-                    & (F.length("term") <= 20)).persist())
+    words = _term_counts(spark, sf_dir).where(
+        F.col("term").rlike("^[a-z]+$") & F.length("term").between(2, 20))
     heads = (words.where(F.length("term") >= 3)
              .orderBy(F.desc("count"), F.asc("term")).limit(_MERGE_K))
     aug = heads.select(
         F.concat(F.col("term"), F.lit(_MERGE_TAIL)).alias("term"), "count")
-    dict_df = words.unionByName(aug)
     probes = heads.select(
         F.concat(F.col("term"), F.lit(" " + _MERGE_TAIL)).alias("text"))
-    out = compound_correct(probes, "text", dict_df, None, 2, 7,
-                           id_cols=("text",))
-    return out.select(F.col("text").alias("query"), "corrected",
-                      F.col("distance").cast("int").alias("distance"),
-                      "count")
+    return _correct_probes(probes, words.unionByName(aug))
 
 
 _O_COMPOUND_MERGE = f"""
-WITH toks AS ({_SQL_TOKS_NE}),
-words AS (SELECT term, count(*) AS count FROM toks
-          WHERE length(term) >= 2 GROUP BY term),
+WITH {_SQL_WORDS},
 w AS (SELECT term, count FROM words
       WHERE regexp_matches(term, '^[a-z]+$') AND length(term) <= 20),
 heads AS (SELECT term, count FROM w WHERE length(term) >= 3
@@ -2406,32 +2359,9 @@ def _q_word_segmentation(spark, sf_dir):
     floating-point probability comparison decides and the expected row is
     SQL-exact."""
     from .operators.compound import segment_texts
-    # persisted: referenced by the top-K seed, the known-term anti-join,
-    # two decomposition semi-joins, and the operator's eager collect
-    words = _compound_words(spark, sf_dir).persist()
-    w = (words.where(F.col("term").rlike("^[a-z]+$"))
-         .orderBy(F.desc("count"), F.asc("term")).limit(_SPLIT_PARTS_K)
-         .select("term"))
-    cand = (w.select(F.col("term").alias("s1"))
-            .crossJoin(w.select(F.col("term").alias("s2")))
-            .select(F.concat("s1", "s2").alias("text"))
-            .join(words.select(F.col("term").alias("text")), "text",
-                  "left_anti")
-            .distinct())
-    js = cand.select(
-        "text", F.explode(F.sequence(F.lit(1),
-                                     F.length("text") - 1)).alias("j"))
-    wset = F.broadcast(words.select("term"))
-    decomp = (js.select("text", "j",
-                        F.expr("substring(text, 1, j)").alias("p1"),
-                        F.expr("substring(text, j + 1, length(text))")
-                        .alias("p2"))
-              .join(wset.withColumnRenamed("term", "p1"), "p1", "left_semi")
-              .join(wset.withColumnRenamed("term", "p2"), "p2", "left_semi"))
-    uniq = (decomp.groupBy("text").agg(F.count(F.lit(1)).alias("n"))
-            .where(F.col("n") == 1).select("text"))
-    good = cand.join(uniq, "text", "left_semi")
-    out = segment_texts(good, "text", words, max_edit_distance=0,
+    words = _term_counts(spark, sf_dir).where(F.length("term") >= 2)
+    _, unique, _ = _split_probes(words)
+    out = segment_texts(unique, "text", words, max_edit_distance=0,
                         id_cols=("text",))
     return out.select(F.col("text").alias("query"), "segmented",
                       "corrected",
@@ -2439,19 +2369,7 @@ def _q_word_segmentation(spark, sf_dir):
 
 
 _O_WORD_SEGMENTATION = f"""
-WITH toks AS ({_SQL_TOKS_NE}),
-words AS (SELECT term, count(*) AS count FROM toks
-          WHERE length(term) >= 2 GROUP BY term),
-w AS (SELECT term FROM words WHERE regexp_matches(term, '^[a-z]+$')
-      ORDER BY count DESC, term ASC LIMIT {_SPLIT_PARTS_K}),
-cand AS (SELECT DISTINCT a.term || b.term AS text
-         FROM w a CROSS JOIN w b
-         WHERE a.term || b.term NOT IN (SELECT term FROM words)),
-js AS (SELECT text, unnest(range(1, length(text))) AS j FROM cand),
-decomp AS (SELECT text, min(j) AS j, count(*) AS n FROM js
-           WHERE substr(text, 1, j) IN (SELECT term FROM words)
-             AND substr(text, j + 1) IN (SELECT term FROM words)
-           GROUP BY text)
+WITH {_SQL_SPLIT_PROBES}
 SELECT text AS query,
        substr(text, 1, j) || ' ' || substr(text, j + 1) AS segmented,
        substr(text, 1, j) || ' ' || substr(text, j + 1) AS corrected,
@@ -2476,7 +2394,7 @@ def _q_compound_correct(spark, sf_dir):
     docs = (load(spark, sf_dir, "documents")
             .where(F.col("text").isNotNull())
             .select("doc_id", F.lower("text").alias("text")))
-    words = _compound_words(spark, sf_dir)
+    words = _term_counts(spark, sf_dir).where(F.length("term") >= 2)
     bigrams = (_q_bigram_counts(spark, sf_dir)
                .select("bigram", F.col("cnt").alias("count")))
     out = compound_correct(docs, "text", words, bigrams, 2, 7,
@@ -2504,8 +2422,7 @@ def _oracle_compound_correct(sf_dir: str) -> str:
     con.sql(f"CREATE VIEW documents AS SELECT * FROM "
             f"'{sf_dir}/documents.parquet'")
     words = dict(con.sql(
-        f"SELECT term, count(*) FROM ({_SQL_TOKS_NE}) "
-        "WHERE length(term) >= 2 GROUP BY term").fetchall())
+        f"WITH {_SQL_WORDS} SELECT term, count FROM words").fetchall())
     bigrams = dict(con.sql(_O_BIGRAM_COUNTS).fetchall())
     docs = con.sql("SELECT doc_id, lower(text) FROM documents "
                    "WHERE text IS NOT NULL ORDER BY doc_id").fetchall()
@@ -2899,24 +2816,25 @@ def _q_rare_token_stats(spark, sf_dir):
     terms, and their fraction (ints + one division → exact on both
     engines).
 
-    Scale shape: one term-count aggregation (shuffle on term, map-side
-    combined), a share filter that pigeonhole-bounds the surviving
-    common set to <= 1/_RARE_SHARE rows, a broadcast left join marking
-    each token occurrence, and one narrow per-doc aggregation."""
+    Scale shape: the shared term-count dictionary (_term_counts: one
+    aggregation, shuffle on term, map-side combined), a share filter
+    that pigeonhole-bounds the surviving common set to <= 1/_RARE_SHARE
+    rows, a broadcast left join marking each token occurrence, and one
+    narrow per-doc aggregation."""
     from pyspark.sql import Window
 
-    toks = _tokens(spark, sf_dir)
     # total token count via an unpartitioned window over the VOCAB-sized
-    # aggregate: one task sees vocab rows (not corpus rows), and the
+    # dictionary: one task sees vocab rows (not corpus rows), and the
     # corpus is never scanned a second time for the scalar.
-    cnt = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
-    common = (cnt.withColumn("t", F.sum("c").over(
+    common = (_term_counts(spark, sf_dir)
+              .withColumn("t", F.sum("count").over(
                   Window.partitionBy().rowsBetween(
                       Window.unboundedPreceding, Window.unboundedFollowing)))
-              .where(F.col("c") / F.col("t") >= _RARE_SHARE)
+              .where(F.col("count") / F.col("t") >= _RARE_SHARE)
               .select("term"))
-    return (toks.join(F.broadcast(common.withColumn("is_common", F.lit(1))),
-                      "term", "left")
+    return (_tokens(spark, sf_dir)
+            .join(F.broadcast(common.withColumn("is_common", F.lit(1))),
+                  "term", "left")
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_tokens"),
                  F.sum(F.when(F.col("is_common").isNull(), 1).otherwise(0))
@@ -4985,10 +4903,10 @@ def _q_linkage_f1(spark, sf_dir):
 
     Scale shape (same audit as the full pipeline, PLANS.md): delete keys
     are a whole-stage-codegen projection, capped by the broadcast
-    hot-key anti-join and persisted partitioned by key, so the self-join
-    shuffles nothing more; scoring exchanges only surviving (term_a,
-    term_b) through one ArrowEvalPython, and the truth join + metric agg
-    shuffle (long, long) pairs.  The hot-key cap is in the plan; the
+    hot-key anti-join and persisted as is (not repartitioned by key), so
+    the self-join shuffles both sides; scoring exchanges only surviving
+    (term_a, term_b) through one ArrowEvalPython, and the truth join +
+    metric agg shuffle (long, long) pairs.  The hot-key cap is in the plan; the
     fixture's slugs have no super-node keys, so it drops none here."""
     pages, pred = _lk_scored(spark, sf_dir)
     return _lk_metrics(pages, pred)

@@ -142,6 +142,24 @@ def test_fs_em_step_single_global_agg(spark):
     assert "BatchEvalPython" not in plan, plan
 
 
+@pytest.mark.parametrize("name", ["word_counts", "lookup_top",
+                                  "compound_known", "blocking_keys"])
+def test_vocabulary_rows_share_one_dictionary(spark, name):
+    # every vocabulary row reads ONE persisted (term, count) frame:
+    # building any of them from an empty cache registers the unfiltered
+    # corpus aggregate itself, not a filtered or re-derived copy
+    from pyspark import StorageLevel
+    from pyspark.sql import functions as F
+
+    from spellchecker_wasm_spark.queries import CATALOG, _tokens
+
+    spark.catalog.clearCache()
+    CATALOG[name][0](spark, SF_DIR)
+    counts = (_tokens(spark, SF_DIR).groupBy("term")
+              .agg(F.count(F.lit(1)).alias("count")))
+    assert counts.storageLevel != StorageLevel.NONE, name
+
+
 # catalog entries that EXECUTE work on construction (streaming memory
 # sinks, EM collect loops, checkpoint/sink round-trips) — their batch
 # plans are audited in scripts/audit_plans.py + PLANS.md instead of here
