@@ -10,11 +10,16 @@ zero BatchEvalPython, no CartesianProduct, and bounded exchange counts
 degrades predictably with input size; anything else needs a prose
 justification in PLANS.md.
 
-Each row is built from an empty cache, so its counts do not depend on
-which shared persisted frames earlier rows materialized (a materialized
-cache prints its AQE final and initial plans both).  An eager row still
-materializes what it collects while it is built: the compound rows show
-the shared term-count dictionary (queries._term_counts) that way.
+Counts come from a walk of the executed plan tree, one count per
+node: an adaptive plan contributes its current plan (the initial plan
+until it runs, the final plan after), a query stage the plan it wraps,
+and a persisted frame's build subtree is walked once per row, however
+many times the row reads that frame (every reference still counts as
+one InMemoryTableScan).  Each row is built from an empty cache, so its
+counts do not depend on which shared persisted frames earlier rows
+materialized.  An eager row still materializes what it collects while
+it is built: the compound rows count the shared term-count dictionary
+(queries._term_counts) by its final plan.
 
 Streaming entries (stream_*) EXECUTE on build (they return the memory
 sink's table), so their batch-plan counts are not meaningful here; they
@@ -57,15 +62,46 @@ NODES = [
 ]
 
 
+def node_counts(df) -> dict:
+    """Node counts of ``df``'s executed plan tree, each persisted
+    frame's build subtree counted once."""
+    identity = df.sparkSession._jvm.System.identityHashCode
+    counts = dict.fromkeys((k for k, _ in NODES), 0)
+    built = set()
+
+    def walk(node):
+        name = node.nodeName()
+        line = node.simpleString(1)
+        for k, pat in NODES:
+            counts[k] += line.startswith(pat)
+        subs = node.children()
+        if name == "AdaptiveSparkPlan":
+            walk(node.executedPlan())
+        elif node.getClass().getSimpleName().endswith("QueryStageExec"):
+            walk(node.plan())
+        elif name == "InMemoryTableScan":
+            rel = node.relation()
+            key = identity(rel.cacheBuilder())
+            if key not in built:
+                built.add(key)
+                walk(rel.cachedPlan())
+        for i in range(subs.size()):
+            walk(subs.apply(i))
+        subq = node.subqueries()
+        for i in range(subq.size()):
+            walk(subq.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return counts
+
+
 def plan_counts(spark, name: str, sf_dir: str = SF_DIR) -> dict:
     """Node counts of one CATALOG row's executed plan, built from an
     empty cache."""
     from spellchecker_wasm_spark.queries import CATALOG
 
     spark.catalog.clearCache()
-    df = CATALOG[name][0](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return {k: plan.count(pat) for k, pat in NODES}
+    return node_counts(CATALOG[name][0](spark, sf_dir))
 
 
 def main() -> int:
@@ -89,7 +125,7 @@ def main() -> int:
 
     out = ["# Catalog physical-plan audit (auto-generated)\n",
            f"Input: {SF_DIR}; regenerate with scripts/audit_plans.py.",
-           "Counts are substring hits on the executed plan (AQE initial",
+           "Counts are nodes of the executed plan tree (AQE initial",
            "plan): `shuffles` = hash-partition exchanges, `bcast` =",
            "broadcast exchanges (cheap, build-side), `reused` = exchange",
            "reuse (shared subtree, free), joins by strategy, Python",
@@ -101,16 +137,12 @@ def main() -> int:
            "constant-size frame attaches (bloom bitmap, ARI/KMV scalar",
            "reductions, funnel constants).",
            "`imts` = InMemoryTableScan (persisted frame reference).",
-           "Each row is built from an empty cache.",
-           "CAVEAT for rows with imts > 0: the formatted plan re-embeds",
-           "a persisted frame's FULL build subtree at every reference,",
-           "so the static `shuffles` count double-counts the producer",
-           "per reference; at runtime the cache materializes once and",
-           "every further reference is an in-memory scan — the static",
-           "number is an upper bound, not the executed shuffle count.",
+           "Each row is built from an empty cache, and a persisted",
+           "frame's build subtree counts once per row, however many",
+           "times the row reads it.",
            "The compound rows collect the shared term-count dictionary",
-           "while they are built, so their plans print it materialized",
-           "(AQE final and initial plan both); see PLANS.md.\n",
+           "while they are built, so they count its final (AQE) plan;",
+           "see PLANS.md.\n",
            "| query | shuffles | range | bcast | reused | SMJ | SHJ |"
            " BHJ | BNLJ | cart | arrowPy | batchPy | grpPandas |"
            " mapPandas | gen | wgl | imts |",

@@ -32,39 +32,46 @@ import hashlib
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-_Q = "transform(embedding, x -> CAST(round(x * 1000) AS BIGINT))"
+_DOT = ("aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, "
+        "(a, x) -> a + x)")
+_NRM = "aggregate(v, 0L, (a, x) -> a + x * x)"
+
+
+def _quantize(vec_col: str):
+    """The embedding column in exact BIGINT milli-units."""
+    return F.expr(f"transform({vec_col}, x -> "
+                  "CAST(round(x * 1000) AS BIGINT))")
 
 
 def _prep(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     return (embeddings
-            .select(F.col(id_col).alias("vid"),
-                    F.expr(_Q.replace("embedding", vec_col)).alias("v"))
-            .withColumn("nrm", F.expr("aggregate(v, 0L, (a, x) -> a + x * x)")))
+            .select(F.col(id_col).alias("vid"), _quantize(vec_col).alias("v"))
+            .withColumn("nrm", F.expr(_NRM)))
+
+
+def _topk(cand: DataFrame, k: int) -> DataFrame:
+    """Exact-cosine re-rank of candidate rows (qid, qv, qn) × (vid, v,
+    nrm) → the k best per query as (query_id, neighbor_id, rank, cos),
+    ties broken by the lower neighbor id."""
+    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vid"))
+    return (cand.withColumn("cos", F.expr(_DOT.format(a="qv", b="v"))
+                            / (F.sqrt("qn") * F.sqrt("nrm")))
+            .withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select(F.col("qid").alias("query_id"),
+                    F.col("vid").alias("neighbor_id"), "rank", "cos"))
 
 
 def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
                      id_col: str = "vec_id",
                      vec_col: str = "embedding") -> DataFrame:
     """queries × embeddings exact cosine top-k →
-    (query_id, neighbor_id, rank).  Broadcast the smaller side."""
+    (query_id, neighbor_id, rank, cos).  Broadcast the smaller side."""
     base = _prep(embeddings, id_col, vec_col)
     q = _prep(queries, id_col, vec_col).select(
         F.col("vid").alias("qid"), F.col("v").alias("qv"),
         F.col("nrm").alias("qn"))
-    joined = (q.join(F.broadcast(base), F.col("vid") != F.col("qid"))
-              .withColumn("dot", F.expr(
-                  "aggregate(zip_with(qv, v, (x, y) -> x * y), 0L, "
-                  "(a, x) -> a + x)"))
-              .withColumn("cos", F.col("dot") / (F.sqrt("qn") * F.sqrt("nrm"))))
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vid"))
-    return (joined.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(F.col("qid").alias("query_id"),
-                    F.col("vid").alias("neighbor_id"), "rank", "cos"))
-
-
-_DOT = ("aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, "
-        "(a, x) -> a + x)")
+    return _topk(q.join(F.broadcast(base), F.col("vid") != F.col("qid")), k)
 
 
 def _centroids(base: DataFrame, n_cells: int) -> DataFrame:
@@ -175,16 +182,9 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
                       F.col("nrm").alias("qn"), F.col("cid").alias("cell")))
     # probe side is |queries|·n_probe rows → broadcast; the corpus scan
     # joins it without shuffling
-    joined = (assigned.join(F.broadcast(probes), "cell")
-              .where(F.col("vid") != F.col("qid"))
-              .dropDuplicates(["qid", "vid"])
-              .withColumn("dot", F.expr(_DOT.format(a="qv", b="v")))
-              .withColumn("cos", F.col("dot") / (F.sqrt("qn") * F.sqrt("nrm"))))
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vid"))
-    return (joined.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(F.col("qid").alias("query_id"),
-                    F.col("vid").alias("neighbor_id"), "rank", "cos"))
+    return _topk(assigned.join(F.broadcast(probes), "cell")
+                 .where(F.col("vid") != F.col("qid"))
+                 .dropDuplicates(["qid", "vid"]), k)
 
 
 def _hyperplane(seed: int, plane: int, dim: int) -> int:
@@ -201,9 +201,8 @@ def lsh_signature_expr(n_planes: int, n_dims: int, seed: int = 7):
     for p in range(n_planes):
         coeffs = [_hyperplane(seed, p, d) for d in range(n_dims)]
         arr = "array(" + ",".join(f"{c}L" for c in coeffs) + ")"
-        dot = (f"aggregate(zip_with(v, {arr}, (x, y) -> x * y), 0L, "
-               f"(a, x) -> a + x)")
-        plane_terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << p}L ELSE 0L END)")
+        plane_terms.append(f"(CASE WHEN {_DOT.format(a='v', b=arr)} > 0 "
+                           f"THEN {1 << p}L ELSE 0L END)")
     return F.expr(" + ".join(plane_terms))
 
 
@@ -237,18 +236,9 @@ def lsh_bucketed_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     q = (qb.select(F.col("vid").alias("qid"), F.col("v").alias("qv"),
                    F.col("nrm").alias("qn"),
                    F.explode(F.array(*flips)).alias("bucket")))
-    joined = (q.join(base, "bucket")
-              .where(F.col("vid") != F.col("qid"))
-              .dropDuplicates(["qid", "vid"])
-              .withColumn("dot", F.expr(
-                  "aggregate(zip_with(qv, v, (x, y) -> x * y), 0L, "
-                  "(a, x) -> a + x)"))
-              .withColumn("cos", F.col("dot") / (F.sqrt("qn") * F.sqrt("nrm"))))
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vid"))
-    return (joined.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(F.col("qid").alias("query_id"),
-                    F.col("vid").alias("neighbor_id"), "rank", "cos"))
+    return _topk(q.join(base, "bucket")
+                 .where(F.col("vid") != F.col("qid"))
+                 .dropDuplicates(["qid", "vid"]), k)
 
 
 def _lloyd_step_arrow(e: DataFrame, cent: DataFrame,
@@ -315,10 +305,7 @@ def lloyd_assign(emb: DataFrame, k: int, iters: int = 2,
     knob that matters at real k: at 50k vectors × k=250 the HOF
     assignment measured 93 s against 9 s for everything else
     (scripts/bench_semdedup.py).  Same trade as ``ivf_assign_arrow``."""
-    e = emb.select(
-        F.col(id_col),
-        F.expr(f"transform({vec_col}, x -> CAST(round(x * 1000) AS "
-               "BIGINT))").alias("v"))
+    e = emb.select(F.col(id_col), _quantize(vec_col).alias("v"))
     if assign == "arrow" and iters > 1:
         # The arrow path is EAGER per iteration: each codebook collect
         # embeds the k×dims array in the next step's closure, so
@@ -360,23 +347,18 @@ def lloyd_assign(emb: DataFrame, k: int, iters: int = 2,
 
 def semdedup(emb: DataFrame, k: int, iters: int = 2,
              threshold: float = 0.35, id_col: str = "vec_id",
-             vec_col: str = "embedding",
-             assign: str = "hof", keep: str = "far") -> DataFrame:
+             vec_col: str = "embedding", assign: str = "hof") -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): k-means confines
     the quadratic cosine check to clusters; within any near-dup pair at
-    cosine ≥ ``threshold`` one vector is dropped.  ``keep="far"`` (the
-    default) is the paper's chosen rule — keep the example with the
-    LOWEST similarity to its cluster centroid (their "hard" variant;
-    here the largest exact centroid distance d2, the integer-exact
-    proxy for lowest centroid cosine) and drop the closer one.
-    ``keep="near"`` is the paper's rejected "easy" variant (keep
-    closest-to-centroid).  Returns (id_col, cluster, is_kept) for the
-    whole corpus.
+    cosine ≥ ``threshold`` one vector is dropped.  The kept one is the
+    paper's chosen rule — the example with the LOWEST similarity to its
+    cluster centroid (their "hard" variant; here the largest exact
+    centroid distance d2, the integer-exact proxy for lowest centroid
+    cosine).  Returns (id_col, cluster, is_kept) for the whole corpus.
 
     The drop rule is pairwise dominance — drop v iff some same-cluster
-    u with cos(u, v) ≥ threshold precedes it in priority order
-    ((−d2, id) for "far", (d2, id) for "near") — an order-free
-    set-oriented equivalent of the paper's greedy scan.
+    u with cos(u, v) ≥ threshold precedes it in (−d2, id) order — an
+    order-free set-oriented equivalent of the paper's greedy scan.
 
     Plan: ``lloyd_assign``'s plan plus ONE bucket-collect — groupBy(cid)
     gathers each cluster sorted by priority, a nested-HOF scan marks
@@ -384,28 +366,25 @@ def semdedup(emb: DataFrame, k: int, iters: int = 2,
     The Lloyd subtree is referenced exactly once and no pair row ever
     crosses an exchange; per-cluster work is size², bounded by choosing
     k ≈ N/⟨cluster size⟩ (the paper's knob)."""
-    if keep not in ("far", "near"):
-        raise ValueError(f"keep must be 'far' or 'near', got {keep!r}")
     asg = lloyd_assign(emb, k, iters, id_col, vec_col, assign)
-    nn = asg.withColumn("nrm", F.expr(
-        "aggregate(transform(v, x -> x * x), 0L, (acc, x) -> acc + x)"))
-    # priority key: ascending ord = −d2 (far dominates) or d2 (near
-    # dominates); d2 ≥ 0 so the negation is BIGINT-safe
-    ordc = (-F.col("d2") if keep == "far" else F.col("d2")).alias("ord")
-    grouped = (nn.groupBy("cid")
-               .agg(F.array_sort(F.collect_list(
-                   F.struct(ordc, F.col(id_col), "v", "nrm"))).alias("ms")))
+    # priority key: ascending ord = −d2, so the far vector dominates;
+    # d2 ≥ 0 so the negation is BIGINT-safe
+    grouped = (asg.withColumn("nrm", F.expr(_NRM))
+               .groupBy("cid")
+               .agg(F.array_sort(F.collect_list(F.struct(
+                   (-F.col("d2")).alias("ord"), F.col(id_col), "v",
+                   "nrm"))).alias("ms")))
     # predecessor check via an index-guarded inner transform: `j < i AND
     # cos >= t` short-circuits so exactly size²/2 dots run per cluster,
     # and no array is copied (a slice(ms, 1, i) formulation memcpys
     # O(size²) vector prefixes per cluster)
+    dot = _DOT.format(a="u.v", b="m.v")
     marked = grouped.select(
         "cid", F.explode(F.expr(
             f"transform(ms, (m, i) -> struct(m.{id_col} AS {id_col}, "
-            "array_contains(transform(ms, (u, j) -> j < i AND "
-            "aggregate(zip_with(u.v, m.v, (x, y) -> x * y), 0L, "
-            "(acc, x) -> acc + x) / (sqrt(u.nrm) * sqrt(m.nrm)) >= "
-            f"{threshold}), true) AS drp))")).alias("r"))
+            f"array_contains(transform(ms, (u, j) -> j < i AND {dot} "
+            f"/ (sqrt(u.nrm) * sqrt(m.nrm)) >= {threshold}), true) "
+            "AS drp))")).alias("r"))
     return marked.select(
         F.col(f"r.{id_col}").alias(id_col), F.col("cid").alias("cluster"),
         F.when(F.col("r.drp"), 0).otherwise(1).cast("int")

@@ -176,8 +176,6 @@ _BUILD_RUNS_JOBS = {
     **{name: "collects the dictionary into the SymSpell kernel"
        for name in ("compound_correct", "compound_known", "compound_merge",
                     "compound_split", "word_segmentation")},
-    "dedup_embedding": "toPandas of the capped embedding slice for the "
-                       "numpy matmul",
 }
 
 

@@ -12,7 +12,9 @@ Covered here:
     qgram_blocking/canopy_blocking both derive from (length window
     moved to a post-agg filter; loose-graph derived from the counts)
   * queries._q_dedup_embedding — interpreted per-pair HOF dot replaced
-    by one numpy matmul per Arrow batch
+    by one numpy all-pairs matmul inside a single-partition mapInPandas
+  * queries._bucket_pairs — the capped in-bucket pair emit the
+    bucket-collect dedup rows share
   * queries._lk_blocks — the linkage fixture's blocks come from
     pipeline.linkage.blocks_stage (tokenized prefixes, hot-key cap)
     instead of the whole-title prefix explode the oracle rows were
@@ -115,18 +117,48 @@ def test_dedup_embedding_matches_hof_formulation(spark):
     assert len(_rows(got)) > 0  # non-vacuous at this SF
 
 
-def test_dedup_embedding_empty_capped_slice(spark, tmp_path):
-    """An embeddings table with no vec_id under the cap yields no pairs
-    (the capped matrix is empty, not a crash)."""
+def _dedup_embedding_over(spark, tmp_path, ids):
     import spellchecker_wasm_spark.queries as Q
 
-    rows = [(Q._DEDUP_EMB_CAP + i, [float(i), 1.0, 0.5], 0) for i in range(4)]
+    rows = [(i, [float(i), 1.0, 0.5], 0) for i in ids]
     (spark.createDataFrame(rows, "vec_id long, embedding array<float>, "
                                  "label int")
      .write.parquet(str(tmp_path / "embeddings.parquet")))
     got = Q._q_dedup_embedding(spark, str(tmp_path))
-    assert got.columns == ["vec_a", "vec_b"]
-    assert got.collect() == []
+    assert got.schema.simpleString() == "struct<vec_a:bigint,vec_b:bigint>"
+    return got.collect()
+
+
+def test_dedup_embedding_empty_capped_slice(spark, tmp_path):
+    """An embeddings table with no vec_id under the cap yields no pairs
+    (the capped matrix is empty, not a crash)."""
+    from spellchecker_wasm_spark.queries import _DEDUP_EMB_CAP
+
+    assert _dedup_embedding_over(
+        spark, tmp_path, range(_DEDUP_EMB_CAP, _DEDUP_EMB_CAP + 4)) == []
+
+
+def test_dedup_embedding_one_row_slice(spark, tmp_path):
+    """One vector under the cap has no partner: a 1×1 matmul, no
+    pairs (the other three rows are over the cap)."""
+    from spellchecker_wasm_spark.queries import _DEDUP_EMB_CAP
+
+    ids = [7, *range(_DEDUP_EMB_CAP, _DEDUP_EMB_CAP + 3)]
+    assert _dedup_embedding_over(spark, tmp_path, ids) == []
+
+
+def test_bucket_pairs_cap_boundary(spark):
+    """A bucket of exactly ``cap`` members emits all C(cap, 2) ordered
+    pairs; one more member and it emits none (block purging)."""
+    from spellchecker_wasm_spark.queries import _bucket_pairs
+
+    cap = 4
+    buckets = spark.createDataFrame(
+        [("at_cap", list(range(cap))), ("over", list(range(10, 11 + cap))),
+         ("single", [20])], "key string, ids array<long>")
+    got = _rows(_bucket_pairs(buckets, cap, "x AS a, y AS b"))
+    assert got == [(a, b) for a in range(cap) for b in range(a + 1, cap)]
+    assert len(got) == cap * (cap - 1) // 2
 
 
 def test_linkage_fixture_blocks_match_whole_title_explode(spark):

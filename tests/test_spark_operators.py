@@ -521,15 +521,11 @@ def test_lloyd_arrow_assignment_equals_jvm(spark):
 
 
 def test_semdedup_keep_variants_match_python(spark):
-    """Both keep variants must agree with the from-the-definition greedy
-    scan over the SAME Lloyd partition: keep="far" (default — the
-    paper's chosen rule, keep the example least similar to its
-    centroid) dominates in (−d2, id) order, keep="near" (the paper's
-    rejected easy variant) in (d2, id) order.  Also witnesses the two
-    rules genuinely differ on this fixture and that a bad keep raises."""
+    """semdedup's kept set must agree with the from-the-definition
+    greedy scan over the SAME Lloyd partition: the paper's chosen rule
+    keeps the example least similar to its centroid, so vectors
+    dominate in (−d2, id) order."""
     import math
-
-    import pytest as _pytest
 
     from spellchecker_wasm_spark.operators.similarity import (
         lloyd_assign, semdedup)
@@ -539,11 +535,11 @@ def test_semdedup_keep_variants_match_python(spark):
     vecs = {r["vec_id"]: r["v"] for r in asg}
     thr = 0.35
 
-    def expected(sign):
+    def expected():
         by_cluster = {}
         for r in asg:
             by_cluster.setdefault(r["cid"], []).append(
-                (sign * r["d2"], r["vec_id"]))
+                (-r["d2"], r["vec_id"]))
         dropped = set()
         for members in by_cluster.values():
             members.sort()
@@ -558,10 +554,6 @@ def test_semdedup_keep_variants_match_python(spark):
                         break
         return dropped
 
-    for keep, sign in (("far", -1), ("near", 1)):
-        got = {r["vec_id"] for r in semdedup(emb, k=8, keep=keep).collect()
-               if r["is_kept"] == 0}
-        assert got == expected(sign), keep
-    assert expected(-1) != expected(1), "fixture can't tell variants apart"
-    with _pytest.raises(ValueError):
-        semdedup(emb, k=8, keep="middle")
+    got = {r["vec_id"] for r in semdedup(emb, k=8).collect()
+           if r["is_kept"] == 0}
+    assert got == expected()
