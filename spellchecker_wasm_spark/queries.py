@@ -44,6 +44,17 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ).parquet(path)
 
 
+def duckdb_session(sf_dir: str):
+    """A DuckDB connection with one view per TABLES entry over the
+    parquet files in ``sf_dir``: the session every oracle runs in."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
 def _tokens(spark, sf_dir) -> DataFrame:
     return (load(spark, sf_dir, "documents")
             .where(F.col("text").isNotNull())
@@ -95,6 +106,32 @@ cand AS (
       ON a.block_key = b.block_key AND a.term < b.term
      AND abs(length(a.term) - length(b.term)) <= 2
 )"""
+
+
+def _sql_cc(pairs: str, nodes: str) -> str:
+    """Connected components replayed in SQL, the DuckDB twin of
+    operators/clustering.connected_components: the (a, b) rows of the
+    two-column ``pairs`` query made symmetric (e), their recursive
+    reachability closure (reach), each reached node's minimum member
+    (comp), then asg(node, component) over comp plus every node of the
+    one-column ``nodes`` query that no pair touches, as its own
+    singleton.  Pair endpoints must be nodes.  Every CTE is
+    MATERIALIZED: DuckDB otherwise inlines a CTE at each reference, so
+    the pair query re-ran under both sides of e and the closure again
+    under asg's NOT IN (the cluster-stage linkage oracles at sf0.01:
+    6-30 s inlined, 0.3-0.8 s materialized, 2 DuckDB threads)."""
+    return f"""ccp(a, b) AS MATERIALIZED ({pairs}),
+e AS MATERIALIZED (SELECT a, b FROM ccp UNION SELECT b, a FROM ccp),
+reach(a, b) AS MATERIALIZED (
+    SELECT a, b FROM e
+    UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
+comp AS MATERIALIZED (SELECT a AS node, least(a, min(b)) AS component
+                      FROM reach GROUP BY a),
+asg AS MATERIALIZED (
+    SELECT node, component FROM comp
+    UNION ALL
+    SELECT node, node FROM ({nodes}) AS t(node)
+    WHERE node NOT IN (SELECT node FROM comp))"""
 
 
 def _term_counts(spark, sf_dir) -> DataFrame:
@@ -264,20 +301,11 @@ def _q_term_clusters(spark, sf_dir):
                      F.col("component").alias("cluster_id"))
 
 
-_O_TERM_CLUSTERS = _SQL_CAND_PAIRS + """,
-scored AS (SELECT term_a, term_b FROM cand
-           WHERE damerau_levenshtein(term_a, term_b) <= 2),
-e AS (SELECT term_a AS a, term_b AS b FROM scored
-      UNION SELECT term_b, term_a FROM scored),
-reach(a, b) AS (SELECT a, b FROM e
-                UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-comp AS (SELECT a AS term, least(a, min(b)) AS cluster_id
-         FROM reach GROUP BY a)
-SELECT term, cluster_id FROM comp
-UNION ALL
-SELECT term, term AS cluster_id FROM (SELECT DISTINCT term FROM toks)
-WHERE term NOT IN (SELECT term FROM comp)
-"""
+_O_TERM_CLUSTERS = (_SQL_CAND_PAIRS + ",\n" + _sql_cc(
+    "SELECT term_a, term_b FROM cand "
+    "WHERE damerau_levenshtein(term_a, term_b) <= 2",
+    "SELECT DISTINCT term FROM toks")
+    + "\nSELECT node AS term, component AS cluster_id FROM asg\n")
 
 
 def _lookup_inputs(spark, sf_dir):
@@ -1379,26 +1407,13 @@ def _q_dedup_lsh_clusters(spark, sf_dir):
 
 def _sql_doc_clusters(pairs_sql: str, select: str) -> str:
     """DuckDB twin of _doc_clusters over the (doc_a, doc_b) rows of
-    ``pairs_sql``: a recursive reachability closure, then every
-    non-NULL document with its cluster_id and ``select``.  P is
-    MATERIALIZED: inlined, the pair query re-ran under both sides of
-    ``e`` (dedup_lsh_clusters at sf0.1: 33 s → 2.7 s, 2 DuckDB threads
-    on 4 vCPUs)."""
-    return f"""WITH RECURSIVE P AS MATERIALIZED (
-    SELECT doc_a, doc_b FROM ({pairs_sql})),
-e AS (SELECT doc_a AS a, doc_b AS b FROM P
-      UNION SELECT doc_b, doc_a FROM P),
-reach(a, b) AS (SELECT a, b FROM e
-                UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-comp AS (SELECT a AS doc_id, least(a, min(b)) AS cluster_id
-         FROM reach GROUP BY a),
-alldocs AS (SELECT doc_id FROM documents WHERE text IS NOT NULL),
-asg AS (SELECT doc_id, cluster_id FROM comp
-        UNION ALL
-        SELECT doc_id, doc_id AS cluster_id FROM alldocs
-        WHERE doc_id NOT IN (SELECT doc_id FROM comp))
+    ``pairs_sql``: _sql_cc over every non-NULL document, then each
+    document with its cluster_id and ``select``."""
+    cc = _sql_cc(f"SELECT doc_a, doc_b FROM ({pairs_sql})",
+                 "SELECT doc_id FROM documents WHERE text IS NOT NULL")
+    return f"""WITH RECURSIVE {cc}
 SELECT doc_id, cluster_id, {select}
-FROM asg
+FROM (SELECT node AS doc_id, component AS cluster_id FROM asg)
 """
 
 
@@ -1571,10 +1586,13 @@ FROM cand WHERE bit_count(xor(fa, fb)) <= {_SIMHASH_MAX_HAMMING}
 
 
 # quantized embeddings e(vec_id, v) and n(vec_id, v, nrm): the exact
-# BIGINT milli-unit vectors and squared norms of operators/similarity._prep
+# BIGINT milli-unit vectors and squared norms of operators/similarity._prep.
+# The FLOAT element is widened to DOUBLE before the multiply, as Spark
+# promotes x * 1000: in single precision 0.3195 * 1000 rounds to 320,
+# in double to 319.
 _SQL_NRM = "list_sum(list_transform(v, x -> x * x))"
 _SQL_EMB = f"""e AS (SELECT vec_id, list_transform(embedding,
-                  x -> CAST(round(x * 1000) AS BIGINT)) AS v
+                  x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
       FROM embeddings),
 n AS (SELECT vec_id, v, {_SQL_NRM} AS nrm FROM e)"""
 
@@ -2349,18 +2367,14 @@ def _oracle_compound_correct(sf_dir: str) -> str:
     SpellcheckerWasm.spec.ts:62-72) — runs lookup_compound per document
     on the driver, single-threaded, with none of the distributed
     operator's collect/broadcast/batching code in the loop."""
-    import duckdb
-
     from .operators.compound import kernel_from_counts
 
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS SELECT * FROM "
-            f"'{sf_dir}/documents.parquet'")
-    words = dict(con.sql(
-        f"WITH {_SQL_WORDS} SELECT term, count FROM words").fetchall())
-    bigrams = dict(con.sql(_O_BIGRAM_COUNTS).fetchall())
-    docs = con.sql("SELECT doc_id, lower(text) FROM documents "
-                   "WHERE text IS NOT NULL ORDER BY doc_id").fetchall()
+    with duckdb_session(sf_dir) as con:
+        words = dict(con.sql(
+            f"WITH {_SQL_WORDS} SELECT term, count FROM words").fetchall())
+        bigrams = dict(con.sql(_O_BIGRAM_COUNTS).fetchall())
+        docs = con.sql("SELECT doc_id, lower(text) FROM documents "
+                       "WHERE text IS NOT NULL ORDER BY doc_id").fetchall()
     kernel = kernel_from_counts(words, bigrams, 2, 7)
     vals = []
     for doc_id, text in docs:
@@ -4834,6 +4848,10 @@ _LK_SQL_PAGES_BLOCKS = (_LK_SQL_PAGES + ",\n"
                         + _sql_blocks_over(
                             'SELECT DISTINCT title AS term FROM pages'))
 
+# the replayed linkage stages: cand the blocked pairs with their titles,
+# dist every candidate with its distance (the one damerau_levenshtein
+# the linkage oracles compute; fs_calibration reads it whole) and
+# scored the verified pairs, the twin of _lk_scored
 _LK_SQL_FIXTURE = _LK_SQL_PAGES_BLOCKS + """,
 pb AS (SELECT p.page_id, b.block_key, length(p.title) AS tl, p.title
        FROM pages p JOIN blocks b ON p.title = b.term),
@@ -4842,8 +4860,9 @@ cand AS (SELECT DISTINCT a.page_id AS id_a, b.page_id AS id_b,
          FROM pb a JOIN pb b
            ON a.block_key = b.block_key AND a.page_id < b.page_id
           AND abs(a.tl - b.tl) <= 2),
-pred AS (SELECT id_a, id_b FROM cand
-         WHERE damerau_levenshtein(ta, tb) <= 2)"""
+dist AS (SELECT id_a, id_b, ta, tb, damerau_levenshtein(ta, tb) AS distance
+         FROM cand),
+scored AS (SELECT * FROM dist WHERE distance <= 2)"""
 
 
 # complete within-entity truth: every pair of pages of one part entity
@@ -4886,23 +4905,12 @@ SELECT {select} FROM metrics
 _LK_SQL_RECALL = "n_pred AS n_cand, n_tp, n_truth, recall"
 
 _O_LINKAGE_F1 = ("WITH RECURSIVE" + _LK_SQL_FIXTURE
-                 + _lk_sql_metrics("pred"))
+                 + _lk_sql_metrics("scored"))
 
-# connected components over pred replayed as recursive reachability with
-# min-id canonicalization + singleton completion — shared by the
-# cluster-stage metric, golden-record, cluster-stats, and incremental-
-# linkage oracles
-_LK_SQL_CC = """,
-e AS (SELECT id_a AS a, id_b AS b FROM pred
-      UNION SELECT id_b, id_a FROM pred),
-reach(a, b) AS (SELECT a, b FROM e
-                UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-comp AS (SELECT a AS node, least(a, min(b)) AS component
-         FROM reach GROUP BY a),
-asg AS (SELECT node, component FROM comp
-        UNION ALL
-        SELECT page_id, page_id FROM pages
-        WHERE page_id NOT IN (SELECT node FROM comp))"""
+# the verified pairs' connected components (asg) over every page: the
+# shared head of the cluster-stage oracles
+_LK_SQL_CC = ",\n" + _sql_cc("SELECT id_a, id_b FROM scored",
+                              "SELECT page_id FROM pages")
 
 _O_LINKAGE_CLUSTER_F1 = ("WITH RECURSIVE" + _LK_SQL_FIXTURE + _LK_SQL_CC
                          + """,
@@ -5680,22 +5688,9 @@ _O_INCREMENTAL_LINKAGE = ("WITH RECURSIVE" + _LK_SQL_FIXTURE + _LK_SQL_CC
                           + f""",
 newpages AS (SELECT p_partkey * 10 + 3 AS page_id, {_LK_V3} AS title
              FROM sl),
-seedn AS (SELECT DISTINCT title AS term,
-                 CASE WHEN length(title) > 7 THEN substr(title, 1, 7)
-                      ELSE title END AS k
-          FROM newpages),
-dn(term, k, depth) AS (
-    SELECT term, k, 0 FROM seedn
-    UNION
-    SELECT dn.term,
-           concat(substr(dn.k, 1, pos.i - 1), substr(dn.k, pos.i + 1)),
-           dn.depth + 1
-    FROM dn, pos
-    WHERE dn.depth < 2 AND strlen(dn.k) > 1 AND pos.i <= length(dn.k)),
-blocksn AS (SELECT DISTINCT term, k AS block_key FROM dn
-            UNION
-            SELECT DISTINCT title, '' FROM newpages
-            WHERE length(title) <= 2),
+blocksn AS (WITH RECURSIVE {_sql_blocks_over(
+    'SELECT DISTINCT title AS term FROM newpages')}
+            SELECT term, block_key FROM blocks),
 pbn AS (SELECT n.page_id, b.block_key, length(n.title) AS nl, n.title
         FROM newpages n JOIN blocksn b ON n.title = b.term),
 candn AS (SELECT DISTINCT n.page_id AS new_id, e.page_id AS ex_id,
@@ -5801,11 +5796,9 @@ def _q_er_threshold_sweep(spark, sf_dir):
 
 _O_ER_THRESHOLD_SWEEP = ("WITH RECURSIVE" + _LK_SQL_FIXTURE
                          + ",\n" + _LK_SQL_TRUTH + """,
-predd AS (SELECT c.id_a, c.id_b, damerau_levenshtein(c.ta, c.tb) AS d
-          FROM cand c WHERE damerau_levenshtein(c.ta, c.tb) <= 2),
-sc AS (SELECT p.id_a, p.d,
+sc AS (SELECT p.id_a, p.distance AS d,
               CASE WHEN t.id_a IS NOT NULL THEN 1 ELSE 0 END AS it
-       FROM predd p LEFT JOIN truth t
+       FROM scored p LEFT JOIN truth t
          ON p.id_a = t.id_a AND p.id_b = t.id_b),
 th AS (SELECT CAST(unnest(range(0, 3)) AS INTEGER) AS threshold),
 cum AS (SELECT th.threshold,
@@ -5825,19 +5818,14 @@ FROM cum, tot
 """)
 
 
-def _q_pair_features(spark, sf_dir):
-    """Multi-feature pair scoring: the feature-generation stage a learned
-    matcher consumes — per verified candidate pair, the classic ER
-    feature vector (edit distance, length difference, common-prefix
-    length, character-bigram Jaccard) computed entirely in Catalyst
-    expressions on the already-attached title payloads.  All features are
-    exact integers; the Jaccard is one division of exact integers.
-
-    Scale shape: identical plan to scored_pairs_osa plus a zero-shuffle
-    projection — the bigram arrays live only inside one whole-stage
-    codegen project and never cross an exchange."""
-    _, scored = _lk_scored(spark, sf_dir)
-
+def _pair_features(scored):
+    """The classic ER feature vector of each scored pair (id_a, id_b,
+    term_a, term_b, distance): edit distance, length difference,
+    common-prefix length and character-bigram intersection / union /
+    Jaccard, all Catalyst expressions over the attached titles.  Every
+    feature is an exact integer; the Jaccard is one division of exact
+    integers.  pair_features emits it; the Fellegi-Sunter decision
+    reads its agreement flags from it."""
     def bigrams(c):
         arr = F.expr(f"array_distinct(transform(sequence(1, length({c}) "
                      f"- 1), i -> substr({c}, i, 2)))")
@@ -5864,30 +5852,48 @@ def _q_pair_features(spark, sf_dir):
         F.when(uni > 0, inter.cast("double") / uni).alias("bigram_jaccard"))
 
 
-_O_PAIR_FEATURES = ("WITH RECURSIVE" + _LK_SQL_FIXTURE + """,
-feat AS (SELECT id_a, id_b, ta, tb, damerau_levenshtein(ta, tb) AS osa
-         FROM cand WHERE damerau_levenshtein(ta, tb) <= 2),
-bg AS (SELECT id_a, id_b, osa, ta, tb,
-              list_distinct(list_transform(range(1, length(ta)),
-                  i -> substr(ta, CAST(i AS INTEGER), 2))) AS ba,
-              list_distinct(list_transform(range(1, length(tb)),
-                  i -> substr(tb, CAST(i AS INTEGER), 2))) AS bb
-       FROM feat)
+def _q_pair_features(spark, sf_dir):
+    """Multi-feature pair scoring: the feature-generation stage a learned
+    matcher consumes — _pair_features over the verified candidate
+    pairs.
+
+    Scale shape: identical plan to scored_pairs_osa plus a zero-shuffle
+    projection — the bigram arrays live only inside one whole-stage
+    codegen project and never cross an exchange."""
+    return _pair_features(_lk_scored(spark, sf_dir)[1])
+
+
+def _sql_pair_features(src: str) -> str:
+    """DuckDB twin of _pair_features over the (id_a, id_b, ta, tb,
+    distance) rows of CTE ``src``: pf(id_a, id_b, distance, len_diff,
+    prefix_len, bigram_inter, bigram_union)."""
+    bigrams = ("list_distinct(list_transform(range(1, length({t})), "
+               "i -> substr({t}, CAST(i AS INTEGER), 2)))")
+    return f"""pfb AS (SELECT *, {bigrams.format(t='ta')} AS ba,
+                    {bigrams.format(t='tb')} AS bb
+        FROM {src}),
+pf AS (SELECT id_a, id_b, distance,
+              abs(length(ta) - length(tb)) AS len_diff,
+              len(list_filter(range(1, least(length(ta), length(tb)) + 1),
+                  i -> substr(ta, 1, CAST(i AS INTEGER))
+                       = substr(tb, 1, CAST(i AS INTEGER)))) AS prefix_len,
+              len(list_intersect(ba, bb)) AS bigram_inter,
+              len(list_distinct(list_concat(ba, bb))) AS bigram_union
+       FROM pfb)"""
+
+
+_O_PAIR_FEATURES = ("WITH RECURSIVE" + _LK_SQL_FIXTURE + ",\n"
+                    + _sql_pair_features("scored") + """
 SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
-       CAST(osa AS INTEGER) AS osa,
-       CAST(abs(length(ta) - length(tb)) AS INTEGER) AS len_diff,
-       CAST(len(list_filter(range(1, least(length(ta), length(tb)) + 1),
-                i -> substr(ta, 1, CAST(i AS INTEGER))
-                     = substr(tb, 1, CAST(i AS INTEGER)))) AS INTEGER)
-           AS prefix_len,
-       CAST(len(list_intersect(ba, bb)) AS INTEGER) AS bigram_inter,
-       CAST(len(list_distinct(list_concat(ba, bb))) AS INTEGER)
-           AS bigram_union,
-       CASE WHEN len(list_distinct(list_concat(ba, bb))) > 0
-            THEN CAST(len(list_intersect(ba, bb)) AS DOUBLE)
-                 / len(list_distinct(list_concat(ba, bb)))
+       CAST(distance AS INTEGER) AS osa,
+       CAST(len_diff AS INTEGER) AS len_diff,
+       CAST(prefix_len AS INTEGER) AS prefix_len,
+       CAST(bigram_inter AS INTEGER) AS bigram_inter,
+       CAST(bigram_union AS INTEGER) AS bigram_union,
+       CASE WHEN bigram_union > 0
+            THEN CAST(bigram_inter AS DOUBLE) / bigram_union
        END AS bigram_jaccard
-FROM bg
+FROM pf
 """)
 
 
@@ -5909,28 +5915,16 @@ _FS_POSSIBLE_MB = 0
 
 def _fs_decision_df(scored, weights):
     """The FS decision projection over a scored pair frame: four exact
-    integer agreement predicates, an integer milli-bit weight sum with
-    the given per-comparator (agree, disagree) constants, and the
-    three-way CASE — all inside one whole-stage-codegen project."""
-    def bigrams(c):
-        arr = F.expr(f"array_distinct(transform(sequence(1, length({c}) "
-                     f"- 1), i -> substr({c}, i, 2)))")
-        return F.when(F.length(c) >= 2, arr).otherwise(
-            F.array().cast("array<string>"))
-
-    ba, bb = bigrams("term_a"), bigrams("term_b")
-    inter = F.size(F.array_intersect(ba, bb))
-    uni = F.size(F.array_union(ba, bb))
-    prefix = F.when(
-        F.least(F.length("term_a"), F.length("term_b")) > 0,
-        F.expr("size(filter(sequence(1, least(length(term_a), "
-               "length(term_b))), i -> substr(term_a, 1, i) "
-               "= substr(term_b, 1, i)))")).otherwise(F.lit(0))
-    flags = {"osa": (F.col("distance") <= 1).cast("int"),
-             "len": (F.length("term_a")
-                     == F.length("term_b")).cast("int"),
-             "prefix": (prefix >= 3).cast("int"),
-             "bigram": (inter * 5 >= uni * 3).cast("int")}
+    integer agreement predicates on its _pair_features, an integer
+    milli-bit weight sum with the given per-comparator (agree,
+    disagree) constants, and the three-way CASE — all inside one
+    whole-stage-codegen project."""
+    feats = _pair_features(scored)
+    flags = {"osa": (F.col("osa") <= 1).cast("int"),
+             "len": (F.col("len_diff") == 0).cast("int"),
+             "prefix": (F.col("prefix_len") >= 3).cast("int"),
+             "bigram": (F.col("bigram_inter") * 5
+                        >= F.col("bigram_union") * 3).cast("int")}
 
     def w(key):
         agree, disagree = weights[key]
@@ -5942,9 +5936,8 @@ def _fs_decision_df(scored, weights):
     decision = (F.when(weight >= _FS_MATCH_MB, F.lit("match"))
                 .when(weight >= _FS_POSSIBLE_MB, F.lit("possible"))
                 .otherwise(F.lit("non_match")))
-    return scored.select(
-        F.col("id_a").cast("bigint").alias("id_a"),
-        F.col("id_b").cast("bigint").alias("id_b"),
+    return feats.select(
+        "id_a", "id_b",
         flags["osa"].alias("a_osa"), flags["len"].alias("a_len"),
         flags["prefix"].alias("a_prefix"),
         flags["bigram"].alias("a_bigram"),
@@ -5976,59 +5969,37 @@ def _q_fellegi_sunter(spark, sf_dir):
     return _fs_decision_df(scored, _FS_WEIGHTS)
 
 
-# shared FS CTE chain — cand pairs -> agreement bits -> integer weight
-# -> three-way decision; every FS oracle builds on `fsdec` so the rows
+# shared FS CTE chain — the pair features of the (id_a, id_b, ta, tb,
+# distance) rows of CTE ``src`` -> agreement bits -> integer weight ->
+# three-way decision; every FS oracle builds on `fsdec` so the rows
 # cannot drift from each other.  Parameterized by the per-comparator
-# (agree, disagree) milli-bit constants so the EM round-2 oracle reuses
-# the identical chain with re-derived weights.
-def _fs_sql_dec(weights) -> str:
-    w = {k: (int(a), int(d)) for k, (a, d) in weights.items()}
-    return _FS_SQL_DEC_TEMPLATE.format(
-        osa_a=w["osa"][0], osa_d=w["osa"][1],
-        len_a=w["len"][0], len_d=w["len"][1],
-        prefix_a=w["prefix"][0], prefix_d=w["prefix"][1],
-        bigram_a=w["bigram"][0], bigram_d=w["bigram"][1])
+# (agree, disagree) milli-bit constants so the EM oracles reuse the
+# identical chain with re-derived weights.
+def _fs_sql_dec(weights, src: str) -> str:
+    def w(key, flag):
+        agree, disagree = (int(x) for x in weights[key])
+        return f"(CASE WHEN {flag} = 1 THEN {agree} ELSE {disagree} END)"
 
-
-_FS_SQL_DEC_TEMPLATE = """,
-fsfeat AS (SELECT id_a, id_b, ta, tb, damerau_levenshtein(ta, tb) AS osa
-           FROM cand WHERE damerau_levenshtein(ta, tb) <= 2),
+    return ",\n" + _sql_pair_features(src) + f""",
 fsag AS (SELECT id_a, id_b,
-              CASE WHEN osa <= 1 THEN 1 ELSE 0 END AS a_osa,
-              CASE WHEN length(ta) = length(tb) THEN 1 ELSE 0
-                   END AS a_len,
-              CASE WHEN len(list_filter(
-                       range(1, least(length(ta), length(tb)) + 1),
-                       i -> substr(ta, 1, CAST(i AS INTEGER))
-                            = substr(tb, 1, CAST(i AS INTEGER)))) >= 3
-                   THEN 1 ELSE 0 END AS a_prefix,
-              CASE WHEN 5 * len(list_intersect(
-                       list_distinct(list_transform(range(1, length(ta)),
-                           i -> substr(ta, CAST(i AS INTEGER), 2))),
-                       list_distinct(list_transform(range(1, length(tb)),
-                           i -> substr(tb, CAST(i AS INTEGER), 2)))))
-                   >= 3 * len(list_distinct(list_concat(
-                       list_distinct(list_transform(range(1, length(ta)),
-                           i -> substr(ta, CAST(i AS INTEGER), 2))),
-                       list_distinct(list_transform(range(1, length(tb)),
-                           i -> substr(tb, CAST(i AS INTEGER), 2))))))
+              CASE WHEN distance <= 1 THEN 1 ELSE 0 END AS a_osa,
+              CASE WHEN len_diff = 0 THEN 1 ELSE 0 END AS a_len,
+              CASE WHEN prefix_len >= 3 THEN 1 ELSE 0 END AS a_prefix,
+              CASE WHEN 5 * bigram_inter >= 3 * bigram_union
                    THEN 1 ELSE 0 END AS a_bigram
-       FROM fsfeat),
+       FROM pf),
 fswt AS (SELECT id_a, id_b, a_osa, a_len, a_prefix, a_bigram,
-              CAST((CASE WHEN a_osa = 1 THEN {osa_a} ELSE {osa_d} END)
-                 + (CASE WHEN a_len = 1 THEN {len_a} ELSE {len_d} END)
-                 + (CASE WHEN a_prefix = 1 THEN {prefix_a}
-                         ELSE {prefix_d} END)
-                 + (CASE WHEN a_bigram = 1 THEN {bigram_a}
-                         ELSE {bigram_d} END)
+              CAST({w("osa", "a_osa")} + {w("len", "a_len")}
+                   + {w("prefix", "a_prefix")} + {w("bigram", "a_bigram")}
                    AS BIGINT) AS weight_mb
        FROM fsag),
-fsdec AS (SELECT *, CASE WHEN weight_mb >= 4000 THEN 'match'
-                         WHEN weight_mb >= 0 THEN 'possible'
+fsdec AS (SELECT *, CASE WHEN weight_mb >= {_FS_MATCH_MB} THEN 'match'
+                         WHEN weight_mb >= {_FS_POSSIBLE_MB} THEN 'possible'
                          ELSE 'non_match' END AS decision
           FROM fswt)"""
 
-_FS_SQL_DEC = _fs_sql_dec(_FS_WEIGHTS)
+
+_FS_SQL_DEC = _fs_sql_dec(_FS_WEIGHTS, "scored")
 
 _O_FELLEGI_SUNTER = ("WITH RECURSIVE" + _LK_SQL_FIXTURE + _FS_SQL_DEC + """
 SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
@@ -6061,9 +6032,8 @@ def _q_fs_em_step(spark, sf_dir):
 
 def _fs_em_step_from(fs):
     """M-step aggregation over an already-built fellegi_sunter decision
-    DataFrame — split out so fs_round2 can run the EM pass and the
-    re-decide pass over ONE materialized scored subtree instead of
-    rebuilding blocking + scoring twice."""
+    DataFrame — split out so the EM loop (_fs_em) runs every M-step and
+    the final decision over ONE materialized scored subtree."""
     agg = fs.agg(
         F.sum((F.col("decision") == "match").cast("bigint"))
         .alias("n_match"),
@@ -6096,9 +6066,12 @@ def _fs_em_step_from(fs):
 
 
 # EM M-step SQL suffix over an fsdec chain — shared by the fixed-weight
-# oracle and the per-iteration SQL of the convergence loop
+# oracle and the per-iteration SQL of the EM loop.  tot is MATERIALIZED:
+# the 4-way unpivot reads it four times, and inlined each read re-ran the
+# whole decision chain (fs_em_step at sf0.1: 14.0 s -> 4.0 s, 2 DuckDB
+# threads)
 _FS_SQL_EM_SUFFIX = """,
-tot AS (SELECT
+tot AS MATERIALIZED (SELECT
     sum(CASE WHEN decision = 'match' THEN 1 ELSE 0 END) AS n_match,
     sum(CASE WHEN decision = 'non_match' THEN 1 ELSE 0 END)
         AS n_nonmatch,
@@ -6167,7 +6140,7 @@ def _fs_weights_from_ppm(ppm_rows):
     """Derive integer milli-bit (agree, disagree) weights from fs_em_step
     output rows.  ppm values are clamped to [1, 999999] (a comparator
     that agrees on every match still can't claim infinite evidence).
-    Both engines' round-2 paths call THIS function on the SAME integer
+    Both engines' EM loops call THIS function on the SAME integer
     ppm values (proven equal by fs_em_step's green oracle row), so the
     derived weights are identical integers by construction — the float
     log2 never crosses an engine boundary."""
@@ -6183,60 +6156,6 @@ def _fs_weights_from_ppm(ppm_rows):
     return weights
 
 
-def _q_fs_round2(spark, sf_dir):
-    """The EM loop CLOSED: second-iteration Fellegi-Sunter decisions
-    using weights re-derived from fs_em_step's ppm estimates instead of
-    the priors.  The 4-row EM output is collected (bounded by the
-    comparator count, never the corpus — the one driver action an EM
-    iteration inherently needs), folded into integer milli-bit weights
-    by _fs_weights_from_ppm, and the identical decision projection
-    re-runs with the new constants.  Thresholds stay at the same
-    log-odds cuts (4000 milli-bits = a 16:1 posterior odds shift) —
-    log-odds are scale-free, so the cut is comparable across
-    iterations.
-
-    Scale shape: blocking + scoring run ONCE — the scored pairs are
-    localCheckpoint'ed (lazily; the EM collect materializes them) and
-    both the EM aggregation and the re-decide projection read the
-    materialized subtree, so the second pass costs only a codegen
-    projection over cached rows.  localCheckpoint over persist():
-    storage is reclaimed by the ContextCleaner when the returned frame
-    is dropped, instead of leaking a CacheManager entry into the rest
-    of the session; a multi-iteration production EM swaps it for a
-    reliable checkpoint() per iteration (executor loss then replays
-    from the checkpoint, and it doubles as the lineage truncation an
-    iterative plan needs anyway)."""
-    _, scored = _lk_scored(spark, sf_dir)
-    scored = scored.localCheckpoint(eager=False)
-    em = [r.asDict() for r in
-          _fs_em_step_from(_fs_decision_df(scored, _FS_WEIGHTS))
-          .collect()]
-    weights = _fs_weights_from_ppm(em)
-    return _fs_decision_df(scored, weights).select(
-        "id_a", "id_b", "weight_mb", "decision")
-
-
-def _o_fs_round2(sf_dir: str) -> str:
-    """Oracle for fs_round2: run the fs_em_step oracle SQL on DuckDB,
-    derive the SAME integer weights via _fs_weights_from_ppm, and emit
-    the shared decision chain with those constants."""
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
-                f"'{sf_dir}/{t}.parquet'")
-    cols = ("comparator", "n_match", "agree_match", "n_nonmatch",
-            "agree_nonmatch", "m_ppm", "u_ppm")
-    rows = [dict(zip(cols, r)) for r in con.sql(_O_FS_EM_STEP).fetchall()]
-    weights = _fs_weights_from_ppm(rows)
-    return ("WITH RECURSIVE" + _LK_SQL_FIXTURE + _fs_sql_dec(weights) + """
-SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
-       weight_mb, decision
-FROM fsdec
-""")
-
-
 # EM iteration cap.  The weight space is a finite integer lattice and in
 # practice the loop fixpoints in 2-4 iterations on this fixture; the cap
 # only guards a (theoretically possible) 2-cycle from looping forever.
@@ -6246,39 +6165,46 @@ _FS_EM_COLS = ("comparator", "n_match", "agree_match", "n_nonmatch",
                "agree_nonmatch", "m_ppm", "u_ppm")
 
 
-def _fs_em_fixpoint(em_rows_fn, w0):
-    """Iterate weights → M-step → weights until the INTEGER weight
-    vector stops changing (or _FS_MAX_EM_ITERS).  Both engines run this
-    exact function over their own M-step evaluator; because every
-    iteration's ppm values are exact integers proven equal across
-    engines (fs_em_step's green row), the weight SEQUENCE — and
-    therefore the fixpoint and the iteration count — is identical by
-    induction.  Returns (weights, n_iters_run)."""
-    weights = {k: tuple(v) for k, v in w0.items()}
-    for i in range(1, _FS_MAX_EM_ITERS + 1):
+def _fs_em_fixpoint(em_rows_fn, max_iters):
+    """Iterate weights → M-step → weights from _FS_WEIGHTS until the
+    INTEGER weight vector stops changing, or for at most ``max_iters``
+    M-steps.  Both engines run this exact function over their own
+    M-step evaluator; because every iteration's ppm values are exact
+    integers proven equal across engines (fs_em_step's green row), the
+    weight SEQUENCE — and therefore the fixpoint and the iteration
+    count — is identical by induction.  Returns (weights,
+    n_iters_run)."""
+    weights = {k: tuple(v) for k, v in _FS_WEIGHTS.items()}
+    for i in range(1, max_iters + 1):
         w2 = _fs_weights_from_ppm(em_rows_fn(weights))
         if w2 == weights:
             return weights, i
         weights = w2
-    return weights, _FS_MAX_EM_ITERS
+    return weights, max_iters
 
 
-def _q_fs_converged(spark, sf_dir):
-    """The EM loop run to CONVERGENCE: iterate decision → M-step →
-    re-derived integer weights until the weight vector fixpoints, then
-    emit the final decisions (plus the iteration count, so the oracle
-    row also pins that both engines converge along the same path in the
-    same number of steps).  fs_round2 pins one iteration's mechanics;
-    this is the operating form — production runs exactly this loop and
-    then freezes the weights into the scoring layer.
+def _fs_em(spark, sf_dir, max_iters):
+    """(decisions, n_iters): the FS EM loop over the verified pairs —
+    decide → M-step → re-derived integer weights (_fs_em_fixpoint) —
+    then the final (id_a, id_b, weight_mb, decision).  Each M-step's
+    4-row output is collected (bounded by the comparator count, never
+    the corpus — the one driver action an EM iteration inherently
+    needs).  Thresholds stay at the same log-odds cuts (4000
+    milli-bits = a 16:1 posterior odds shift) — log-odds are
+    scale-free, so the cut is comparable across iterations.
 
-    Scale shape: blocking + scoring run ONCE (the same lazily
-    localCheckpoint'ed subtree as fs_round2); each EM iteration is a
-    codegen agreement projection + one 4-row map-side-combined
-    aggregation over the cached pairs, and the driver state is the
-    4-comparator integer weight vector — O(1) regardless of corpus
-    size.  Iterations are inherently sequential (EM is); the per-
-    iteration cost is the minimum any EM linkage pays."""
+    Scale shape: blocking + scoring run ONCE — the scored pairs are
+    localCheckpoint'ed (lazily; the first M-step collect materializes
+    them) and every M-step and the final decision read the materialized
+    subtree, so an iteration costs a codegen agreement projection + one
+    4-row map-side-combined aggregation over cached rows, and the
+    driver state is the 4-comparator integer weight vector.
+    localCheckpoint over persist(): storage is reclaimed by the
+    ContextCleaner when the returned frame is dropped, instead of
+    leaking a CacheManager entry into the rest of the session; a
+    production EM swaps it for a reliable checkpoint() per iteration
+    (executor loss then replays from the checkpoint, and it doubles as
+    the lineage truncation an iterative plan needs anyway)."""
     _, scored = _lk_scored(spark, sf_dir)
     scored = scored.localCheckpoint(eager=False)
 
@@ -6286,34 +6212,61 @@ def _q_fs_converged(spark, sf_dir):
         return [r.asDict() for r in
                 _fs_em_step_from(_fs_decision_df(scored, w)).collect()]
 
-    weights, n = _fs_em_fixpoint(em_rows, _FS_WEIGHTS)
+    weights, n = _fs_em_fixpoint(em_rows, max_iters)
     return (_fs_decision_df(scored, weights)
-            .select("id_a", "id_b", "weight_mb", "decision")
-            .withColumn("n_iters", F.lit(n).cast("int")))
+            .select("id_a", "id_b", "weight_mb", "decision"), n)
+
+
+def _q_fs_round2(spark, sf_dir):
+    """The EM loop CLOSED once: second-iteration Fellegi-Sunter
+    decisions under weights re-derived from fs_em_step's ppm estimates
+    instead of the priors — _fs_em stopped after one M-step."""
+    return _fs_em(spark, sf_dir, 1)[0]
+
+
+def _q_fs_converged(spark, sf_dir):
+    """The EM loop run to CONVERGENCE: _fs_em until the weight vector
+    fixpoints, then the final decisions plus the iteration count, so
+    the oracle row also pins that both engines converge along the same
+    path in the same number of steps.  fs_round2 pins one iteration's
+    mechanics; this is the operating form — production runs exactly
+    this loop and then freezes the weights into the scoring layer."""
+    out, n = _fs_em(spark, sf_dir, _FS_MAX_EM_ITERS)
+    return out.withColumn("n_iters", F.lit(n).cast("int"))
+
+
+def _o_fs_em(sf_dir: str, max_iters: int):
+    """(weights, n_iters): _fs_em's loop with DuckDB as the M-step
+    evaluator (the fs_em_step oracle chain under each iteration's
+    weights)."""
+    with duckdb_session(sf_dir) as con:
+        def em_rows(w):
+            sql = ("WITH RECURSIVE" + _LK_SQL_FIXTURE
+                   + _fs_sql_dec(w, "scored") + _FS_SQL_EM_SUFFIX)
+            return [dict(zip(_FS_EM_COLS, r))
+                    for r in con.sql(sql).fetchall()]
+
+        return _fs_em_fixpoint(em_rows, max_iters)
+
+
+def _o_fs_decisions(weights) -> str:
+    """_fs_em's final (id_a, id_b, weight_mb, decision) in DuckDB."""
+    return ("WITH RECURSIVE" + _LK_SQL_FIXTURE
+            + _fs_sql_dec(weights, "scored") + """
+SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
+       weight_mb, decision
+FROM fsdec
+""")
+
+
+def _o_fs_round2(sf_dir: str) -> str:
+    return _o_fs_decisions(_o_fs_em(sf_dir, 1)[0])
 
 
 def _o_fs_converged(sf_dir: str) -> str:
-    """Oracle for fs_converged: run the identical fixpoint loop with
-    DuckDB as the M-step evaluator and emit the shared decision chain
-    under the converged weights."""
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
-                f"'{sf_dir}/{t}.parquet'")
-
-    def em_rows(w):
-        sql = ("WITH RECURSIVE" + _LK_SQL_FIXTURE + _fs_sql_dec(w)
-               + _FS_SQL_EM_SUFFIX)
-        return [dict(zip(_FS_EM_COLS, r)) for r in con.sql(sql).fetchall()]
-
-    weights, n = _fs_em_fixpoint(em_rows, _FS_WEIGHTS)
-    return ("WITH RECURSIVE" + _LK_SQL_FIXTURE + _fs_sql_dec(weights) + f"""
-SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
-       weight_mb, decision, CAST({n} AS INTEGER) AS n_iters
-FROM fsdec
-""")
+    weights, n = _o_fs_em(sf_dir, _FS_MAX_EM_ITERS)
+    return (f"SELECT *, CAST({n} AS INTEGER) AS n_iters "
+            f"FROM ({_o_fs_decisions(weights)})")
 
 
 # calibration band width and offset (milli-bits).  The offset shifts
@@ -6373,14 +6326,11 @@ def _q_fs_calibration(spark, sf_dir):
             .withColumn("precision", F.col("n_tp") / F.col("n_pairs")))
 
 
-# the same decision chain WITHOUT the verification filter — fsfeat keeps
-# every blocked candidate (fs_calibration's population)
-_FS_SQL_DEC_ALL = _FS_SQL_DEC.replace(
-    "FROM cand WHERE damerau_levenshtein(ta, tb) <= 2", "FROM cand")
-assert _FS_SQL_DEC_ALL != _FS_SQL_DEC  # replace() must fire
-
+# the decision chain over every blocked candidate (dist), before the
+# verification filter: fs_calibration's population
 _O_FS_CALIBRATION = ("WITH RECURSIVE" + _LK_SQL_FIXTURE
-                     + _FS_SQL_DEC_ALL + ",\n" + _LK_SQL_TRUTH + f""",
+                     + _fs_sql_dec(_FS_WEIGHTS, "dist") + ",\n"
+                     + _LK_SQL_TRUTH + f""",
 jt AS (SELECT f.weight_mb,
               CASE WHEN t.id_a IS NOT NULL THEN 1 ELSE 0 END AS it
        FROM fsdec f LEFT JOIN truth t
@@ -6512,6 +6462,49 @@ FROM ag WHERE i = length(ta)
 _SNM_WINDOW = 3
 
 
+def _snm_pass(pages, key: str):
+    """One sorted-neighborhood pass over the pages: candidate pairs
+    (id_a, id_b, term_a, term_b) within _SNM_WINDOW positions of the
+    (key, page_id) sort order."""
+    from .operators.snm import snm_candidate_pairs
+
+    return snm_candidate_pairs(pages, [key, "page_id"], id_col="page_id",
+                               term_col="title", window=_SNM_WINDOW)
+
+
+def _sql_snm_pass(name: str, key: str) -> str:
+    """DuckDB twin of _snm_pass, verified at OSA <= 2: CTE ``name``
+    (id_a, id_b, distance) over the pages ranked by (key, page_id)."""
+    return f"""{name}r AS (SELECT page_id, title,
+              row_number() OVER (ORDER BY {key}, page_id) AS rnk
+       FROM pages),
+{name} AS (SELECT * FROM (
+    SELECT least(a.page_id, b.page_id) AS id_a,
+           greatest(a.page_id, b.page_id) AS id_b,
+           damerau_levenshtein(a.title, b.title) AS distance
+    FROM {name}r a JOIN {name}r b
+      ON b.rnk > a.rnk AND b.rnk <= a.rnk + {_SNM_WINDOW})
+    WHERE distance <= 2)"""
+
+
+_SNM_SQL_PASSES = (",\n" + _sql_snm_pass("snm1", "title") + ",\n"
+                   + _sql_snm_pass("snm2", "reverse(title)") + """,
+snmu AS (SELECT DISTINCT id_a, id_b, distance FROM
+         (SELECT * FROM snm1 UNION ALL SELECT * FROM snm2))""")
+# ^ DISTINCT-over-UNION-ALL, not plain UNION: under WITH RECURSIVE
+# (the blocking_compare oracle) DuckDB gives a CTE whose top-level set
+# op is UNION the recursive-union treatment even without
+# self-reference, silently skipping the dedup (measured: 850 rows vs
+# the correct 578; fine under plain WITH).  Pinned in
+# tests/test_query_catalog.py::test_duckdb_recursive_union_quirk.
+
+_O_SNM_PAIRS = ("WITH" + _LK_SQL_PAGES + _SNM_SQL_PASSES + """
+SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
+       CAST(distance AS INTEGER) AS distance
+FROM snm1
+""")
+
+
 def _q_snm_pairs(spark, sf_dir):
     """Sorted-neighborhood blocking (the SECOND classic blocking family,
     operators/snm.py) over the labeled pages: pairs within
@@ -6526,26 +6519,11 @@ def _q_snm_pairs(spark, sf_dir):
     per-physical-partition row_number plus broadcast cumulative offsets
     (partition-count-sized), and neighbor pairing is a w-fan-out
     equi-join on rank, not a range join."""
-    from .operators.snm import snm_candidate_pairs
-
-    pages = _lk_pages(spark, sf_dir)
-    cand = snm_candidate_pairs(pages, ["title", "page_id"],
-                               id_col="page_id", term_col="title",
-                               window=_SNM_WINDOW)
+    cand = _snm_pass(_lk_pages(spark, sf_dir), "title")
     return (score_pairs(cand, max_distance=2)
             .select(F.col("id_a").cast("bigint").alias("id_a"),
                     F.col("id_b").cast("bigint").alias("id_b"),
                     F.col("distance").cast("int").alias("distance")))
-
-
-def _o_snm_pairs() -> str:
-    # defined after _SNM_SQL_RANKS below; deferred so both single- and
-    # multi-key oracles share one ranks CTE text
-    return ("WITH" + _LK_SQL_PAGES + _SNM_SQL_RANKS + """
-SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
-       CAST(distance AS INTEGER) AS distance
-FROM snm1
-""")
 
 
 def _lk_snm_flagged(spark, sf_dir, pages):
@@ -6557,16 +6535,10 @@ def _lk_snm_flagged(spark, sf_dir, pages):
     (id_a, id_b, term_a, term_b, s1, s2, distance); the reversed-title
     pass is the standard SNM recall fix — a second sort key whose order
     survives early-position edits."""
-    from .operators.snm import snm_candidate_pairs
-
     p = pages.withColumn("rtitle", F.reverse("title"))
-    c1 = (snm_candidate_pairs(p, ["title", "page_id"],
-                              id_col="page_id", term_col="title",
-                              window=_SNM_WINDOW)
+    c1 = (_snm_pass(p, "title")
           .select("*", F.lit(1).alias("s1"), F.lit(0).alias("s2")))
-    c2 = (snm_candidate_pairs(p, ["rtitle", "page_id"],
-                              id_col="page_id", term_col="title",
-                              window=_SNM_WINDOW)
+    c2 = (_snm_pass(p, "rtitle")
           .select("*", F.lit(0).alias("s1"), F.lit(1).alias("s2")))
     cand = (c1.unionByName(c2)
             .groupBy("id_a", "id_b", "term_a", "term_b")
@@ -6592,35 +6564,7 @@ def _q_snm_multikey_pairs(spark, sf_dir):
                     F.col("distance").cast("int").alias("distance")))
 
 
-_SNM_SQL_RANKS = f""",
-r1 AS (SELECT page_id, title,
-              row_number() OVER (ORDER BY title, page_id) AS rnk
-       FROM pages),
-r2 AS (SELECT page_id, title,
-              row_number() OVER (ORDER BY reverse(title), page_id) AS rnk
-       FROM pages),
-snm1 AS (SELECT least(a.page_id, b.page_id) AS id_a,
-                greatest(a.page_id, b.page_id) AS id_b,
-                damerau_levenshtein(a.title, b.title) AS distance
-         FROM r1 a JOIN r1 b
-           ON b.rnk > a.rnk AND b.rnk <= a.rnk + {_SNM_WINDOW}
-         WHERE damerau_levenshtein(a.title, b.title) <= 2),
-snm2 AS (SELECT least(a.page_id, b.page_id) AS id_a,
-                greatest(a.page_id, b.page_id) AS id_b,
-                damerau_levenshtein(a.title, b.title) AS distance
-         FROM r2 a JOIN r2 b
-           ON b.rnk > a.rnk AND b.rnk <= a.rnk + {_SNM_WINDOW}
-         WHERE damerau_levenshtein(a.title, b.title) <= 2),
-snmu AS (SELECT DISTINCT id_a, id_b, distance FROM
-         (SELECT * FROM snm1 UNION ALL SELECT * FROM snm2))"""
-# ^ DISTINCT-over-UNION-ALL, not plain UNION: under WITH RECURSIVE
-# (the blocking_compare oracle) DuckDB gives a CTE whose top-level set
-# op is UNION the recursive-union treatment even without
-# self-reference, silently skipping the dedup (measured: 850 rows vs
-# the correct 578; fine under plain WITH).  Pinned in
-# tests/test_query_catalog.py::test_duckdb_recursive_union_quirk.
-
-_O_SNM_MULTIKEY = ("WITH" + _LK_SQL_PAGES + _SNM_SQL_RANKS + """
+_O_SNM_MULTIKEY = ("WITH" + _LK_SQL_PAGES + _SNM_SQL_PASSES + """
 SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
        CAST(distance AS INTEGER) AS distance
 FROM snmu
@@ -6676,14 +6620,14 @@ def _q_blocking_compare(spark, sf_dir):
 
 
 _O_BLOCKING_COMPARE = ("WITH RECURSIVE" + _LK_SQL_FIXTURE
-                       + _SNM_SQL_RANKS + ",\n" + _LK_SQL_TRUTH + """,
+                       + _SNM_SQL_PASSES + ",\n" + _LK_SQL_TRUTH + """,
 snmf AS (SELECT id_a, id_b, max(s1) AS s1 FROM (
              SELECT id_a, id_b, 1 AS s1 FROM snm1
              UNION ALL SELECT id_a, id_b, 0 FROM snm2)
          GROUP BY id_a, id_b),
 m AS (SELECT coalesce(d.f, 0) AS ind, coalesce(k.s1, 0) AS ins,
              coalesce(k.f, 0) AS inm, coalesce(t.f, 0) AS intr
-      FROM (SELECT id_a, id_b, 1 AS f FROM pred) d
+      FROM (SELECT id_a, id_b, 1 AS f FROM scored) d
       FULL OUTER JOIN (SELECT id_a, id_b, s1, 1 AS f FROM snmf) k
         ON d.id_a = k.id_a AND d.id_b = k.id_b
       FULL OUTER JOIN (SELECT id_a, id_b, 1 AS f FROM truth) t
@@ -7113,33 +7057,27 @@ def _o_canopy_blocking_sql(max_component=None):
     """DuckDB oracle for canopy blocking, parameterized on the
     component-size cap so tests can verify engine parity at a cap that
     bites on the fixture (the committed catalog entry uses the
-    default).  Every CTE after the shared pages fixture is MATERIALIZED:
-    DuckDB otherwise inlines a CTE at every reference, so the gram
-    self-join re-ran under both sides of ``e``, the recursive center
-    fold under ``fin`` and ``cent``, ``memb`` twice under ``cand``, and
-    ``cand``/``cent`` again in the metrics."""
+    default).  The loose-similarity graph's components come from
+    _sql_cc, and every CTE after the shared pages fixture is
+    MATERIALIZED: DuckDB otherwise inlines a CTE at every reference, so
+    the recursive center fold re-ran under ``fin`` and ``cent``,
+    ``memb`` twice under ``cand``, and ``cand``/``cent`` again in the
+    metrics."""
     mc = max_component or _CANOPY_MAX_COMP
+    cc = _sql_cc(f"""SELECT a.page_id, b.page_id
+        FROM qg a JOIN qg b
+          ON a.gram = b.gram AND a.page_id < b.page_id
+        GROUP BY 1, 2 HAVING count(*) >= {_CANOPY_LOOSE}""",
+                 "SELECT page_id FROM pages")
     return ("WITH RECURSIVE " + _LK_SQL_PAGES + f""",
 qg AS MATERIALIZED (SELECT DISTINCT page_id, gram FROM (
     SELECT page_id, unnest(list_transform(range(1, length(title) - 1),
         i -> substr(title, CAST(i AS INTEGER), 3))) AS gram FROM pages)),
 gset AS MATERIALIZED (SELECT page_id, list(gram ORDER BY gram) AS gs
          FROM qg GROUP BY page_id),
-sim AS MATERIALIZED (SELECT a.page_id AS id_a, b.page_id AS id_b
-        FROM qg a JOIN qg b
-          ON a.gram = b.gram AND a.page_id < b.page_id
-        GROUP BY 1, 2 HAVING count(*) >= {_CANOPY_LOOSE}),
-e AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM sim
-      UNION SELECT id_b, id_a FROM sim),
-reach(a, b) AS MATERIALIZED (SELECT a, b FROM e
-                UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-comp AS MATERIALIZED (SELECT a AS node, least(a, min(b)) AS component
-         FROM reach GROUP BY a),
-casg AS MATERIALIZED (SELECT node, component FROM comp
-         UNION ALL SELECT page_id, page_id FROM pages
-         WHERE page_id NOT IN (SELECT node FROM comp)),
+{cc},
 pts AS MATERIALIZED (SELECT a.component AS cmp, a.node AS id, g.gs
-        FROM casg a JOIN gset g ON g.page_id = a.node),
+        FROM asg a JOIN gset g ON g.page_id = a.node),
 csz AS MATERIALIZED (SELECT cmp, count(*) AS csz FROM pts GROUP BY cmp),
 dropped AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS ndc,
                    CAST(coalesce(sum(csz), 0) AS BIGINT) AS ndp
@@ -7358,7 +7296,7 @@ CATALOG: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "fs_round2": (_q_fs_round2, _o_fs_round2),
     "fs_calibration": (_q_fs_calibration, _O_FS_CALIBRATION),
     "fs_converged": (_q_fs_converged, _o_fs_converged),
-    "snm_pairs": (_q_snm_pairs, _o_snm_pairs()),
+    "snm_pairs": (_q_snm_pairs, _O_SNM_PAIRS),
     "snm_multikey_pairs": (_q_snm_multikey_pairs, _O_SNM_MULTIKEY),
     "blocking_compare": (_q_blocking_compare, _O_BLOCKING_COMPARE),
     "meta_blocking": (_q_meta_blocking, _O_META_BLOCKING),

@@ -17,25 +17,20 @@ giant one and the guard must drop them all, visibly.
 
 import math
 
-import duckdb
 import pytest
 
 from spellchecker_wasm_spark.queries import (
-    TABLES, _o_canopy_blocking_sql, _q_canopy_blocking)
+    _o_canopy_blocking_sql, _q_canopy_blocking, duckdb_session)
 
 SF_DIR = "/root/testdata/sf0.001"
 BITE_CAP = 1
 
 
 def _oracle_row(sql):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS "
-                f"SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    res = con.sql(sql)
-    cols = [d[0] for d in res.description]
-    rows = res.fetchall()
-    con.close()
+    with duckdb_session(SF_DIR) as con:
+        res = con.sql(sql)
+        cols = [d[0] for d in res.description]
+        rows = res.fetchall()
     assert len(rows) == 1
     return dict(zip(cols, rows[0]))
 

@@ -6,20 +6,11 @@ fixture actually exercises the interesting branches at both local SFs."""
 
 import os
 
-import duckdb
 import pytest
 
-from spellchecker_wasm_spark.queries import CATALOG, TABLES
+from spellchecker_wasm_spark.queries import CATALOG, duckdb_session
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
-
-
-def _con(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * "
-                f"FROM '{sf_dir}/{t}.parquet'")
-    return con
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
@@ -28,7 +19,7 @@ def test_quality_rules_bite(sf_dir):
     one doc (r_maxlen included — thresholds are tuned to the fixture),
     and the final keep flag must split the corpus."""
     sql = CATALOG["quality_filter"][1]
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     for col in ["r_words", "r_mean", "r_short", "r_maxlen", "r_stop",
                 "keep"]:
         lo, hi = con.sql(
@@ -41,7 +32,7 @@ def test_dedup_clusters_nontrivial(sf_dir):
     """At least one multi-document cluster exists, singletons are their
     own canonical, and every cluster has exactly one canonical doc."""
     sql = CATALOG["dedup_clusters"][1]
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     multi = con.sql(
         f"SELECT count(*) FROM (SELECT cluster_id FROM ({sql}) "
         "GROUP BY cluster_id HAVING count(*) >= 2)").fetchone()[0]
@@ -59,7 +50,7 @@ def test_sample_rates_converge(sf_dir):
     generous tolerance at fixture sizes), and the sample is a proper
     subset."""
     sql = CATALOG["sample_stratified"][1]
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     rows = con.sql(
         "SELECT d.lang, any_value(s.rate_pct), "
         "       count(s.doc_id) * 100.0 / count(*) "
@@ -80,7 +71,7 @@ def test_lang_id_profiles_nontrivial(sf_dir):
     no 'und' fallback rows at these SFs) and more than one language is
     predicted (no degenerate constant argmax)."""
     sql = CATALOG["lang_id"][1]
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     und, langs = con.sql(
         f"SELECT sum(CASE WHEN pred_lang = 'und' THEN 1 ELSE 0 END), "
         f"count(DISTINCT pred_lang) FROM ({sql})").fetchone()
@@ -93,7 +84,7 @@ def test_repetition_rules_bite(sf_dir):
     """Every repetition rule must reject and keep at least one doc, and
     the combined keep flag must split the corpus."""
     sql = CATALOG["repetition_stats"][1]
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     for col in ["r_dup", "r_bigram", "r_run", "keep"]:
         lo, hi = con.sql(
             f"SELECT min({col}), max({col}) FROM ({sql})").fetchone()
@@ -105,7 +96,7 @@ def test_tfidf_topk_shape(sf_dir):
     """Exactly K ranked rows per doc (vocab is larger than K at every
     SF), ranks are 1..K, and scores are non-increasing within a doc."""
     sql = CATALOG["tfidf_topk"][1]
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     bad_k = con.sql(
         f"SELECT count(*) FROM (SELECT doc_id FROM ({sql}) GROUP BY doc_id "
         "HAVING count(*) <> 5 OR min(rank) <> 1 OR max(rank) <> 5)"
@@ -126,7 +117,7 @@ def test_doc_chunks_cover_every_token(sf_dir):
     (stride < chunk size guarantees overlap, not gaps), and every chunk
     is non-empty."""
     sql = CATALOG["doc_chunks"][1]
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     bad = con.sql(f"""
         WITH c AS ({sql}),
         cov AS (SELECT doc_id, max(start + n_tokens - 1) AS covered,
@@ -155,7 +146,7 @@ def test_simhash_dups_sane(sf_dir):
     """Verified pairs exist, every hamming is within the threshold, and
     pairs are canonical (doc_a < doc_b) and unique."""
     sql = CATALOG["simhash_dups"][1]
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     n, bad_h, bad_ord = con.sql(
         f"SELECT count(*), "
         f"sum(CASE WHEN hamming BETWEEN 0 AND 3 THEN 0 ELSE 1 END), "
@@ -177,7 +168,7 @@ def test_decontaminate_branches_and_truth(sf_dir):
     from spellchecker_wasm_spark.queries import _DECON_MOD, _DECON_N
 
     sql = CATALOG["decontaminate"][1]
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     flags = dict(con.sql(
         f"SELECT contaminated, count(*) FROM ({sql}) GROUP BY 1").fetchall())
     assert set(flags) == {0, 1}
@@ -217,7 +208,7 @@ def test_rare_token_pigeonhole(sf_dir):
     from spellchecker_wasm_spark.queries import _RARE_SHARE, _SQL_TOKS_NE
 
     sql = CATALOG["rare_token_stats"][1]
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     n_common = con.sql(f"""
         WITH toks AS ({_SQL_TOKS_NE}),
         cnt AS (SELECT term, count(*) c FROM toks GROUP BY term),
@@ -245,7 +236,7 @@ def test_token_budget_prefix_property(sf_dir):
     is dropped, every later doc is dropped), cum_tokens is the exact
     running sum, and both branches are live."""
     sql = CATALOG["token_budget_mix"][1]
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     non_prefix = con.sql(f"""
         WITH r AS ({sql}),
         x AS (SELECT lang, doc_id, kept,
@@ -277,7 +268,7 @@ def test_funnel_monotone_and_grounded(sf_dir):
     the corpus totals, and every stage must be non-empty — plus the
     admitted stage must be a strict subset of `all` (the funnel bites)."""
     sql = CATALOG["curation_funnel"][1]
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     rows = {r[0]: (r[2], r[3]) for r in con.sql(sql).fetchall()}
     stages = [f"stage_{i}" for i in range(5)]
     for a, b in zip(stages, stages[1:]):
@@ -297,7 +288,7 @@ def test_length_quantiles_exact_definition(sf_dir):
     smallest value v with ceil(q·n/100) docs at or below v — checked by
     direct counting per language."""
     sql = CATALOG["length_quantiles"][1]
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     for lang, n_docs, p25, p50, p75, p90 in con.sql(sql).fetchall():
         assert p25 <= p50 <= p75 <= p90
         for q, v in ((25, p25), (50, p50), (75, p75), (90, p90)):
@@ -319,7 +310,7 @@ def test_kmv_estimate_quality(sf_dir):
     from spellchecker_wasm_spark.queries import _KMV_K
 
     sql = CATALOG["distinct_tokens_kmv"][1]
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     bound = 3.0 / (_KMV_K ** 0.5)
     for lang, k_eff, h_k, est, n_exact in con.sql(sql).fetchall():
         assert abs(est - n_exact) / n_exact <= bound, (lang, est, n_exact)
@@ -335,7 +326,7 @@ def test_pagerank_discriminates(sf_dir):
     from spellchecker_wasm_spark.queries import _PR_SCALE
 
     sql = CATALOG["term_pagerank"][1]
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     rows = con.sql(sql).fetchall()
     ranks = {n: r for n, r in rows}
     assert len(set(ranks.values())) > 1
@@ -366,7 +357,7 @@ def test_kmeans_actually_clusters(sf_dir):
     from spellchecker_wasm_spark.queries import _KM_K
 
     sql = CATALOG["kmeans_lloyd"][1]
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     rows = con.sql(sql).fetchall()
     clusters = {c for _, c, _ in rows}
     assert 1 < len(clusters) <= _KM_K
@@ -392,7 +383,7 @@ def test_leakage_safe_split_never_straddles(sf_dir):
     """The property the query exists for: no near-dup pair may land in
     two different splits, and all three splits must be populated (the
     guard is vacuous if everything falls in train)."""
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     sql = CATALOG["leakage_safe_split"][1]
     straddle = con.sql(f"""
 WITH s AS ({sql})
@@ -424,7 +415,7 @@ def test_semdedup_matches_independent_python(sf_dir):
     from spellchecker_wasm_spark.queries import (
         _SEMDEDUP_COS, CATALOG)
 
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     vecs = {vid: [int(round(x * 1000)) for x in emb]
             for vid, emb in con.sql(
                 "SELECT vec_id, embedding FROM embeddings").fetchall()}

@@ -5,20 +5,11 @@ complete recall, clustering only amplifies precision loss, the PII pass
 redacts something real and leaves nothing behind).  Oracle side only —
 no Spark session, fast."""
 
-import duckdb
 import pytest
 
-from spellchecker_wasm_spark.queries import CATALOG, TABLES
+from spellchecker_wasm_spark.queries import CATALOG, duckdb_session
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
-
-
-def _con(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * "
-                f"FROM '{sf_dir}/{t}.parquet'")
-    return con
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
@@ -27,7 +18,7 @@ def test_linkage_f1_meets_north_rule(sf_dir):
     SymSpell blocking is lossless for pairs within the edit window, so
     any recall miss is a bug, and precision loss is bounded to hash-slug
     near-collisions."""
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     row = con.sql(CATALOG["linkage_f1"][1]).fetchone()
     n_truth, n_pred, n_tp, precision, recall, f1 = row
     assert n_truth > 0 and n_truth == 3 * (n_truth // 3)
@@ -41,7 +32,7 @@ def test_cluster_f1_amplifies_only_precision(sf_dir):
     """Connected components can merge but never split predicted pairs:
     induced recall stays 1.0, induced precision ≤ pair precision, and
     the induced pair count can only grow."""
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     p = con.sql(CATALOG["linkage_f1"][1]).fetchone()
     c = con.sql(CATALOG["linkage_cluster_f1"][1]).fetchone()
     assert c[0] == p[0]            # same truth set
@@ -57,7 +48,7 @@ def test_pii_scrub_bites_and_is_complete(sf_dir):
     scrubbing, neither pattern matches anything and the placeholders are
     present exactly as often as the counters claim."""
     from spellchecker_wasm_spark.queries import _PII_EMAIL, _PII_PHONE
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     sql = CATALOG["pii_scrub"][1]
     lo_e, lo_p, resid_e, resid_p, bad_tokens = con.sql(f"""
         SELECT min(n_emails), min(n_phones),
@@ -78,7 +69,7 @@ def test_pii_scrub_bites_and_is_complete(sf_dir):
 def test_html_extract_shape(sf_dir):
     """The expected extraction is title + newline + body — pinned here so
     the oracle itself can't silently degenerate to echoing the input."""
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     sql = CATALOG["html_extract"][1]
     n, ok_prefix, ok_nl = con.sql(f"""
         SELECT count(*),
@@ -94,7 +85,7 @@ def test_fs_decision_bands_all_populated(sf_dir):
     """The three-way decision is non-vacuous: every band receives pairs
     at both SFs (a threshold that routes everything one way proves
     nothing about the weights)."""
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     rows = dict(con.sql(
         f"SELECT decision, count(*) FROM ({CATALOG['fellegi_sunter'][1]}) "
         "GROUP BY decision").fetchall())
@@ -111,7 +102,7 @@ def test_fs_em_feedback_sharpens_weights(sf_dir):
     convergence precondition for iterating fs_em_step -> _FS_WEIGHTS."""
     import math
 
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     rows = con.sql(CATALOG["fs_em_step"][1]).fetchall()
     assert len(rows) == 4
     for comparator, n_m, am, n_u, au, m_ppm, u_ppm in rows:
@@ -128,11 +119,23 @@ def test_fs_match_band_is_pure(sf_dir):
     the whole point of demanding multiply-corroborated agreement — while
     recall stays meaningful (the clerical band holds the rest, it does
     not swallow everything)."""
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     n_truth, n_pred, n_tp, precision, recall, f1 = con.sql(
         CATALOG["fs_quality"][1]).fetchall()[0]
     assert precision == 1.0, (n_pred, n_tp)
     assert 0.3 <= recall < 1.0, recall
+
+
+def _fs_match_metrics(con, weights):
+    """linkage metrics of the FS match band under ``weights``."""
+    from spellchecker_wasm_spark.queries import (
+        _LK_SQL_FIXTURE, _fs_sql_dec, _lk_sql_metrics)
+
+    return con.sql(
+        "WITH RECURSIVE" + _LK_SQL_FIXTURE + _fs_sql_dec(weights, "scored")
+        + """,
+fsm AS (SELECT id_a, id_b FROM fsdec WHERE decision = 'match')"""
+        + _lk_sql_metrics("fsm")).fetchone()
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
@@ -141,10 +144,9 @@ def test_fs_round2_sharpens_not_degrades(sf_dir):
     MORE confident (clerical band shrinks) and the match band's
     precision does not drop while its recall does not fall.  Evaluated
     oracle-side (both engines proven equal by the catalog rows)."""
-    from spellchecker_wasm_spark.queries import (
-        _FS_SQL_DEC, _LK_SQL_FIXTURE, _lk_sql_metrics)
+    from spellchecker_wasm_spark.queries import _FS_WEIGHTS, _o_fs_em
 
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     r2_sql = CATALOG["fs_round2"][1](sf_dir)
     bands1 = dict(con.sql(
         f"SELECT decision, count(*) FROM ({CATALOG['fellegi_sunter'][1]}) "
@@ -154,21 +156,10 @@ def test_fs_round2_sharpens_not_degrades(sf_dir):
         "GROUP BY decision").fetchall())
     assert bands2.get("possible", 0) < bands1["possible"], (bands1, bands2)
 
-    q1 = con.sql("WITH RECURSIVE" + _LK_SQL_FIXTURE + _FS_SQL_DEC + """,
-fsm AS (SELECT id_a, id_b FROM fsdec WHERE decision = 'match')"""
-                 + _lk_sql_metrics("fsm")).fetchall()[0]
-    # round-2 match-band metrics: reuse the metric chain on the derived
-    # weights by re-deriving them the same way the oracle callable does
-    from spellchecker_wasm_spark.queries import (
-        _O_FS_EM_STEP, _fs_sql_dec, _fs_weights_from_ppm)
-    cols = ("comparator", "n_match", "agree_match", "n_nonmatch",
-            "agree_nonmatch", "m_ppm", "u_ppm")
-    rows = [dict(zip(cols, r))
-            for r in con.sql(_O_FS_EM_STEP).fetchall()]
-    w2 = _fs_weights_from_ppm(rows)
-    q2 = con.sql("WITH RECURSIVE" + _LK_SQL_FIXTURE + _fs_sql_dec(w2) + """,
-fsm AS (SELECT id_a, id_b FROM fsdec WHERE decision = 'match')"""
-                 + _lk_sql_metrics("fsm")).fetchall()[0]
+    q1 = _fs_match_metrics(con, _FS_WEIGHTS)
+    # round-2 match-band metrics under the weights the EM driver derives
+    # after one M-step
+    q2 = _fs_match_metrics(con, _o_fs_em(sf_dir, 1)[0])
     # columns: n_truth, n_pred, n_tp, precision, recall, f1
     assert q2[3] >= q1[3], (q1, q2)   # precision does not drop
     assert q2[4] >= q1[4], (q1, q2)   # recall does not fall
@@ -188,7 +179,7 @@ def test_bcubed_matches_independent_python(sf_dir):
     from spellchecker_wasm_spark.queries import (
         _LK_SQL_CC, _LK_SQL_FIXTURE)
 
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     asg = con.sql("WITH RECURSIVE" + _LK_SQL_FIXTURE + _LK_SQL_CC
                   + "SELECT node, component FROM asg").fetchall()
     comp = {n: c for n, c in asg}
@@ -217,7 +208,7 @@ def test_ari_consistent_with_bcubed(sf_dir):
     (they penalize the same over-merges through different lenses).  Also
     re-derives ARI from its integer components to pin the single-division
     contract."""
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     n_items, a, b, c, num, den, ari = con.sql(
         CATALOG["ari_quality"][1]).fetchone()
     n2 = n_items * (n_items - 1) // 2
@@ -241,7 +232,7 @@ def test_fs_calibration_ranks_cleanly(sf_dir):
     weights recover).  Population check: the bands partition ALL blocked
     candidates, a strict superset of the verified pairs fellegi_sunter
     decides."""
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     rows = sorted(con.sql(CATALOG["fs_calibration"][1]).fetchall())
     assert all(prec == 1.0 for lo, n, tp, prec in rows if lo >= 0), rows
     assert any(tp > 0 for lo, n, tp, prec in rows if lo < 0), rows
@@ -260,11 +251,9 @@ def test_fs_converged_fixpoint_quality(sf_dir):
     (3) end at least as good as iteration 2 on the match band (F1
     non-decreasing vs fs_round2's pinned reading), with precision
     intact."""
-    from spellchecker_wasm_spark.queries import (
-        _FS_MAX_EM_ITERS, _LK_SQL_FIXTURE, _fs_sql_dec,
-        _fs_weights_from_ppm, _lk_sql_metrics)
+    from spellchecker_wasm_spark.queries import _FS_MAX_EM_ITERS, _o_fs_em
 
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     sql = CATALOG["fs_converged"][1](sf_dir)
     bands = dict(con.sql(
         f"SELECT decision, count(*) FROM ({sql}) GROUP BY 1").fetchall())
@@ -273,24 +262,8 @@ def test_fs_converged_fixpoint_quality(sf_dir):
     assert "possible" not in bands, bands
 
     # match-band metrics at the fixpoint vs at round 2
-    from spellchecker_wasm_spark.queries import (
-        _FS_EM_COLS, _FS_SQL_EM_SUFFIX, _FS_WEIGHTS, _fs_em_fixpoint)
-
-    def em_rows(w):
-        s = ("WITH RECURSIVE" + _LK_SQL_FIXTURE + _fs_sql_dec(w)
-             + _FS_SQL_EM_SUFFIX)
-        return [dict(zip(_FS_EM_COLS, r)) for r in con.sql(s).fetchall()]
-
-    w_star, _ = _fs_em_fixpoint(em_rows, _FS_WEIGHTS)
-    w_r2 = _fs_weights_from_ppm(em_rows(_FS_WEIGHTS))
-
-    def match_metrics(w):
-        return con.sql(
-            "WITH RECURSIVE" + _LK_SQL_FIXTURE + _fs_sql_dec(w) + """,
-fsm AS (SELECT id_a, id_b FROM fsdec WHERE decision = 'match')"""
-            + _lk_sql_metrics("fsm")).fetchone()
-
-    m2, mstar = match_metrics(w_r2), match_metrics(w_star)
+    m2 = _fs_match_metrics(con, _o_fs_em(sf_dir, 1)[0])
+    mstar = _fs_match_metrics(con, _o_fs_em(sf_dir, _FS_MAX_EM_ITERS)[0])
     assert mstar[5] >= m2[5], (m2, mstar)      # F1 non-decreasing
     assert mstar[3] >= 0.99, mstar             # precision holds
 
@@ -322,7 +295,7 @@ def test_monge_elkan_matches_independent_python(sf_dir):
                        for u in dst)
         return acc / len(src)
 
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     toks = dict(con.sql(
         f"SELECT doc_id, list_slice(list_filter(string_split(text, ' '), "
         f"x -> x <> ''), 1, {_ME_TOKEN_CAP}) FROM documents "
@@ -356,7 +329,7 @@ def test_purity_consistent_with_bcubed(sf_dir):
     from spellchecker_wasm_spark.queries import (
         _LK_SQL_CC, _LK_SQL_FIXTURE)
 
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     row = con.sql(CATALOG["purity_quality"][1]).fetchone()
     n_items, sum_pmax, sum_emax, p, ip, f = row
     bb = con.sql(CATALOG["bcubed_quality"][1]).fetchone()
@@ -398,7 +371,7 @@ def test_canopy_blocking_matches_independent_python(sf_dir):
     from spellchecker_wasm_spark.queries import (
         _CANOPY_LOOSE, _CANOPY_TIGHT, _LK_SQL_PAGES)
 
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     pages = con.sql("WITH " + _LK_SQL_PAGES
                     + " SELECT page_id, title FROM pages").fetchall()
     grams = {pid: frozenset(t[i:i + 3] for i in range(len(t) - 2))
@@ -469,7 +442,7 @@ def test_soft_tfidf_matches_independent_python(sf_dir):
         jaro_winkler_similarity)
     from spellchecker_wasm_spark.queries import _ME_TOKEN_CAP, _STF_THETA
 
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     raw = con.sql(
         "SELECT doc_id, text FROM documents WHERE text IS NOT NULL"
     ).fetchall()
@@ -538,7 +511,7 @@ def test_suffix_blocking_matches_independent_python(sf_dir):
     from spellchecker_wasm_spark.queries import (
         _LK_SQL_PAGES, _SUFFIX_BLOCK_CAP, _SUFFIX_MIN_LEN)
 
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     pages = con.sql("WITH " + _LK_SQL_PAGES
                     + " SELECT page_id, title FROM pages").fetchall()
     blocks = {}
@@ -593,7 +566,7 @@ def test_affine_gap_matches_independent_python(sf_dir):
                 best = max(best, M[i][j])
         return best
 
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     terms = dict(con.sql(
         "WITH RECURSIVE" + _LK_SQL_FIXTURE
         + " SELECT page_id, title FROM pages").fetchall())
@@ -618,7 +591,7 @@ def test_prefix_jaccard_complete_vs_brute_force(sf_dir):
     hot-bucket pairs by design; this one must not drop anything).  Also
     witnesses the pruning: prefix candidates are a small fraction of
     the pairs sharing any shingle."""
-    con = _con(sf_dir)
+    con = duckdb_session(sf_dir)
     docs = con.sql(
         "SELECT doc_id, text FROM documents WHERE text IS NOT NULL"
     ).fetchall()

@@ -5,20 +5,16 @@ multisets exactly (floats included — outputs are designed deterministic)."""
 import math
 import os
 
-import duckdb
 import pytest
 
-from spellchecker_wasm_spark.queries import CATALOG, TABLES
+from spellchecker_wasm_spark.queries import CATALOG, duckdb_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="module")
 def ddb():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    return con
+    return duckdb_session(SF_DIR)
 
 
 def _norm(v):

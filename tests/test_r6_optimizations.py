@@ -15,6 +15,8 @@ Covered here:
     by one numpy all-pairs matmul inside a single-partition mapInPandas
   * queries._bucket_pairs — the capped in-bucket pair emit the
     bucket-collect dedup rows share
+  * queries._SQL_EMB — the oracles' embedding quantizer rounds as
+    operators/similarity._quantize does
   * queries._lk_blocks — the linkage fixture's blocks come from
     pipeline.linkage.blocks_stage (tokenized prefixes, hot-key cap)
     instead of the whole-title prefix explode the oracle rows were
@@ -115,6 +117,27 @@ def test_dedup_embedding_matches_hof_formulation(spark):
             .select("vec_a", "vec_b"))
     assert _rows(got) == _rows(want)
     assert len(_rows(got)) > 0  # non-vacuous at this SF
+
+
+def test_sql_emb_quantizes_like_spark(spark):
+    """The oracles' quantizer (queries._SQL_EMB) gives the same
+    milli-unit as the Spark one (similarity._quantize) on an element
+    whose single-precision product rounds the other way: FLOAT 0.3195
+    (sf0.1 vec_id 1879, dim 17) is 319.4999993 in double, 319.5 in
+    float."""
+    import duckdb
+
+    from spellchecker_wasm_spark.operators.similarity import _quantize
+    from spellchecker_wasm_spark.queries import _SQL_EMB
+
+    con = duckdb.connect()
+    con.sql("CREATE VIEW embeddings AS SELECT CAST(1879 AS BIGINT) "
+            "AS vec_id, [CAST(0.3195 AS FLOAT)] AS embedding")
+    want = con.sql(f"WITH {_SQL_EMB} SELECT v FROM e").fetchone()[0]
+    got = (spark.createDataFrame([(1879, [0.3195])],
+                                 "vec_id long, embedding array<float>")
+           .select(_quantize("embedding").alias("v")).first()["v"])
+    assert want == got == [319]
 
 
 def _dedup_embedding_over(spark, tmp_path, ids):

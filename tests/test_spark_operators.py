@@ -183,6 +183,38 @@ def test_connected_components_long_chain(spark, max_iter):
     assert len(got) == 41
 
 
+@pytest.mark.parametrize("edges, nodes", [
+    ([], [1, 2, 3]),                           # no edges: all singletons
+    ([(3, 2), (2, 1)], [1, 2, 3, 7]),          # chain 3-2-1, isolated 7
+    ([(1, 2), (2, 1), (1, 2), (5, 4), (4, 5)],
+     [1, 2, 3, 4, 5]),                         # reversed and duplicates
+])
+def test_sql_cc_matches_connected_components(spark, edges, nodes):
+    """The DuckDB connected-components replay every clustering oracle
+    shares (queries._sql_cc) and the Spark operator give the same
+    (node, component) rows, one per node, on hand-built graphs —
+    including the edge-free one no catalog fixture reaches."""
+    import duckdb
+
+    from spellchecker_wasm_spark.queries import _sql_cc
+
+    con = duckdb.connect()
+    con.sql("CREATE TABLE edges (id_a BIGINT, id_b BIGINT)")
+    con.sql("CREATE TABLE nodes (node BIGINT)")
+    if edges:
+        con.executemany("INSERT INTO edges VALUES (?, ?)", edges)
+    con.executemany("INSERT INTO nodes VALUES (?)", [(n,) for n in nodes])
+    want = sorted(con.sql(
+        "WITH RECURSIVE " + _sql_cc("SELECT id_a, id_b FROM edges",
+                                    "SELECT node FROM nodes")
+        + " SELECT node, component FROM asg").fetchall())
+    edf = spark.createDataFrame(edges, "id_a long, id_b long")
+    ndf = spark.createDataFrame([(n,) for n in nodes], "node long")
+    got = sorted(tuple(r)
+                 for r in connected_components(edf, nodes=ndf).collect())
+    assert got == want == sorted(_brute_components(edges, nodes).items())
+
+
 def test_connected_components_empty_and_null_edges(spark):
     # no edges: nothing without ``nodes``, singletons with them; an edge
     # with a NULL endpoint joins nothing
