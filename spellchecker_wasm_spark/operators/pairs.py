@@ -10,8 +10,14 @@ Shuffle notes: the join shuffles both sides by block_key once; AQE splits
 skewed partitions.  The cheap length-window predicate
 (sym_spell.rs:306-308,387-394) is applied as a join condition so Catalyst
 evaluates it before the expensive scoring stage, and pair dedup
-(`dropDuplicates`) mirrors the reference's ``suggestions_considered`` set
+(``dedup_pairs``) mirrors the reference's ``suggestions_considered`` set
 (sym_spell.rs:327-331,441-443) — dedup-before-DP.
+
+The linkage pipeline does not self-join page-level keys: it self-joins
+the keys of the token-prefix VOCABULARY and expands the distinct prefix
+pairs to pages (pipeline/linkage.pairs_stage), then runs the same
+``dedup_pairs`` tail.  ``candidate_pairs`` is the flat form the
+vocabulary catalog rows run and the two-level plan is tested against.
 """
 
 from __future__ import annotations
@@ -86,10 +92,10 @@ def candidate_pairs(blocks: DataFrame, id_col: str = "term",
     partition; partition counts scale with data, so the build stays
     executor-memory-sized at any cluster size).  Measured on the
     600k-page protocol input at 8 pinned cores: 59.6s → 36.9s for the
-    block+pair stage.  run_linkage persists ``blocks`` without
-    partitioning them by block_key (under the session's
-    canChangeCachedPlanOutputPartitioning a cached frame reports no
-    partitioning), so the join shuffles both sides.  The term path takes
+    block+pair stage.  A persisted ``blocks`` frame reports no
+    partitioning under the session's
+    canChangeCachedPlanOutputPartitioning, so the join shuffles both
+    sides.  The term path takes
     no hint: its inputs are vocabulary-sized, where auto-broadcast beats
     a forced SHJ.
     """
@@ -121,9 +127,27 @@ def candidate_pairs(blocks: DataFrame, id_col: str = "term",
     emitted = (a.join(b, cond)
                .select(F.col("a.id").alias("id_a"),
                        F.col("b.id").alias("id_b")))
+    if prefilter_band is not None and dim is None:
+        raise ValueError("prefilter_band requires a caller-supplied dim")
+    if dim is None:
+        dim = (blocks.select(F.col(id_col).alias("id"),
+                             F.col(term_col).alias("term"))
+               .dropDuplicates(["id"]))
+    return dedup_pairs(emitted, dim, prefilter_band, attach_terms)
+
+
+def dedup_pairs(emitted: DataFrame, dim: DataFrame,
+                prefilter_band: int | None = None,
+                attach_terms: bool = True) -> DataFrame:
+    """The pair-emit tail every id-pair generator shares: emitted
+    (id_a, id_b) rows, id_a < id_b with repeats → [banded-Levenshtein
+    prefilter] → distinct → [term payloads].
+
+    ``dim``: id-unique (id, term) table the payloads (and the
+    prefilter's terms) come from.  ``prefilter_band``: see
+    candidate_pairs; the prefilter runs on the emitted rows, before the
+    distinct, through broadcast probes of ``dim``."""
     if prefilter_band is not None:
-        if dim is None:
-            raise ValueError("prefilter_band requires a caller-supplied dim")
         wide = (emitted
                 .join(F.broadcast(dim.select(F.col("id").alias("id_a"),
                                              F.col("term").alias("term_a"))),
@@ -138,10 +162,6 @@ def candidate_pairs(blocks: DataFrame, id_col: str = "term",
     ids = emitted.distinct()
     if not attach_terms:
         return ids
-    if dim is None:
-        dim = (blocks.select(F.col(id_col).alias("id"),
-                             F.col(term_col).alias("term"))
-               .dropDuplicates(["id"]))
     return attach_pair_terms(ids, dim)
 
 

@@ -1,10 +1,15 @@
 """End-to-end record-linkage pipeline (the north star):
 
 pages(url, warc_ts, html, text, lang)
-  → extract text (byte-identical invariant vs the stored column)
+  → extract text (the JVM extraction expression checked against the
+    stored column)
   → title tokens (reference-quirk tokenizer, lowered, cleaned)
-  → SymSpell delete-key blocking with hot-key capping        [blocks_stage]
-  → candidate pairs (url_a < url_b, length window, dedup)    [pairs_stage]
+  → two-level SymSpell delete-key blocking                    [blocks_stage]
+      toks(page_id, tl, prefix): one row per distinct (page, prefix)
+      vk(prefix, block_key): the delete keys of the distinct prefixes,
+      hot keys capped by page-weighted posting size
+  → candidate pairs: vk self-join → distinct prefix pairs     [pairs_stage]
+    → expansion through toks (length window) → distinct page pairs
   → vectorized banded Damerau-OSA scoring ≤ max_edit_distance [scoring_stage]
   → connected components: union-find finisher inside the plan [clusters]
     (optional large-star/small-star rounds ahead, max_cc_iter=0 default)
@@ -12,45 +17,52 @@ pages(url, warc_ts, html, text, lang)
 ``run_linkage`` composes the three stage functions; the query catalog's
 linkage rows run them too, so its oracles check this plan.
 
+Two levels, as SymSpell's own ``deletes`` index: the delete keys depend
+only on the token-prefix vocabulary, so they are exploded once per
+distinct prefix, not once per (page, prefix); the key self-join pairs
+prefixes, and only the distinct prefix pairs expand to pages.  A page
+pair is a candidate iff some prefix pair of theirs shares a kept key —
+exactly the pairs of the page-level key self-join over
+``pages_to_block_hashes`` (tests/test_pipeline_linkage.py), which emits
+each page pair once per SHARED KEY (8.8M emits for 190k distinct pairs
+on 18k synthesized pages, against 476k vocabulary-join rows here).
+
 Scale design notes (10^12 documents):
 * every stage is a pure DataFrame plan: one vocabulary-level shuffle for
-  hot-key weights, one per side of the pair join (AQE skew-split; the
-  persisted capped frame is not repartitioned by key), and a
-  single-partition exchange into the union-find finisher (each optional
-  star round adds its own joins);
+  the prefix page counts, one for hot-key weights, the vocabulary key
+  self-join, the expansion joins (broadcastable toks sides while they
+  fit), the pair dedup, and a single-partition exchange into the
+  union-find finisher (each optional star round adds its own joins);
+* the vocabulary grows sublinearly in the corpus (Heaps' law), so the
+  key explode and the key self-join stay vocabulary-sized; the
+  corpus-scale work is the distinct (page, prefix) scan and the
+  expansion, whose output is ~the final candidate set;
 * hot blocking keys (shared vocab words) are capped with logged accounting —
   recall is preserved because duplicate pages always share their
   discriminating rare-token blocks, while hot keys only produce pairs that
-  either co-occur in rare blocks or score above threshold anyway;
-* the only persisted state is (id, title) — ~60 bytes/page — and the
-  capped key explode; blocking keys are 64-bit hashes, pair rows are bare
-  long ids with an int length, and title payloads re-attach post-dedup
-  from the slim dimension.
+  either co-occur in rare blocks or score above threshold anyway; a
+  prefix held by more than max_block_size pages has every key dropped,
+  which bounds the expansion;
+* the persisted state is (id, title) — ~60 bytes/page — the distinct
+  (page, prefix) rows and the vocabulary keys; blocking keys are 64-bit
+  hashes, pair rows are bare long ids, and title payloads re-attach
+  post-dedup from the slim dimension.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..functions.delete_expr import delete_keys_of_prefix
 from ..functions.delete_hash_expr import delete_key_hash_explode
-from ..functions.text_expr import title_expr, title_tokens_array
+from ..functions.text_expr import (extract_text_expr, title_expr,
+                                   title_tokens_array)
 from ..operators.clustering import connected_components
-from ..operators.pairs import candidate_pairs
+from ..operators.pairs import dedup_pairs
 from ..operators.scoring import score_pairs
 from .lineage import StageWriter
-from .webpages import extract_text_from_html
-
-
-@pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """Arrow-batched application of the fixed extraction rule."""
-    return html.map(lambda h: extract_text_from_html(h) if h is not None else None)
 
 
 def title_prefixes_array(title, config: "LinkageConfig"):
@@ -71,9 +83,11 @@ def title_block_keys(title, config: "LinkageConfig"):
 
 def pages_to_block_hashes(pdim: DataFrame,
                           config: "LinkageConfig") -> DataFrame:
-    """pdim(id, title) → (page_id, tl, block_key:long) — the blocking
-    explode emitting 64-bit key HASHES directly (functions/
-    delete_hash_expr), never materializing key strings.
+    """pdim(id, title) → (page_id, tl, block_key:long) — the flat,
+    page-level blocking explode emitting 64-bit key HASHES directly
+    (functions/delete_hash_expr), never materializing key strings.
+    run_linkage explodes the vocabulary instead (blocks_stage); this is
+    the reference its two-level plan is tested against.
 
     Physical shape: Generate(explode(prefixes)) → Project(per-position
     codepoints) → Generate(explode(mask-hash array)) — every expression
@@ -102,12 +116,35 @@ def pages_to_block_hashes(pdim: DataFrame,
         keep_cols=["page_id", "tl"])
 
 
+def vocab_block_keys(toks: DataFrame,
+                     config: "LinkageConfig") -> DataFrame:
+    """toks(…, prefix), one row per distinct (page, prefix) → (prefix,
+    n_pages, block_key): the delete-key explode of the VOCABULARY — each
+    distinct prefix once, carrying the number of pages that hold it.
+
+    The prefix counts are small enough that AQE coalesces them into one
+    partition, so the ~29× explode runs in one task.  A round-robin
+    repartition to the shuffle width spreads it, but cost 9–30% more
+    process CPU per linkage run in three paired runs on 18k synthesized
+    pages (4 cores), so there is none."""
+    pc = toks.groupBy("prefix").agg(F.count(F.lit(1)).alias("n_pages"))
+    return delete_key_hash_explode(
+        pc, "prefix", config.max_edit_distance, config.prefix_length,
+        keep_cols=["prefix", "n_pages"])
+
+
+def _hot_keys(vkeys: DataFrame, config: "LinkageConfig") -> DataFrame:
+    return (vkeys.groupBy("block_key")
+            .agg(F.sum("n_pages").alias("weight"))
+            .where(F.col("weight") > config.max_block_size)
+            .select("block_key", "weight"))
+
+
 def hot_keys_vocab(toks: DataFrame, config: "LinkageConfig") -> DataFrame:
     """Hot blocking keys computed at the VOCABULARY level: page-weighted
-    key weight = Σ over posting prefixes of that prefix's page count, at
-    ~1/3 the rows of the page-level explode (distinct prefixes × fan-out
-    instead of pages × fan-out) and without materializing or re-scanning
-    that explode at all.  Returns (block_key:long) hot-key rows.
+    key weight = Σ over posting prefixes of that prefix's page count,
+    over the vocabulary explode (distinct prefixes × fan-out instead of
+    pages × fan-out).  Returns (block_key:long, weight) hot-key rows.
 
     The weight equals the posting size cap_hot_blocks counts on the
     pages_to_block_hashes explode, so both drop the same keys
@@ -115,14 +152,7 @@ def hot_keys_vocab(toks: DataFrame, config: "LinkageConfig") -> DataFrame:
 
     ``toks``: (…, prefix) one row per distinct (page, prefix).
     """
-    pc = toks.groupBy("prefix").agg(F.count(F.lit(1)).alias("n_pages"))
-    vkeys = delete_key_hash_explode(
-        pc, "prefix", config.max_edit_distance, config.prefix_length,
-        keep_cols=["n_pages"])
-    return (vkeys.groupBy("block_key")
-            .agg(F.sum("n_pages").alias("weight"))
-            .where(F.col("weight") > config.max_block_size)
-            .select("block_key", "weight"))
+    return _hot_keys(vocab_block_keys(toks, config), config)
 
 
 @dataclass
@@ -138,45 +168,83 @@ class LinkageConfig:
     # apply the lossless 2d-banded Levenshtein verification BEFORE pair
     # dedup (operators.pairs.candidate_pairs prefilter_band docstring):
     # shrinks the dedup exchange ~20× but pays the verification DP per
-    # EMITTED pair (per shared key) — measured a net 1.3× end-to-end LOSS
-    # on this workload, so off by default; see the docstring for when it
-    # wins.  Requires the (id, title) dim to be broadcastable.
+    # EMITTED pair — measured a net 1.3× end-to-end LOSS when the flat
+    # self-join emitted each pair once per shared key, so off by default;
+    # the two-level expansion emits each pair about once (not
+    # re-measured).  Requires the (id, title) dim to be broadcastable.
     prefilter_before_dedup: bool = False
 
 
 def verify_extraction_invariant(pages: DataFrame) -> int:
-    """Per-row invariant vs the reference extractor: re-derive text from
-    html and count byte-level mismatches (must be 0)."""
+    """Per-row invariant: re-derive text from html with the JVM
+    extraction expression blocking uses (functions/text_expr, pinned
+    byte-for-byte to pipeline.webpages.extract_text_from_html by
+    tests/test_text_expr.py) and count the rows whose stored ``text``
+    differs (must be 0)."""
     return (pages
-            .where(extract_text_udf(F.col("html")) != F.col("text"))
+            .where(extract_text_expr(F.col("html")) != F.col("text"))
             .count())
 
 
 def blocks_stage(pdim: DataFrame, config: LinkageConfig
-                 ) -> tuple[DataFrame, DataFrame]:
-    """pdim(id, title) → (capped (page_id, tl, block_key), dropped hot
-    keys (block_key, weight))."""
-    blocks = pages_to_block_hashes(pdim, config)
-    toks = pdim.select(F.explode(
-        title_prefixes_array(F.col("title"), config)).alias("prefix"))
-    dropped = hot_keys_vocab(toks, config)
-    # persist only the CAPPED explode (hot keys carry most of the raw
-    # volume), materialized once for both pair-join sides
-    capped = (blocks.join(F.broadcast(dropped.select("block_key")),
-                          "block_key", "left_anti")
-              .persist())
-    return capped, dropped
+                 ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """pdim(id, title) → (toks (page_id, tl, prefix), vk (prefix,
+    block_key), dropped hot keys (block_key, weight)).
+
+    ``toks`` holds one row per distinct (page, prefix) and is persisted
+    (the vocabulary count and both expansion sides read it).  The
+    vocabulary explode is persisted too, so the hot-key weights and
+    ``vk`` (its rows whose key survives the cap) share one explode.
+    ``page_block_keys(toks, vk)`` is the page-level capped explode."""
+    toks = pdim.select(
+        F.col("id").alias("page_id"), F.length("title").alias("tl"),
+        F.explode(title_prefixes_array(F.col("title"), config))
+        .alias("prefix")).persist()
+    vkeys = vocab_block_keys(toks, config).persist()
+    dropped = _hot_keys(vkeys, config)
+    vk = (vkeys.join(F.broadcast(dropped.select("block_key")),
+                     "block_key", "left_anti")
+          .select("prefix", "block_key"))
+    return toks, vk, dropped
 
 
-def pairs_stage(capped: DataFrame, pdim: DataFrame,
+def page_block_keys(toks: DataFrame, vk: DataFrame) -> DataFrame:
+    """(page_id, tl, block_key): every page's kept blocking keys — as a
+    multiset, the capped ``pages_to_block_hashes`` explode."""
+    return toks.join(vk, "prefix").select("page_id", "tl", "block_key")
+
+
+def pairs_stage(toks: DataFrame, vk: DataFrame, pdim: DataFrame,
                 config: LinkageConfig) -> DataFrame:
-    """(capped, pdim) → UNVERIFIED (id_a, id_b, term_a, term_b)."""
+    """(toks, vk, pdim) → UNVERIFIED (id_a, id_b, term_a, term_b).
+
+    The vk self-join pairs prefixes that share a kept key (each
+    unordered pair once, a prefix with itself included); the distinct
+    prefix pairs expand to the pages holding them on either side.  One
+    page may hold the smaller prefix and the other the larger, so the
+    ids are ordered after the expansion (least/greatest), then
+    operators.pairs.dedup_pairs runs the tail candidate_pairs runs."""
+    d = config.max_edit_distance
+    a, b = vk.alias("a"), vk.alias("b")
+    prefix_pairs = (a.join(b, (F.col("a.block_key") == F.col("b.block_key"))
+                           & (F.col("a.prefix") <= F.col("b.prefix")))
+                    .select(F.col("a.prefix").alias("pa"),
+                            F.col("b.prefix").alias("pb"))
+                    .distinct())
+
+    def side(s):
+        return toks.select(F.col("page_id").alias(f"id_{s}"),
+                           F.col("prefix").alias(f"p{s}"),
+                           F.col("tl").alias(f"tl_{s}"))
+
+    emitted = (prefix_pairs.join(side("a"), "pa").join(side("b"), "pb")
+               .where((F.col("id_a") != F.col("id_b"))
+                      & (F.abs(F.col("tl_a") - F.col("tl_b")) <= d))
+               .select(F.least("id_a", "id_b").alias("id_a"),
+                       F.greatest("id_a", "id_b").alias("id_b")))
     dim = pdim.select("id", F.col("title").alias("term"))
-    band = (2 * config.max_edit_distance
-            if config.prefilter_before_dedup else None)
-    return candidate_pairs(capped, id_col="page_id",
-                           max_len_diff=config.max_edit_distance, dim=dim,
-                           len_col="tl", prefilter_band=band)
+    band = 2 * d if config.prefilter_before_dedup else None
+    return dedup_pairs(emitted, dim, prefilter_band=band)
 
 
 def scoring_stage(pairs: DataFrame, config: LinkageConfig) -> DataFrame:
@@ -201,10 +269,9 @@ def run_linkage(spark: SparkSession, pages: DataFrame,
     # ~zero here and ~10^-2 expected count even at 10^12 urls (a collision
     # merges two pages — bounded F1 impact); swap for an id-table join if
     # exactness is required.
-    # blocks carry (id:long, key_hash:long, len:int) only — keys are
-    # 64-bit-hashed (a hash collision merely adds one spurious candidate
-    # that scoring rejects; recall is unaffected) and the title payload
-    # never rides the ~80×-fan-out explode or the pair-join shuffles; it
+    # blocking keys are 64-bit hashes (a hash collision merely adds one
+    # spurious candidate that scoring rejects; recall is unaffected) and
+    # the title payload never rides the key explode or the pair joins; it
     # is re-attached post-dedup from the pages-derived dimension
     # (pairs_stage).  ONE persisted slim dimension (id, title) — ~60
     # bytes/page — feeds every downstream pass: the html-regex extraction
@@ -213,13 +280,13 @@ def run_linkage(spark: SparkSession, pages: DataFrame,
             .select(F.xxhash64("url").alias("id"),
                     title_expr(F.col("html")).alias("title"))
             .persist())
-    capped, dropped = blocks_stage(pdim, config)
+    toks, vk, dropped = blocks_stage(pdim, config)
     if writer:
-        capped = writer.materialize("blocks", capped)
+        vk = writer.materialize("blocks", vk)
         writer._log({"stage": "blocks", "event": "hot_keys_dropped",
                      "dropped_keys": dropped.count()})
 
-    scored = scoring_stage(pairs_stage(capped, pdim, config), config)
+    scored = scoring_stage(pairs_stage(toks, vk, pdim, config), config)
     if writer:
         scored = writer.materialize("scored_pairs", scored)
 
@@ -232,7 +299,7 @@ def run_linkage(spark: SparkSession, pages: DataFrame,
                 .select(F.col("url").alias("node"), "component"))
     if writer:
         clusters = writer.materialize("clusters", clusters)
-    return {"blocks": capped, "dropped_keys": dropped,
+    return {"blocks": page_block_keys(toks, vk), "dropped_keys": dropped,
             "scored_pairs": scored, "clusters": clusters}
 
 

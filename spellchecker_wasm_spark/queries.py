@@ -29,8 +29,8 @@ from .operators.lookup import distributed_lookup
 from .operators.pairs import candidate_pairs
 from .operators.scoring import score_pairs
 from .operators.skew import fan_out
-from .pipeline.linkage import (LinkageConfig, blocks_stage, pairs_stage,
-                               scoring_stage)
+from .pipeline.linkage import (LinkageConfig, blocks_stage, page_block_keys,
+                               pairs_stage, scoring_stage)
 
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
@@ -4640,8 +4640,8 @@ FROM rk GROUP BY doc_id
 # DuckDB.
 #
 # Predicted pairs run the pipeline's own stages (pipeline/linkage.py:
-# blocks_stage's capped delete-key hash explode -> pairs_stage slim-id
-# self-join -> scoring_stage JVM-prefiltered Arrow OSA), exactly as
+# blocks_stage's two-level delete-key blocking -> pairs_stage prefix-pair
+# expansion -> scoring_stage JVM-prefiltered Arrow OSA), exactly as
 # run_linkage composes them; the oracle replays blocking with the
 # recursive delete CTE and verifies with damerau_levenshtein (== OSA
 # on every constructed pair: the variants contain no transpositions).
@@ -4699,18 +4699,19 @@ _LK_CONFIG = LinkageConfig()  # defaults are the fixture's d=2, P=7
 
 
 def _lk_blocks(spark, sf_dir):
-    """(pdim(id, title), capped): the fixture's pipeline blocks stage.
+    """(pdim(id, title), toks, vk): the fixture's pipeline blocks stage.
     Its titles are single tokens, so prefixes are substring(title, 1, 7)
-    and the cap drops no key (tests/test_r6_optimizations.py)."""
+    and the cap drops no key (tests/test_r6_optimizations.py);
+    page_block_keys(toks, vk) is the page-level key explode."""
     pdim = fan_out(_lk_pages(spark, sf_dir)
                    .select(F.col("page_id").alias("id"), "title"))
-    return pdim, blocks_stage(pdim, _LK_CONFIG)[0]
+    return (pdim, *blocks_stage(pdim, _LK_CONFIG)[:2])
 
 
 def _lk_cand(spark, sf_dir):
     """(pages, pairs): UNVERIFIED candidate pairs (id_a, id_b, term_a,
     term_b) from pipeline.linkage.pairs_stage over the labeled fixture's
-    capped blocks (_lk_blocks) — the pre-verification stage
+    two-level blocks (_lk_blocks) — the pre-verification stage
     fs_calibration audits.
 
     Blocking uses the pipeline's hash-direct key generator
@@ -4721,8 +4722,8 @@ def _lk_cand(spark, sf_dir):
     shares a TRUE string key (SymSpell completeness), so the verified
     pair set is identical — bijection property-tested in
     tests/test_delete_hash_expr.py."""
-    pdim, capped = _lk_blocks(spark, sf_dir)
-    pairs = pairs_stage(capped, pdim, _LK_CONFIG)
+    pdim, toks, vk = _lk_blocks(spark, sf_dir)
+    pairs = pairs_stage(toks, vk, pdim, _LK_CONFIG)
     pages = _lk_pages(spark, sf_dir)
     # PERSISTED shared subtree (guide §5): the candidate set feeds the
     # scorer (_lk_scored) and the pre-verification audits
@@ -5159,13 +5160,15 @@ def _q_blocking_stats(spark, sf_dir):
     the naive N² pair space (the blocking 'reduction ratio' complement).
     One row; the fraction is a single division of exact BIGINTs.
 
-    Scale shape: the persisted capped blocks the pair stage joins
-    (_lk_blocks; 64-bit key hashes, injective on each page's key set) +
-    one combine-reduced groupBy(block_key) + a scalar aggregate; nothing
+    Scale shape: the page-level key rows the two-level blocks stand for
+    (_lk_blocks' distinct (page, prefix) rows joined to the vocabulary
+    keys; 64-bit key hashes, injective on each page's key set) + one
+    combine-reduced groupBy(block_key) + a scalar aggregate; nothing
     quadratic is materialized — the pair volume is computed from posting
     sizes, not by emitting pairs."""
-    pages, capped = _lk_blocks(spark, sf_dir)
-    per_key = capped.groupBy("block_key").agg(F.count(F.lit(1)).alias("s"))
+    pages, toks, vk = _lk_blocks(spark, sf_dir)
+    per_key = (page_block_keys(toks, vk).groupBy("block_key")
+               .agg(F.count(F.lit(1)).alias("s")))
     stats = per_key.agg(
         F.count(F.lit(1)).alias("n_blocks"),
         F.sum("s").cast("bigint").alias("n_key_rows"),
@@ -6680,7 +6683,10 @@ def _q_meta_blocking(spark, sf_dir):
     before joining, and the cap drops no fixture key."""
     from .operators.pairs import weighted_candidate_pairs
 
-    w = weighted_candidate_pairs(_lk_blocks(spark, sf_dir)[1],
+    # the weight counts shared keys per page pair, which the prefix-pair
+    # expansion does not keep, so this row reads the page-level keys
+    _, toks, vk = _lk_blocks(spark, sf_dir)
+    w = weighted_candidate_pairs(page_block_keys(toks, vk),
                                  id_col="page_id", len_col="tl")
     return w.select(F.col("id_a").cast("bigint").alias("id_a"),
                     F.col("id_b").cast("bigint").alias("id_b"),

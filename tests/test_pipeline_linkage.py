@@ -127,21 +127,26 @@ def test_multibyte_entities_clustered(pages_and_labels):
             assert comp[row["url_a"]] == comp[row["url_b"]]
 
 
+def _pdim(pages):
+    """run_linkage's slim (id, title) dimension."""
+    from spellchecker_wasm_spark.functions.text_expr import title_expr
+    return (pages.where(F.col("html").isNotNull())
+            .select(F.xxhash64("url").alias("id"),
+                    title_expr(F.col("html")).alias("title")))
+
+
 @pytest.mark.parametrize("cap", [10**9, 20, 5])
 def test_hot_keys_vocab_matches_flat_cap(pages_and_labels, cap):
     """run_linkage's vocabulary-level hot-key cap (hot_keys_vocab) must
     drop EXACTLY the keys the flat posting-size cap (cap_hot_blocks over
     the page-level hash explode) drops — uncapped, and at caps where
     hundreds of keys are hot on this fixture."""
-    from spellchecker_wasm_spark.functions.text_expr import title_expr
     from spellchecker_wasm_spark.operators.blocking import cap_hot_blocks
     from spellchecker_wasm_spark.pipeline.linkage import (
         hot_keys_vocab, pages_to_block_hashes, title_prefixes_array)
     pages, _ = pages_and_labels
     cfg = LinkageConfig(max_block_size=cap)
-    pdim = (pages.where(F.col("html").isNotNull())
-            .select(F.xxhash64("url").alias("id"),
-                    title_expr(F.col("html")).alias("title")))
+    pdim = _pdim(pages)
 
     _, flat = cap_hot_blocks(pages_to_block_hashes(pdim, cfg), cap)
     toks = pdim.select(F.explode(
@@ -152,6 +157,69 @@ def test_hot_keys_vocab_matches_flat_cap(pages_and_labels, cap):
     vocab_keys = {r["block_key"] for r in vocab.select("block_key").collect()}
     assert vocab_keys == flat_keys
     assert (len(flat_keys) > 0) == (cap < 10**9)
+
+
+@pytest.mark.parametrize("cap", [10**9, 20, 5])
+def test_two_level_pairs_equal_flat(pages_and_labels, cap):
+    """The two-level blocks (distinct page prefixes + capped vocabulary
+    keys) must stand for EXACTLY the flat capped page-level explode —
+    toks ⋈ vk equals it as a multiset — and pairs_stage must produce
+    exactly the flat self-join's candidate set, uncapped and at caps
+    where hundreds of keys are hot."""
+    from spellchecker_wasm_spark.operators.blocking import cap_hot_blocks
+    from spellchecker_wasm_spark.operators.pairs import candidate_pairs
+    from spellchecker_wasm_spark.pipeline.linkage import (
+        blocks_stage, page_block_keys, pages_to_block_hashes, pairs_stage)
+    pages, _ = pages_and_labels
+    cfg = LinkageConfig(max_block_size=cap)
+    pdim = _pdim(pages)
+    dim = pdim.select("id", F.col("title").alias("term"))
+
+    capped, _ = cap_hot_blocks(pages_to_block_hashes(pdim, cfg), cap)
+    toks, vk, _ = blocks_stage(pdim, cfg)
+    cols = ["page_id", "tl", "block_key"]
+    two_keys = page_block_keys(toks, vk).select(*cols)
+    assert two_keys.exceptAll(capped.select(*cols)).isEmpty()
+    assert capped.select(*cols).exceptAll(two_keys).isEmpty()
+
+    def ids(df):
+        return {(r["id_a"], r["id_b"]) for r in
+                df.select("id_a", "id_b").collect()}
+
+    flat = ids(candidate_pairs(capped, id_col="page_id", dim=dim,
+                               len_col="tl",
+                               max_len_diff=cfg.max_edit_distance))
+    two = ids(pairs_stage(toks, vk, pdim, cfg))
+    assert two == flat
+    assert len(flat) > 0
+
+
+def test_extraction_invariant_runs_in_the_jvm(pages_and_labels,
+                                              monkeypatch):
+    """verify_extraction_invariant evaluates the JVM extraction
+    expression (no Python UDF node in its executed plan) and, on pages
+    with some corrupted ``text`` rows, counts exactly the rows the
+    Python reference extractor flags."""
+    from spellchecker_wasm_spark.pipeline.linkage import (
+        verify_extraction_invariant)
+    pages, _ = pages_and_labels
+    corrupted = pages.withColumn(
+        "text", F.when(F.xxhash64("url") % 7 == 0,
+                       F.concat(F.col("text"), F.lit("!")))
+        .otherwise(F.col("text")))
+    want = sum(extract_text_from_html(bytes(r["html"])) != r["text"]
+               for r in corrupted.select("html", "text").collect())
+    assert want > 0
+
+    counted = []
+    frame = type(pages)
+    count = frame.count
+    monkeypatch.setattr(frame, "count",
+                        lambda df: counted.append(df) or count(df))
+    assert verify_extraction_invariant(corrupted) == want
+    assert verify_extraction_invariant(pages) == 0
+    plan = counted[0]._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan, plan
 
 
 def test_block_hashes_reject_prefix_not_above_edit_distance(spark):

@@ -18,9 +18,9 @@ Covered here:
   * queries._SQL_EMB — the oracles' embedding quantizer rounds as
     operators/similarity._quantize does
   * queries._lk_blocks — the linkage fixture's blocks come from
-    pipeline.linkage.blocks_stage (tokenized prefixes, hot-key cap)
-    instead of the whole-title prefix explode the oracle rows were
-    first checked against
+    pipeline.linkage.blocks_stage (two-level: tokenized prefixes and
+    their capped vocabulary keys) instead of the whole-title prefix
+    explode the oracle rows were first checked against
 """
 
 import os
@@ -185,18 +185,20 @@ def test_bucket_pairs_cap_boundary(spark):
 
 
 def test_linkage_fixture_blocks_match_whole_title_explode(spark):
-    """The pipeline's blocks stage over the fixture pdim must emit
-    exactly the (page_id, tl, block_key) multiset of the whole-title
+    """The pipeline's two-level blocks over the fixture pdim must stand
+    for exactly the (page_id, tl, block_key) multiset of the whole-title
     formulation — substring(title, 1, 7) → delete_key_hash_explode — and
     its hot-key cap must drop nothing: the oracle replays blocking on
     whole titles with no cap."""
     import spellchecker_wasm_spark.queries as Q
     from spellchecker_wasm_spark.functions.delete_hash_expr import (
         delete_key_hash_explode)
-    from spellchecker_wasm_spark.pipeline.linkage import blocks_stage
+    from spellchecker_wasm_spark.pipeline.linkage import (
+        blocks_stage, page_block_keys)
 
-    pdim, _ = Q._lk_blocks(spark, SF_DIR)
-    capped, dropped = blocks_stage(pdim, Q._LK_CONFIG)
+    pdim, toks, vk = Q._lk_blocks(spark, SF_DIR)
+    capped = page_block_keys(toks, vk)
+    dropped = blocks_stage(pdim, Q._LK_CONFIG)[2]
     pref = Q._lk_pages(spark, SF_DIR).select(
         "page_id", F.length("title").alias("tl"),
         F.substring("title", 1, 7).alias("prefix"))
